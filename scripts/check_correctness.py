@@ -4,7 +4,10 @@
 Runs after `sbt "runMain graft.Verify <sfDir> <outDir>"`:
 for each <outDir>/<name>/ parquet dir, run the matching oracle SQL from
 <outDir>/oracle_sql.json in DuckDB over the same sf parquet tables and
-compare (column-name-sorted, row-sorted) values.
+compare (column-name-sorted, row-sorted) values. Every oracle_sql.json key
+must have an output directory and every errors.json entry is a failure, so a
+query cannot pass by being absent; the summary prints n_pass/n_expected,
+where n_expected is the number of oracle-backed queries.
 
 Usage: python3 scripts/check_correctness.py <sfDir> <outDir>
 """
@@ -50,10 +53,18 @@ def main(sf_dir, out_dir):
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    errors = json.load(open(os.path.join(out_dir, "errors.json")))
+    outputs = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    for name in sorted(outputs | set(oracle) | set(errors)):
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
+        if name in errors:
+            print(f"FAIL {name}: query error: {errors[name][:200]}")
+            n_fail += 1
+            continue
+        if name not in outputs:
+            print(f"FAIL {name}: no output directory")
+            n_fail += 1
             continue
         spark_rel = con.sql(f"SELECT * FROM '{d}/*.parquet'")
         s_cols, s_rows = table_canon(spark_rel.columns, spark_rel.fetchall())
@@ -82,7 +93,7 @@ def main(sf_dir, out_dir):
         else:
             n_pass += 1
             print(f"PASS {name} ({len(s_rows)} rows)")
-    print(f"== {n_pass} pass, {n_fail} fail ==")
+    print(f"== {n_pass}/{len(oracle)} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 
 

@@ -14,39 +14,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Hive-style ${...} variable substitution would swallow Rust-regex
-      // ${N} replacement groups inside string literals
-      .config("spark.sql.variable.substitute", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Join-strategy baseline (optimization guide §3.1/§9): allow the
-      // planner to pick shuffled-hash over sort-merge when its size
-      // conditions hold (no sort, same shuffle), let AQE rewrite SMJ→SHJ at
-      // runtime when every post-shuffle partition fits the local-map
-      // threshold, and raise the broadcast ceiling from 10 MB — dimension
-      // sides stay broadcastable at any SF since they grow sub-linearly vs
-      // facts, and a 64 MB relation is trivially held by executors sized
-      // for this workload. All three are env-overridable so a cluster
-      // profile can re-tune without a code change.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "64m"))
-      // fresh warehouse per run (bucketed managed tables; keeps the repo
-      // clean and avoids LOCATION_ALREADY_EXISTS after a crashed run)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_b_").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = GraftSession.create(s"local[$cpus]", cpus)
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -127,11 +97,11 @@ object Bench {
 
     // A query that throws is recorded with an explicit error marker — never
     // as a fast success (its elapsed time is still reported for context).
-    // Each query is timed over two passes and the MIN is reported: a single
+    // Each query is timed over three passes and the MIN is reported: a single
     // pass is vulnerable to transient sandbox load (a co-tenant stealing
-    // cores inflated one round's artifact 2×), and min-of-2 recovers the
+    // cores inflated one round's artifact 2×), and min-of-3 recovers the
     // un-contended cost without hiding real plan regressions.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
+    val passes = 3
     // all pass durations per query, kept for the detail file: pass1 >> pass3
     // everywhere = warmth; random spikes across passes = contention
     val passTimes = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
@@ -151,113 +121,29 @@ object Bench {
       if (ok.nonEmpty) (name, ok.map(_._1).min, None, nFail)
       else (name, timed.map(_._1).min, timed.head._2, nFail)
     }
-    // --- auto-remeasure -----------------------------------------------------
-    // Sandbox co-tenant load has repeatedly inflated single rounds' artifacts
-    // 2-4×, costing an adjudication re-measure each time. Guard: any query
-    // whose min-of-passes exceeds 2× its trailing-round median (from the
-    // committed BENCH_r*.json history in cwd) is re-run with fresh passes and
-    // the final value is min(original, remeasure); affected queries are
-    // marked in a "remeasured" object so the reader can see both numbers.
-    def historyMedians(): Map[String, Double] = try {
-      import com.fasterxml.jackson.databind.JsonNode
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      // same-scale history only: a sf0.01 local run must not set the bar for
-      // the driver's sf0.1 round (and vice versa)
-      def sfMatches(node: JsonNode): Boolean = {
-        val s = node.get("sf")
-        s != null && (if (s.isTextual) s.asText == sfDir
-                      else sfDir.endsWith("sf" + s.asText))
-      }
-      def queriesOf(node: JsonNode): Seq[(String, Double)] = {
-        val qs = node.get("queries")
-        if (qs == null || !sfMatches(node)) Nil
-        else {
-          val it = qs.fields()
-          val buf = scala.collection.mutable.Buffer.empty[(String, Double)]
-          while (it.hasNext) { val e = it.next(); buf += ((e.getKey, e.getValue.asDouble())) }
-          buf.toSeq
-        }
-      }
-      val dir = new java.io.File(".")
-      // BENCH.json = last round's full map; BENCH_r*.json = driver wrappers
-      // (query map lives under "parsed" when the driver could parse the line)
-      val hist = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName == "BENCH.json" || f.getName.matches("BENCH_r\\d+\\.json"))
-        .sortBy(_.getName)
-        .flatMap { f =>
-          try {
-            val root = om.readTree(f)
-            queriesOf(root) ++ Option(root.get("parsed")).map(queriesOf).getOrElse(Nil)
-          } catch { case _: Throwable => Nil }
-        }
-      hist.groupBy(_._1).map { case (k, vs) =>
-        val sorted = vs.map(_._2).sorted
-        (k, sorted(sorted.length / 2))
-      }
-    } catch { case _: Throwable => Map.empty }
-
-    val medians = historyMedians()
-    // Known-bouncy streaming/micro-batch queries (±50% across rounds with no
-    // code change, r8-r11 history) use a tighter 1.2× trip wire so ordinary
-    // startup noise gets re-measured away instead of reading as a regression.
-    // letrec_reachability/tpch_q22 joined r13: +58%/+45% in r12 with their
-    // source files untouched — JIT-warmth noise, same class as the others.
-    // incremental_join_delta3 joined r14: cross-round history 1.33-4.48 s with
-    // its source untouched — the widest bouncer on the board.
-    val bouncy = Set("sink_envelope_roundtrip", "media_image_decode",
-      "media_audio_decode", "letrec_reachability", "tpch_q22",
-      "incremental_join_delta3")
-    val suspects = results.filter { case (name, t, err, _) =>
-      val factor = if (bouncy.contains(name)) 1.2 else 2.0
-      val slack = if (bouncy.contains(name)) 0.2 else 0.5
-      err.isEmpty && medians.get(name).exists(m => t > factor * m && t - m > slack)
-    }.map(_._1).toSet
-    val remeasured = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val finalResults =
-      if (suspects.isEmpty) results
-      else results.map { case r @ (name, t, err, nf) =>
-        if (!suspects.contains(name)) r
-        else {
-          val redo = (1 to passes).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try { runOnce(SparkEntry.queries(name)); Some((System.nanoTime() - t0) / 1e9) }
-            catch { case _: Throwable => None }
-          }
-          val best = (t +: redo).min
-          remeasured(name) = (t, best)
-          (name, best, err, nf)
-        }
-      }
-
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    def jstr(s: String): String = om.writeValueAsString(s)
     def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def qmap(rs: Seq[(String, Double, Option[String], Int)]): String =
       rs.map { case (k, v, _, _) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    val errs = finalResults.collect { case (k, _, Some(e), _) => "\"" + k + "\":" + jstr(e) }
+    val errs = results.collect { case (k, _, Some(e), _) => "\"" + k + "\":" + jstr(e) }
       .mkString("{", ",", "}")
     // A query that failed some-but-not-all passes is flaky, not clean: surface
     // the pass-level failure count instead of letting min-of-passes hide it.
-    val flaky = finalResults.collect { case (k, _, None, n) if n > 0 => "\"" + k + "\":" + n }
+    val flaky = results.collect { case (k, _, None, n) if n > 0 => "\"" + k + "\":" + n }
       .mkString("{", ",", "}")
-    val remeasuredJson = remeasured
-      .map { case (k, (orig, fin)) => "\"" + k + "\":{\"orig\":" + r3(orig) + ",\"final\":" + r3(fin) + "}" }
-      .mkString("{", ",", "}")
-    val total = finalResults.filter(_._3.isEmpty).map(_._2).sum
+    val total = results.filter(_._3.isEmpty).map(_._2).sum
     // System load average over the bench window: lets a reader distinguish a
     // plan regression from sandbox contention (co-tenant load inflated the
     // r4/r6 artifacts; the same queries ran 4-7x faster on an idle box).
     val load = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
     def jsonFor(qs: Seq[(String, Double, Option[String], Int)], detail: String): String =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_ok":${finalResults.count(_._3.isEmpty)},"n_err":${finalResults.count(_._3.nonEmpty)},"loadavg":${r3(load)},"loadavg_start":${r3(loadStart)},"calib_cpu":${r3(calibCpu)},"calib_spark":${r3(calibSpark)},"errors":$errs,"flaky":$flaky,"remeasured":$remeasuredJson,"queries":${qmap(qs)},"sf":"$sfDir"$detail}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_ok":${results.count(_._3.isEmpty)},"n_err":${results.count(_._3.nonEmpty)},"loadavg":${r3(load)},"loadavg_start":${r3(loadStart)},"calib_cpu":${r3(calibCpu)},"calib_spark":${r3(calibSpark)},"errors":$errs,"flaky":$flaky,"queries":${qmap(qs)},"sf":${jstr(sfDir)}$detail}"""
     val passesJson = passTimes
       .map { case (k, ts) => "\"" + k + "\":[" + ts.map(r3).mkString(",") + "]" }
       .mkString("{", ",", "}")
-    val full = jsonFor(finalResults, s""","passes":$passesJson""")
+    val full = jsonFor(results, s""","passes":$passesJson""")
     val out = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")).toAbsolutePath
     java.nio.file.Files.writeString(out, full)
@@ -265,13 +151,13 @@ object Bench {
     // map (~3.5 KB) overflows that, so print a compact line holding the
     // slowest queries (the ones worth grading) + the detail path. The line
     // must be the LAST thing this process writes, must be well under the tail
-    // window even after the remeasured/errors objects grow, and (build.sbt
+    // window even after the errors object grows, and (build.sbt
     // run/outputStrategy) must reach stdout without sbt's "[info] " prefix —
     // all three failed at some point in rounds 1-19 and the driver never
     // parsed the line (every BENCH_r*.json: parsed=null).
     val line =
       if (full.length <= 1500) full
-      else jsonFor(finalResults.sortBy(-_._2).take(15).sortBy(_._1), s""","detail":"$out"""")
+      else jsonFor(results.sortBy(-_._2).take(15).sortBy(_._1), s""","detail":${jstr(out.toString)}""")
     println(s"BENCH_JSON_PATH=$out")
     println(line)
     System.out.flush()

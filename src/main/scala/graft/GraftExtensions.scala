@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** The one extensions bundle every entry point installs (GraftSession,
-  * Verify, Bench): custom optimizer rules + the SQL DDL surface. Usable
+/** The one extensions bundle every entry point installs (through
+  * GraftSession): custom optimizer rules + the SQL DDL surface. Usable
   * directly as `spark.sql.extensions=graft.GraftExtensions` on a real
   * cluster, or via `.withExtensions(GraftExtensions)` locally.
   */

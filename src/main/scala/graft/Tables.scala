@@ -20,26 +20,30 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Parquet schema per table file version, inferred once per JVM. Without
+    * a user-supplied schema EVERY `spark.read.parquet` call launches a footer
+    * schema-inference job (~30-80 ms of job+driver latency) — per table,
+    * per query, per bench pass. The schema is catalog metadata (exactly what
+    * a metastore would hold), so infer it once and pass it explicitly
+    * afterwards. The key carries the path's modification time and length, so
+    * a table rewritten in place (possibly with another schema) is inferred
+    * afresh. Data is still read from parquet on every query — this caches
+    * no rows, no results. */
+  private val schemaCache =
+    scala.collection.concurrent.TrieMap.empty[(String, Long, Long), org.apache.spark.sql.types.StructType]
+
   /** Spark has no nanosecond timestamp type; the `events` table stores
     * TIMESTAMP(NANOS) which Spark refuses to read natively. With
-    * `spark.sql.legacy.parquet.nanosAsLong=true` (set by [[GraftSession]],
-    * Verify and Bench) the column arrives as epoch-nanos LongType and is
-    * losslessly converted here (the data is µs-aligned) — the analog of the
-    * reference widening its `MzTimestamp` to the engine timeline
-    * (`src/repr/src/timestamp.rs`). */
-  /** Parquet schema per table path, inferred once per JVM. Without a
-    * user-supplied schema EVERY `spark.read.parquet` call launches a footer
-    * schema-inference job (~30-80 ms of job+driver latency) — per table,
-    * per query, per bench pass. The schema of an immutable input is catalog
-    * metadata (exactly what a metastore would hold), so infer it once and
-    * pass it explicitly afterwards. Data is still read from parquet on
-    * every query — this caches no rows, no results. */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
-
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (set by [[GraftSession]])
+    * the column arrives as epoch-nanos LongType and is losslessly converted
+    * here (the data is µs-aligned) — the analog of the reference widening
+    * its `MzTimestamp` to the engine timeline (`src/repr/src/timestamp.rs`). */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val st = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(hp)
+    val schema = schemaCache.getOrElseUpdate((path, st.getModificationTime, st.getLen),
+      spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)
     df.schema.find(_.name == "ts") match {
       case Some(f) if f.dataType == org.apache.spark.sql.types.LongType =>
@@ -83,19 +87,22 @@ object Tables {
     names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }
 
-/** Session factory used by tests and local tooling. local[32] mirrors the
-  * driver environment; shuffle.partitions=32 matches core count (NOT the 200
-  * default — at real cluster scale this becomes a function of input size, and
-  * AQE coalescing handles the rest).
+/** The one session factory: specs, Verify, Bench, the benchmark harness and
+  * library users all get this configuration, so every entry point runs the
+  * same semantics and plans. Entry points differ only in `master` and
+  * `partitions` (spark.sql.shuffle.partitions): the specs and mvbench keep
+  * 32, Verify and Bench pass their core count. NOT the 200 default — at
+  * real cluster scale this becomes a function of input size, and AQE
+  * coalescing handles the rest.
   */
 object GraftSession {
-  def create(master: String = "local[32]"): SparkSession = {
+  def create(master: String, partitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
       // custom optimizer rules + the SQL DDL surface (GraftExtensions)
       .withExtensions(GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", partitions.toString)
       // fresh warehouse per JVM: managed-table locations from a crashed run
       // otherwise collide with a new session's empty in-memory catalog
       // (CREATE TABLE → LOCATION_ALREADY_EXISTS in the SLT corpus)
@@ -110,14 +117,17 @@ object GraftSession {
       .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same join-strategy baseline as Bench/Verify (optimization guide
-      // §3.1/§9) so tests and Explain see the plans the driver times
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "64m"))
+      // Join-strategy baseline (optimization guide §3.1/§9): allow the
+      // planner to pick shuffled-hash over sort-merge when its size
+      // conditions hold (no sort, same shuffle), let AQE rewrite SMJ→SHJ at
+      // runtime when every post-shuffle partition fits the local-map
+      // threshold, and raise the broadcast ceiling from 10 MB — dimension
+      // sides stay broadcastable at any SF since they grow sub-linearly vs
+      // facts, and a 64 MB relation is trivially held by executors sized
+      // for this workload.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,31 +9,9 @@ object Verify {
     // optional 3rd arg: run only queries whose name contains the filter
     val nameFilter: String => Boolean =
       if (args.length > 2) (n: String) => n.contains(args(2)) else (_: String) => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Hive-style ${...} variable substitution would swallow Rust-regex
-      // ${N} replacement groups inside string literals
-      .config("spark.sql.variable.substitute", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same join-strategy baseline as Bench.scala: the correctness gate
-      // must exercise the same physical plans the bench times
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "64m"))
-      // fresh warehouse per run: bucketed managed tables from a crashed run
-      // must not collide (LOCATION_ALREADY_EXISTS)
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_wh_v_").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = GraftSession.create(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(q => nameFilter(q._1)).foreach { case (name, fn) =>
@@ -53,23 +31,10 @@ object Verify {
         } catch { case _: Throwable => () }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      om.writeValueAsString(SparkEntry.oracleSql.asJava))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), om.writeValueAsString(errors.asJava))
     spark.stop()
   }
 }
