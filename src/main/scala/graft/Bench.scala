@@ -145,7 +145,8 @@ object Bench {
       .mkString("{", ",", "}")
     val full = jsonFor(results, s""","passes":$passesJson""")
     val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")).toAbsolutePath
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/BENCH.json")).toAbsolutePath
+    java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.writeString(out, full)
     // The driver keeps only the last ~2000 chars of stdout; the full per-query
     // map (~3.5 KB) overflows that, so print a compact line holding the

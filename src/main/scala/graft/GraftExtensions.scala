@@ -14,6 +14,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => graft.plans.ReduceElisionRule)
+    // filter/project constants become generated-class references, so texts
+    // that differ only in a constant share one compiled class
+    e.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions = graft.plans.ParamLiterals
+    })
     // list/array ::text renders the mz {..} form, not Spark's [..]
     e.injectResolutionRule(_ => graft.plans.ListTextCastRule)
     // pg: a FROM-position SRF's table alias names its output column

@@ -96,18 +96,40 @@ object Tables {
   * coalescing handles the rest.
   */
 object GraftSession {
+  /** Janino-compiled classes kept by Spark's JVM-wide codegen cache (static
+    * `spark.sql.codegen.cache.maxEntries`, default 100). Measured working
+    * sets on a 4-core host: the 12 sql_adhoc texts need 158 classes, so at
+    * 100 every pass evicted its own code before reusing it (≈150 compiles
+    * per pass); mv_serve levels off at ≈226 classes once constants are
+    * [[graft.plans.ParamLiteral]]s. An entry (source key, bytecode, class
+    * loader) holds ≈31 KB of heap, so a full cache costs ≈31 MB at worst;
+    * the LRU still bounds it for workloads with more shapes than this. */
+  private val CodegenCacheEntries = 1024
+
+  /** Executions, jobs and stages kept by the status stores. With the UI off
+    * nothing reads them (the engine never calls `statusStore` or
+    * `statusTracker`), yet at Spark's defaults (1000 each) they retain
+    * ≈0.2 MB of plan graph and SQL metrics per query. */
+  private val RetainedUiEntries = 20
+
   def create(master: String, partitions: Int = 32): SparkSession = {
+    // fresh warehouse per JVM: managed-table locations from a crashed run
+    // otherwise collide with a new session's empty in-memory catalog
+    // (CREATE TABLE → LOCATION_ALREADY_EXISTS in the SLT corpus); deleted
+    // when the JVM exits
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh_").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
       // custom optimizer rules + the SQL DDL surface (GraftExtensions)
       .withExtensions(GraftExtensions)
       .config("spark.sql.shuffle.partitions", partitions.toString)
-      // fresh warehouse per JVM: managed-table locations from a crashed run
-      // otherwise collide with a new session's empty in-memory catalog
-      // (CREATE TABLE → LOCATION_ALREADY_EXISTS in the SLT corpus)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.ui.retainedExecutions", RetainedUiEntries.toString)
+      .config("spark.ui.retainedJobs", RetainedUiEntries.toString)
+      .config("spark.ui.retainedStages", RetainedUiEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // Hive-style ${...} variable substitution would swallow Rust-regex
       // ${N} replacement groups inside string literals
