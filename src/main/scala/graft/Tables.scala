@@ -112,13 +112,23 @@ object GraftSession {
     * ≈0.2 MB of plan graph and SQL metrics per query. */
   private val RetainedUiEntries = 20
 
+  // directories made by `tempDir`; one hook deletes them when the JVM exits
+  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+  sys.addShutdownHook(exitDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything in it
+    * when the JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    exitDirs.add(d.toFile)
+    d
+  }
+
   def create(master: String, partitions: Int = 32): SparkSession = {
     // fresh warehouse per JVM: managed-table locations from a crashed run
     // otherwise collide with a new session's empty in-memory catalog
-    // (CREATE TABLE → LOCATION_ALREADY_EXISTS in the SLT corpus); deleted
-    // when the JVM exits
-    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh_").toFile
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
+    // (CREATE TABLE → LOCATION_ALREADY_EXISTS in the SLT corpus)
+    val warehouse = tempDir("graft_wh_")
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")

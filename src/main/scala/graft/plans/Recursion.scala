@@ -28,12 +28,12 @@ object Recursion {
     * newly-discovered delta to `step`, which computes the true fixpoint only
     * when `step` distributes over union (`step(A ∪ B) = step(A) ∪ step(B)`)
     * — e.g. `frontier ⋈ static_edges`. A non-linear step (frontier joined
-    * with itself, as in `path ⋈ path` transitive closure) must use
-    * [[fixpointNonLinear]], which feeds the full accumulated set each round.
+    * with itself, as in `path ⋈ path` transitive closure) needs naive
+    * iteration over the full accumulated set instead.
     *
     * Hitting `maxIter` without convergence (the reference's per-binding
     * `limits`, relation.rs:154-166, which also truncates silently by default)
-    * logs a warning; pass `requireConvergence = true` to raise instead.
+    * logs a warning and returns the truncated result.
     */
   /** `stepsPerCheck > 1` batches K lazily-composed step applications per
     * materialized round. Correct ONLY for linear steps — which [[fixpoint]]
@@ -44,7 +44,6 @@ object Recursion {
       base: DataFrame,
       step: DataFrame => DataFrame,
       maxIter: Int = 100,
-      requireConvergence: Boolean = false,
       stepsPerCheck: Int = 1): DataFrame = {
     require(stepsPerCheck >= 1)
     // LAZY checkpoints throughout: `delta.isEmpty` is the round's single
@@ -100,10 +99,8 @@ object Recursion {
       frontier = delta
       i += k
     }
-    val msg = s"Recursion.fixpoint: maxIter=$maxIter reached without convergence; " +
-      "result is truncated (the reference's LetRec `limits` semantics)"
-    if (requireConvergence) throw new IllegalStateException(msg)
-    else System.err.println(s"[graft] WARN $msg")
+    System.err.println(s"[graft] WARN Recursion.fixpoint: maxIter=$maxIter reached " +
+      "without convergence; result is truncated (the reference's LetRec `limits` semantics)")
     all
   }
 
@@ -129,7 +126,6 @@ object Recursion {
       step: Seq[DataFrame] => Seq[DataFrame],
       limits: Seq[Option[LetRecLimit]] = Nil,
       maxIter: Int = 100,
-      requireConvergence: Boolean = false,
       stepsPerCheck: Int = 1): Seq[DataFrame] = {
     require(bases.nonEmpty)
     require(stepsPerCheck >= 1)
@@ -185,42 +181,8 @@ object Recursion {
       }
       if (!changed) return cur
     }
-    val msg = s"Recursion.mutualFixpoint: maxIter=$maxIter reached without convergence; " +
-      "result is truncated (the reference's LetRec limits semantics)"
-    if (requireConvergence) throw new IllegalStateException(msg)
-    else System.err.println(s"[graft] WARN $msg")
+    System.err.println(s"[graft] WARN Recursion.mutualFixpoint: maxIter=$maxIter reached " +
+      "without convergence; result is truncated (the reference's LetRec limits semantics)")
     cur
-  }
-
-  /** Fixpoint for NON-linear steps: `step` receives the full accumulated
-    * collection every round (naive iteration — correct for any monotone
-    * step, at the cost of recomputing over the whole set each round). */
-  def fixpointNonLinear(
-      base: DataFrame,
-      step: DataFrame => DataFrame,
-      maxIter: Int = 100,
-      requireConvergence: Boolean = false): DataFrame = {
-    var all = base.distinct().localCheckpoint(false)
-    var i = 0
-    while (i < maxIter) {
-      // same single-aggregation delta as [[fixpoint]]: one exchange replaces
-      // except's anti-join + distinct, and the aggregate doubles as the new
-      // accumulated set
-      val cols = all.columns.toIndexedSeq.map(col)
-      val tagged = all.withColumn(TagCol, lit(0))
-        .union(step(all).withColumn(TagCol, lit(1)))
-        .groupBy(cols: _*)
-        .agg(min(col(TagCol)).as(TagCol))
-        .localCheckpoint(false) // materialized by the isEmpty below
-      val delta = tagged.filter(col(TagCol) === 1).drop(TagCol)
-      if (delta.isEmpty) return all
-      all = tagged.drop(TagCol)
-      i += 1
-    }
-    val msg = s"Recursion.fixpointNonLinear: maxIter=$maxIter reached without convergence; " +
-      "result is truncated"
-    if (requireConvergence) throw new IllegalStateException(msg)
-    else System.err.println(s"[graft] WARN $msg")
-    all
   }
 }

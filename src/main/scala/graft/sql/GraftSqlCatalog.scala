@@ -1,6 +1,5 @@
 package graft.sql
 
-import java.nio.file.Files
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -32,7 +31,7 @@ object GraftSqlCatalog {
     catalogs.getOrElseUpdate((spark.sharedState, dir), {
       new ViewCatalog(spark,
         if (dir.nonEmpty) dir
-        else Files.createTempDirectory("graft_views_").toString)
+        else graft.GraftSession.tempDir("graft_views_").toString)
     })
   }
 

@@ -89,17 +89,4 @@ object IncrementalJoin {
     }
     Changelog.unionAll(terms: _*)
   }
-
-  /** Join-plan chooser (reference `src/compute-types/src/plan/join.rs:46-51`
-    * + `src/transform/src/join_implementation.rs`): two inputs take the
-    * Linear plan (three delta terms, no shared-arrangement bookkeeping to
-    * amortize); three or more take the Delta chain, where per-input
-    * arrangement reuse pays for itself. */
-  def planDelta(
-      states: Seq[DataFrame],
-      deltas: Seq[DataFrame],
-      stepKeys: Seq[Seq[String]]): DataFrame =
-    if (states.size == 2)
-      delta(states(0), deltas(0), states(1), deltas(1), stepKeys.head)
-    else deltaN(states, deltas, stepKeys)
 }

@@ -14,7 +14,7 @@ import graft.streaming.{Changelog, IncrementalJoin}
   * `<name>__a`, `<name>__b` (consolidated input changelogs) and
   * `<name>__out` (the consolidated join changelog). Each [[applyBatch]]
   * evaluates ONLY delta-sized joins (δA⋈B ∪ A⋈δB ∪ δA⋈δB), merges, and
-  * commits all three in ONE atomic group-manifest flip
+  * commits all three in ONE atomic timeline entry
   * ([[ViewCatalog.commitGroup]]) — a reader can never observe the output at
   * batch N with an input at N-1, and a crash mid-commit leaves the previous
   * consistent triplet visible, exactly the persist-sink frontier guarantee.
@@ -70,14 +70,16 @@ final class MaintainedJoin(
     out.filter(col(Changelog.DiffCol) > 0)
   }
 
-  /** AS OF: the output at an earlier group commit, consistent with the
-    * inputs [[inputAsOf]] returns for the same seq. */
+  /** AS OF: the output at global timestamp `seq` (e.g. an earlier
+    * [[currentSeq]]), consistent with the inputs [[inputAsOf]] returns for
+    * the same timestamp. */
   def outputAsOf(seq: Long): DataFrame =
-    catalog.tableAsOf(name, outName, seq).filter(col(Changelog.DiffCol) > 0)
+    catalog.tableAtTime(outName, seq).filter(col(Changelog.DiffCol) > 0)
 
   def inputAsOf(seq: Long, side: String): DataFrame =
-    catalog.tableAsOf(name, if (side == "a") aName else bName, seq)
+    catalog.tableAtTime(if (side == "a") aName else bName, seq)
 
+  /** Global timestamp of the join's latest group commit. */
   def currentSeq: Option[Long] = catalog.currentGroupSeq(name)
 
   def outputVersion: Option[Long] = catalog.currentVersion(outName)

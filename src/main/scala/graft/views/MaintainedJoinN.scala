@@ -12,7 +12,7 @@ import graft.streaming.{Changelog, IncrementalJoin}
   * `src/transform/src/join_implementation.rs`).
   *
   * Collections `<name>__in0 … __inN-1` (consolidated input changelogs) and
-  * `<name>__out` live in ONE [[ViewCatalog]] commit group: every batch flips
+  * `<name>__out` live in ONE [[ViewCatalog]] commit group: every batch commits
   * all N+1 collections atomically with a recorded batchId (replay = no-op),
   * exactly like the binary [[MaintainedJoin]].
   *
@@ -91,10 +91,13 @@ final class MaintainedJoinN(
   def output: DataFrame =
     catalog.table(outName).filter(col(Changelog.DiffCol) > 0)
 
+  /** AS OF: the output at global timestamp `seq` (e.g. an earlier
+    * [[currentSeq]]), consistent with [[inputAsOf]] at the same timestamp. */
   def outputAsOf(seq: Long): DataFrame =
-    catalog.tableAsOf(name, outName, seq).filter(col(Changelog.DiffCol) > 0)
+    catalog.tableAtTime(outName, seq).filter(col(Changelog.DiffCol) > 0)
 
-  def inputAsOf(seq: Long, i: Int): DataFrame = catalog.tableAsOf(name, inName(i), seq)
+  def inputAsOf(seq: Long, i: Int): DataFrame = catalog.tableAtTime(inName(i), seq)
 
+  /** Global timestamp of the join's latest group commit. */
   def currentSeq: Option[Long] = catalog.currentGroupSeq(name)
 }

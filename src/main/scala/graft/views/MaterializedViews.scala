@@ -1,7 +1,6 @@
 package graft.views
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,12 +15,20 @@ import graft.streaming.Changelog
   * persist sink `src/compute/src/sink/materialized_view.rs`).
   *
   * Spark-first design:
-  *  - **Persist** = versioned parquet directories `<base>/<name>/v=<n>/`.
-  *    A refresh writes the NEW version completely, then atomically flips a
-  *    one-line `_CURRENT` pointer (temp file + atomic rename). Readers
-  *    resolve `_CURRENT` once per read, so every read sees one complete
-  *    version — the analog of the reference's "every read sees a consistent
-  *    frontier" guarantee. Old versions stay until `vacuum()`.
+  *  - **Persist** = versioned parquet directories `<base>/<name>/v=<n>/`
+  *    (and `delta=<n>/`, below). A commit writes its data dirs completely,
+  *    then renames ONE entry into the catalog's [[CommitTimeline]]
+  *    (`<base>/_timeline/t-<ts>`) naming the new version of every view it
+  *    advances; that rename is the only visibility point and the only file a
+  *    commit writes outside its data dirs. Readers resolve a version from
+  *    the timeline's in-memory index once per read, so every read sees one
+  *    complete version — the analog of the reference's "every read sees a
+  *    consistent frontier" guarantee. A crash before the rename leaves only
+  *    orphan data dirs, which the next commit of that version overwrites.
+  *    Old versions stay until `vacuum()`.
+  *  - **One catalog instance per `baseDir`.** The instance owns the write
+  *    clock ([[CommitTimeline]]); a catalog reopened over the directory
+  *    rebuilds every view's and group's state from the timeline alone.
   *  - **Full refresh** re-runs the defining query (the reference's recompute
   *    path for non-incrementalizable plans).
   *  - **Incremental refresh** applies a `(row..., diff)` changelog batch
@@ -35,22 +42,19 @@ import graft.streaming.Changelog
 final class ViewCatalog(spark: SparkSession, baseDir: String) {
 
   private val defs = TrieMap.empty[String, SparkSession => DataFrame]
-  private val groupOf = TrieMap.empty[String, String] // member view -> group
-  // one global clock + commit log per catalog: every commit (grouped or not)
-  // is stamped in ONE serialization order, so readers can pin a timestamp
-  // and see a consistent cut across INDEPENDENT views (the timestamp-oracle
-  // analog; groups alone only order their own members)
-  private val oracle = new TimestampOracle(baseDir)
+  // the one commit record: every commit (grouped or not) is one entry
+  // stamped in ONE serialization order, so readers can pin a timestamp and
+  // see a consistent cut across INDEPENDENT views
   private val timeline = new CommitTimeline(baseDir)
   // views exposed to plain SQL as temp views — re-registered on every commit
   // so `spark.sql("select * from v")` always reads the latest version, even
   // when the refresh came through the Scala API rather than SQL REFRESH
   private val exposed = TrieMap.empty[String, Unit]
   // post-commit hooks (continuous sinks): view -> hookId -> callback run with
-  // (delta changelog, new snapshot, committed version) after every pointer
-  // flip — the analog of a sink dataflow reading the view's persist
+  // (delta changelog, new snapshot, committed version) after every commit
+  // — the analog of a sink dataflow reading the view's persist
   // CHANGELOG, not re-diffing its snapshots. A hook that throws leaves the
-  // view commit durable (the flip already happened); consumers self-heal by
+  // view commit durable (the timeline entry is already in place); consumers self-heal by
   // resuming from their own recorded position via [[deltaAt]].
   private val commitHooks =
     TrieMap.empty[String, TrieMap[String, (DataFrame, DataFrame, Long) => Unit]]
@@ -71,23 +75,9 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   private def viewDir(name: String): Path = Paths.get(baseDir, name)
   private def deltaDir(name: String, v: Long): Path =
     viewDir(name).resolve(s"delta=$v")
-  private def currentFile(name: String): Path = viewDir(name).resolve("_CURRENT")
-  private def groupDir(group: String): Path = Paths.get(baseDir, s"$group.group")
 
-  private def readPointer(f: Path): Option[Long] =
-    if (Files.exists(f))
-      Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim.toLong)
-    else None
-
-  /** Latest committed version, if the view has ever been written. A view
-    * that belongs to a commit group resolves through the group's manifest
-    * (one atomic pointer for the whole group), not a per-view pointer. */
-  def currentVersion(name: String): Option[Long] =
-    groupOf.get(name) match {
-      case Some(g) =>
-        currentGroupSeq(g).flatMap(s => groupManifest(g, s)._2.get(name))
-      case None => readPointer(currentFile(name))
-    }
+  /** Latest committed version, if the view exists. */
+  def currentVersion(name: String): Option[Long] = timeline.version(name)
 
   // ---- atomic multi-collection commit groups -------------------------------
   //
@@ -96,84 +86,45 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   // timestamp oracle `src/timestamp-oracle/src/lib.rs:46`): readers never see
   // collection X at time t with collection Y at t-1, and a crashed write is
   // invisible. The Spark-side analog: all member version dirs are written
-  // completely, then ONE manifest file (naming every member's version + the
-  // last applied batchId) is flipped atomically. A reader resolves the
-  // manifest once, so it observes all-old or all-new, never a torn mix; a
-  // crash before the flip leaves only orphan version dirs the replay
-  // overwrites.
+  // completely, then ONE timeline entry names every member's new version and
+  // the group's last applied batchId. Readers resolve versions through the
+  // timeline index, so they observe all-old or all-new, never a torn mix; a
+  // crash before the rename leaves only orphan version dirs the replay
+  // overwrites. A group is only a name for its batchId and its last commit
+  // time — members are ordinary views, readable AS OF any timestamp.
 
-  /** Current manifest sequence number of a commit group. */
-  def currentGroupSeq(group: String): Option[Long] =
-    readPointer(groupDir(group).resolve("_CURRENT"))
-
-  /** (lastBatchId, member -> version) recorded at a given group sequence. */
-  def groupManifest(group: String, seq: Long): (Long, Map[String, Long]) = {
-    val bytes = Files.readAllBytes(groupDir(group).resolve(s"manifest-$seq"))
-    var batchId = -1L
-    val m = Map.newBuilder[String, Long]
-    new String(bytes, StandardCharsets.UTF_8).split("\n").map(_.trim)
-      .filter(_.nonEmpty).foreach { line =>
-        val Array(k, v) = line.split("=", 2)
-        if (k == "__batchId") batchId = v.toLong else m += k -> v.toLong
-      }
-    (batchId, m.result())
-  }
+  /** Timestamp of the group's latest commit (the group's sequence number:
+    * a global timestamp, so `tableAtTime(member, seq)` reads every member as
+    * of that commit). */
+  def currentGroupSeq(group: String): Option[Long] = timeline.group(group).map(_._1)
 
   /** Commit new versions of several views as ONE atomic, idempotent step.
     *
-    * `batchId >= 0` marks a replayable streaming batch: if the group's
-    * manifest already records `lastBatchId >= batchId`, the call is a no-op
+    * `batchId >= 0` marks a replayable streaming batch: if the group has
+    * already applied `batchId` or a later one, the call is a no-op
     * returning false — a restarted/replayed `foreachBatch` cannot
     * double-apply. `batchId = -1` always applies (non-batch maintenance).
     *
-    * Members not in `dfs` keep their current versions in the new manifest.
     * `deltas` optionally supplies a member's commit changelog (see
     * [[commitState]]); members without one get the generic diff fallback
-    * inside [[persistDelta]].
+    * inside [[writeVersion]].
     */
   def commitGroup(group: String, batchId: Long, dfs: Map[String, DataFrame],
       deltas: Map[String, DataFrame => DataFrame] = Map.empty): Boolean = {
-    val curSeq = currentGroupSeq(group)
-    val (curBatch, curVers) =
-      curSeq.map(s => groupManifest(group, s)).getOrElse((-1L, Map.empty[String, Long]))
+    val curBatch = lastBatchId(group)
     if (batchId >= 0 && curBatch >= batchId) return false // replayed batch
-    dfs.keys.foreach(n => groupOf.put(n, group))
-    val newVers = dfs.map { case (n, df) =>
-      val next = curVers.get(n).fold(0L)(_ + 1)
+    val vers = dfs.map { case (n, df) =>
+      val next = currentVersion(n).fold(0L)(_ + 1)
       writeVersion(n, df, next, deltas.get(n))
       n -> next
     }
-    val nextSeq = curSeq.fold(0L)(_ + 1)
-    val effBatch = if (batchId >= 0) batchId else curBatch
-    Files.createDirectories(groupDir(group))
-    val content = (s"__batchId=$effBatch" +:
-      (curVers ++ newVers).toSeq.sortBy(_._1).map { case (n, v) => s"$n=$v" })
-      .mkString("\n")
-    Files.write(groupDir(group).resolve(s"manifest-$nextSeq"),
-      content.getBytes(StandardCharsets.UTF_8))
-    val tmp = groupDir(group).resolve(s"_CURRENT.tmp.$nextSeq")
-    Files.write(tmp, nextSeq.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, groupDir(group).resolve("_CURRENT"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    timeline.record(oracle.writeTs(), newVers)
-    newVers.keys.foreach(syncTempView)
-    newVers.foreach { case (n, v) => runCommitHooks(n, v) }
+    commit(CommitTimeline.Entry(vers,
+      group = Some(group -> (if (batchId >= 0) batchId else curBatch))))
     true
   }
 
   /** Last replayable batchId the group committed (-1 if none). */
-  def lastBatchId(group: String): Long =
-    currentGroupSeq(group).map(s => groupManifest(group, s)._1).getOrElse(-1L)
-
-  /** AS OF read of a group member at a group sequence number. Every member
-    * read at the same seq is mutually consistent — they come from one
-    * manifest (the timestamp-oracle analog: seq is the group's logical
-    * timestamp). History persists until [[vacuum]]. */
-  def tableAsOf(group: String, name: String, seq: Long): DataFrame = {
-    val (_, vers) = groupManifest(group, seq)
-    tableAt(name, vers.getOrElse(name,
-      throw new IllegalArgumentException(s"$name not in group $group at seq $seq")))
-  }
+  def lastBatchId(group: String): Long = timeline.group(group).fold(-1L)(_._2)
 
   // ---- delta-structured persist -------------------------------------------
   //
@@ -189,9 +140,9 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   // snapshots directly.
 
   /** Delta-only commits tolerated on top of a base snapshot before a commit
-    * also compacts to a full snapshot. */
-  private val compactEvery: Long =
-    spark.conf.get("spark.graft.mv.compactEvery", "4").toLong
+    * also compacts to a full snapshot: merge-on-read chains stay at most 3
+    * deltas long, and one snapshot write is amortized over four commits. */
+  private val compactEvery = 4L
 
   /** Greatest version at or below `v` that has a full snapshot dir. */
   private def baseVersionAtOrBelow(name: String, v: Long): Option[Long] = {
@@ -226,6 +177,13 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * materializes it so merge-on-read chains stay bounded. */
   private def writeVersion(name: String, df: DataFrame, next: Long,
       known: Option[DataFrame => DataFrame]): Unit = {
+    if (next == 0L) {
+      // a new incarnation (CREATE, CREATE OR REPLACE, re-create after DROP):
+      // its history — possibly of another schema, possibly orphan dirs of a
+      // crashed commit — is removed rather than extended
+      deleteRecursive(viewDir(name))
+      forgetSchemas(name)
+    }
     val delta: Option[DataFrame => DataFrame] =
       if (next == 0 || df.columns.contains(Changelog.DiffCol)) None
       else known.orElse(Some { (newSnap: DataFrame) =>
@@ -258,19 +216,21 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     }
   }
 
-  /** Write `df` as the next version and atomically flip the pointer. */
+  /** Write `df` as the next version of `name` and commit it. */
   private def commitVersion(name: String, df: DataFrame,
       knownDelta: Option[DataFrame => DataFrame] = None): Long = {
     val next = currentVersion(name).fold(0L)(_ + 1)
     writeVersion(name, df, next, knownDelta)
-    val tmp = viewDir(name).resolve(s"_CURRENT.tmp.$next")
-    Files.write(tmp, next.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, currentFile(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    timeline.record(oracle.writeTs(), Map(name -> next))
-    syncTempView(name)
-    runCommitHooks(name, next)
+    commit(CommitTimeline.Entry(Map(name -> next)))
     next
+  }
+
+  /** Rename `e` into the timeline — the commit's visibility point — then
+    * re-bind SQL names and run the commit hooks of every view it advanced. */
+  private def commit(e: CommitTimeline.Entry): Unit = {
+    timeline.commit(e)
+    e.views.keys.foreach(syncTempView)
+    e.views.foreach { case (n, v) => runCommitHooks(n, v) }
   }
 
   /** The stored commit changelog `version-1 → version` — `(row..., diff)`.
@@ -287,10 +247,10 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   }
 
   /** Register a post-commit hook under `hookId` (idempotent re-register
-    * replaces). The hook runs synchronously after every pointer flip of
+    * replaces). The hook runs synchronously after every commit of
     * `name`, receiving `(delta changelog, new snapshot, version)` — the
     * delta is the STORED commit changelog ([[deltaAt]]), so a sink's work is
-    * ∝ |delta| regardless of view size. The flip precedes the hook, so a
+    * ∝ |delta| regardless of view size. The commit precedes the hook, so a
     * throwing hook leaves the view commit durable; hook consumers must
     * record their own resume position and catch up from stored deltas. */
   def addCommitHook(name: String, hookId: String,
@@ -339,12 +299,10 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * removed rather than extended. Attached commit hooks survive and
     * observe the reseed as a version-0 commit. */
   def createMaterializedView(name: String, query: SparkSession => DataFrame): Long = {
-    if (currentVersion(name).isDefined) {
-      deleteRecursive(viewDir(name))
-      forgetSchemas(name) // new incarnation may change the schema
-    }
     defs.put(name, query)
-    commitVersion(name, query(spark))
+    writeVersion(name, query(spark), 0L, None)
+    commit(CommitTimeline.Entry(Map(name -> 0L)))
+    0L
   }
 
   /** Register the defining query WITHOUT writing a version — the write-only
@@ -404,18 +362,11 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   /** Full refresh: re-run the defining query, commit as a new version. The
     * query is evaluated against the CURRENT catalog state (definitions must
     * read through [[table]], never capture deltas), so a refresh of a
-    * group-member view recomputes from its live inputs and commits through
-    * the group manifest. */
+    * group-member view recomputes from its live inputs. */
   def refreshFull(name: String): Long = {
     val query = defs.getOrElse(name,
       throw new IllegalArgumentException(s"view definition not registered: $name"))
-    val df = query(spark)
-    groupOf.get(name) match {
-      case Some(g) =>
-        commitGroup(g, -1L, Map(name -> df))
-        currentVersion(name).get
-      case None => commitVersion(name, df)
-    }
+    commitVersion(name, query(spark))
   }
 
   /** Incremental refresh of an **accumulable-aggregate** view whose rows are
@@ -435,7 +386,7 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     val partial = delta.groupBy(keyCols.map(col).toIndexedSeq: _*)
       .agg(sum(d).as("support"),
         sumColToValue.map { case (s, v) => sum(col(v) * d).as(s) }.toSeq: _*)
-    val old = table(name) // pinned pre-flip: still the prior version inside commit
+    val old = table(name) // pinned pre-commit: still the prior version inside commit
     val merged = old.unionByName(partial)
       .groupBy(keyCols.map(col).toIndexedSeq: _*)
       .agg(sum(col("support")).as("support"),
@@ -471,11 +422,12 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * the result is a consistent cut across views that share no commit group
     * (the reference's `TimestampOracle::read_ts`,
     * `src/timestamp-oracle/src/lib.rs:46`). */
-  def globalReadTs(): Long = oracle.readTs()
+  def globalReadTs(): Long = timeline.readTs
 
   /** Read `name` as of global time `ts`: the snapshot its latest commit at
     * or before `ts` produced, regardless of how many commits it has had
-    * since. History persists until [[vacuum]]. */
+    * since. History persists until [[vacuum]]; dropping or re-creating the
+    * view forgets it. */
   def tableAtTime(name: String, ts: Long): DataFrame =
     timeline.versionAt(name, ts) match {
       case Some(v) => tableAt(name, v)
@@ -499,9 +451,13 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     }
   }
 
+  /** Drop `name`: a tombstone entry commits the drop (so a reopened catalog
+    * does not bring the view back), then its data dirs are deleted. */
   def dropView(name: String): Unit = {
     defs.remove(name)
     exposed.remove(name)
+    if (currentVersion(name).isDefined)
+      timeline.commit(CommitTimeline.Entry(dropped = Seq(name)))
     deleteRecursive(viewDir(name))
     forgetSchemas(name)
   }

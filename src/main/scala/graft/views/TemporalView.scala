@@ -93,7 +93,7 @@ final class TemporalView(
       s"temporal clock must advance monotonically: $lastClock -> $c")
     val oldClock = lastClock
     lastClock = Some(c)
-    val old = cat.table(name) // pinned: pointer flips only inside commitState
+    val old = cat.table(name) // pinned: versions advance only inside commitState
     if (!hasPending) {
       // the advance KNOWS its commit changelog exactly — the scheduled
       // retractions are the rows whose deadline fell before the new clock;

@@ -1,10 +1,8 @@
 package graft.views
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{GraftSession, Q, Tables}
 import graft.streaming.Changelog
 
 /** Driver-checked queries exercising the materialized-view lifecycle end to
@@ -26,7 +24,7 @@ object ViewQueries {
         |  SELECT o_orderpriority, o_totalprice FROM orders
         |  WHERE o_totalprice >= 100000 AND o_orderstatus = 'P')
         |GROUP BY o_orderpriority""".stripMargin) { (s, dir) =>
-      val cat = new ViewCatalog(s, Files.createTempDirectory("graft-mv-q").toString)
+      val cat = new ViewCatalog(s, GraftSession.tempDir("graft-mv-q").toString)
       val orders = Tables.load(s, dir, "orders")
         .select(col("o_orderpriority"), col("o_orderstatus"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -66,7 +64,7 @@ object ViewQueries {
         |UNION ALL
         |SELECT 'vb' AS src, o_orderstatus AS k, count(*) AS cnt
         |FROM orders GROUP BY o_orderstatus""".stripMargin) { (s, dir) =>
-      val cat = new ViewCatalog(s, Files.createTempDirectory("graft-cut-q").toString)
+      val cat = new ViewCatalog(s, GraftSession.tempDir("graft-cut-q").toString)
       var floor = 100000
       cat.createMaterializedView("va", sess =>
         Tables.load(sess, dir, "orders")
@@ -105,7 +103,7 @@ object ViewQueries {
         |SELECT 2, -1, event_id, user_id FROM base
         |WHERE dl >= TIMESTAMP '2024-01-15 00:00:00'
         |  AND dl < TIMESTAMP '2024-01-25 00:00:00'""".stripMargin) { (s, dir) =>
-      val cat = new ViewCatalog(s, Files.createTempDirectory("graft-ttl-q").toString)
+      val cat = new ViewCatalog(s, GraftSession.tempDir("graft-ttl-q").toString)
       val tv = new TemporalView(cat, "ttl_events",
         sess => Tables.load(sess, dir, "events")
           .filter(col("user_id") < 20)

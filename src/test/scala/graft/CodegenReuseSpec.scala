@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -70,7 +68,7 @@ class CodegenReuseSpec extends SparkSpec with BeforeAndAfterAll {
       date("1582-10-15"), ts("1900-01-01 00:00:00"), ntz("1900-01-01T00:00:00")))
 
   private lazy val table: String = {
-    val dir = Files.createTempDirectory("graft-codegen").toString
+    val dir = tempDir("graft-codegen").toString
     spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
       .write.parquet(s"$dir/t.parquet")
     spark.read.parquet(s"$dir/t.parquet").createOrReplaceTempView("codegen_t")

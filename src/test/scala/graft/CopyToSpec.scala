@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.sources.CopyTo
 
 class CopyToSpec extends SparkSpec {
 
   test("COPY TO csv round-trips through COPY FROM") {
-    val dir = Files.createTempDirectory("graft-copyto").toString + "/out"
+    val dir = tempDir("graft-copyto").toString + "/out"
     val nation = Tables.load(spark, Sf, "nation")
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
     CopyTo.csv(nation, dir)
@@ -20,7 +18,7 @@ class CopyToSpec extends SparkSpec {
   }
 
   test("COPY TO parquet preserves exact types and values") {
-    val dir = Files.createTempDirectory("graft-copyto2").toString + "/out"
+    val dir = tempDir("graft-copyto2").toString + "/out"
     val src = Tables.load(spark, Sf, "region")
     CopyTo.parquet(src, dir)
     val back = spark.read.parquet(dir)

@@ -49,7 +49,7 @@ class DebeziumJsonSpec extends SparkSpec {
 
   test("file stream: same envelope files through readStream reach the same state") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cdc")
+    val dir = tempDir("graft-cdc")
     // Two files = two micro-batches worth of data (one stream discovery pass).
     Files.write(Paths.get(dir.toString, "part-0.json"),
       fixture.take(3).map { case (v, o) => s"""{"o":$o,"env":${v}}""" }

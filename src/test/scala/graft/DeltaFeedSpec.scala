@@ -21,7 +21,7 @@ class DeltaFeedSpec extends SparkSpec {
   import spark.implicits._
 
   private def newCatalog(): ViewCatalog =
-    new ViewCatalog(spark, Files.createTempDirectory("graft-delta").toString)
+    new ViewCatalog(spark, tempDir("graft-delta").toString)
 
   private def base(n: Int): DataFrame =
     spark.range(n).select(col("id").as("k"), (col("id") % 7).as("v"))
@@ -79,7 +79,7 @@ class DeltaFeedSpec extends SparkSpec {
 
   test("iceberg view sink self-heals a missed version from its resume upper") {
     val cat = newCatalog()
-    val path = Files.createTempDirectory("graft-heal").resolve("t").toString
+    val path = tempDir("graft-heal").resolve("t").toString
     cat.commitState("mv", base(100))                         // version 0
     new IcebergTable(spark, path).create(cat.table("mv"), statsCols = Seq("k"), batchId = 0L)
 
@@ -112,7 +112,7 @@ class DeltaFeedSpec extends SparkSpec {
 
   test("reseed (version 0) removes sink keys absent from the new incarnation") {
     val cat = newCatalog()
-    val path = Files.createTempDirectory("graft-reseed").resolve("t").toString
+    val path = tempDir("graft-reseed").resolve("t").toString
     val t = new IcebergTable(spark, path)
     t.create(Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"), statsCols = Seq("k"))
     // the re-created view has keys {2, 4} — 1 and 3 must vanish from the sink

@@ -9,7 +9,7 @@ class ExactlyOnceSinkSpec extends SparkSpec {
   import spark.implicits._
 
   test("replayed batches commit exactly once (idempotent atomic rename)") {
-    val dir = Files.createTempDirectory("graft-eos").toString
+    val dir = tempDir("graft-eos").toString
     val batch = Seq((1, "a"), (2, "b")).toDF("k", "v")
     assert(ExactlyOnceSink.writeBatch(batch, dir, 0L))   // first delivery writes
     assert(!ExactlyOnceSink.writeBatch(batch, dir, 0L))  // replay is a no-op
@@ -17,7 +17,7 @@ class ExactlyOnceSinkSpec extends SparkSpec {
   }
 
   test("crash after rename but before marker re-drives the batch") {
-    val dir = Files.createTempDirectory("graft-eos3").toString
+    val dir = tempDir("graft-eos3").toString
     val batch = Seq((1, "a")).toDF("k", "v")
     assert(ExactlyOnceSink.writeBatch(batch, dir, 0L))
     // simulate the crash window: data dir renamed, marker never written
@@ -28,7 +28,7 @@ class ExactlyOnceSinkSpec extends SparkSpec {
 
   test("streaming batches land as committed batch dirs, readable together") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-eos2").toString
+    val dir = tempDir("graft-eos2").toString
     val input = MemoryStream[(Int, String)]
     val query = ExactlyOnceSink.start(input.toDS().toDF("k", "v"), dir, "eos_out")
     try {

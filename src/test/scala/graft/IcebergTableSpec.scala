@@ -15,7 +15,7 @@ import graft.sources.IcebergTable
 class IcebergTableSpec extends SparkSpec {
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-iceberg").resolve("t").toString
+    tempDir("graft-iceberg").resolve("t").toString
 
   private def orders: DataFrame =
     Tables.load(spark, Sf, "orders")
@@ -148,7 +148,7 @@ class IcebergTableSpec extends SparkSpec {
     t.create(Seq.empty[(Long, String)].toDF("id", "tag"))
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q = IcebergTable.startStream(input.toDF().toDF("id", "tag"), t,
-      Files.createTempDirectory("graft-ice-ckpt").toString)
+      tempDir("graft-ice-ckpt").toString)
     try {
       input.addData((1L, "a"), (2L, "b"))
       q.processAllAvailable()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,7 +17,7 @@ class MaintainedJoinNSpec extends SparkSpec {
   private def ret(df: DataFrame) = Changelog.negate(Changelog.fromRows(df))
 
   test("3-ary maintained join: delta batches with shared arrangements match recompute") {
-    val cat = new ViewCatalog(spark, Files.createTempDirectory("graft-mjn").toString)
+    val cat = new ViewCatalog(spark, tempDir("graft-mjn").toString)
     val mj = new MaintainedJoinN(cat, "loc", 3, Seq(Seq("okey"), Seq("ckey")))
 
     var liRows = Seq((1, 10), (2, 20), (3, 30))

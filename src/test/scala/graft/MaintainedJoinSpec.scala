@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.streaming.Changelog
 import graft.views.{MaintainedJoin, ViewCatalog}
@@ -10,7 +8,7 @@ class MaintainedJoinSpec extends SparkSpec {
   import spark.implicits._
 
   test("maintained join view advances by delta batches and matches full recompute") {
-    val cat = new ViewCatalog(spark, Files.createTempDirectory("graft-mj").toString)
+    val cat = new ViewCatalog(spark, tempDir("graft-mj").toString)
     val mj = new MaintainedJoin(cat, "oc", Seq("k"))
 
     val a0 = Seq((1, "a1"), (2, "a2"), (3, "a3")).toDF("k", "av")
@@ -41,7 +39,7 @@ class MaintainedJoinSpec extends SparkSpec {
   }
 
   test("replayed batchId is a no-op; refreshFull never double-applies a delta") {
-    val cat = new ViewCatalog(spark, Files.createTempDirectory("graft-mj2").toString)
+    val cat = new ViewCatalog(spark, tempDir("graft-mj2").toString)
     val mj = new MaintainedJoin(cat, "idem", Seq("k"))
     mj.initialize(Seq((1, "a1"), (2, "a2")).toDF("k", "av"), Seq((1, "b1")).toDF("k", "bv"))
 
@@ -67,7 +65,7 @@ class MaintainedJoinSpec extends SparkSpec {
   }
 
   test("torn commit is invisible: orphan version dirs without a manifest flip") {
-    val base = Files.createTempDirectory("graft-mj3").toString
+    val base = tempDir("graft-mj3").toString
     val cat = new ViewCatalog(spark, base)
     val mj = new MaintainedJoin(cat, "torn", Seq("k"))
     mj.initialize(Seq((1, "a1")).toDF("k", "av"), Seq((1, "b1")).toDF("k", "bv"))
@@ -89,7 +87,7 @@ class MaintainedJoinSpec extends SparkSpec {
   }
 
   test("AS OF a group seq reads a mutually consistent pre-batch snapshot") {
-    val cat = new ViewCatalog(spark, Files.createTempDirectory("graft-mj4").toString)
+    val cat = new ViewCatalog(spark, tempDir("graft-mj4").toString)
     val mj = new MaintainedJoin(cat, "asof", Seq("k"))
     mj.initialize(Seq((1, "a1")).toDF("k", "av"), Seq((1, "b1")).toDF("k", "bv"))
     val seq0 = mj.currentSeq.get
@@ -106,7 +104,7 @@ class MaintainedJoinSpec extends SparkSpec {
 
   test("streaming drive: tagged changelog stream advances the maintained join") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val cat = new ViewCatalog(spark, Files.createTempDirectory("graft-mjs").toString)
+    val cat = new ViewCatalog(spark, tempDir("graft-mjs").toString)
     val mj = new MaintainedJoin(cat, "ocs", Seq("k"))
     mj.initialize(
       Seq((1, "a1"), (2, "a2")).toDF("k", "av"),

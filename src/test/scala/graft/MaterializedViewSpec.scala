@@ -10,7 +10,7 @@ class MaterializedViewSpec extends SparkSpec {
   import spark.implicits._
 
   private def newCatalog(): ViewCatalog =
-    new ViewCatalog(spark, Files.createTempDirectory("graft-mv").toString)
+    new ViewCatalog(spark, tempDir("graft-mv").toString)
 
   test("create + read serves the committed snapshot") {
     val cat = newCatalog()
@@ -72,7 +72,7 @@ class MaterializedViewSpec extends SparkSpec {
   }
 
   test("delta-structured persist: incremental commits write |delta| batches, compaction bounds the chain") {
-    val dir = Files.createTempDirectory("graft-mv-delta")
+    val dir = tempDir("graft-mv-delta")
     val cat = new ViewCatalog(spark, dir.toString)
     val base = spark.range(0, 10000)
       .select((col("id") % 5000).as("k"), lit(1.0).as("v"))

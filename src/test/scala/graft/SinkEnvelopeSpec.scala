@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -17,7 +15,7 @@ class SinkEnvelopeSpec extends SparkSpec {
   import spark.implicits._
 
   private def newCatalog(): ViewCatalog =
-    new ViewCatalog(spark, Files.createTempDirectory("graft-env").toString)
+    new ViewCatalog(spark, tempDir("graft-env").toString)
 
   test("debezium frames round-trip through the engine's own CDC decoder") {
     // commit changelog: k=1 updated, k=2 deleted, k=3 created
@@ -48,7 +46,7 @@ class SinkEnvelopeSpec extends SparkSpec {
 
   test("upsert avro frames: update + tombstone semantics via the sink hook") {
     val cat = newCatalog()
-    val path = Files.createTempDirectory("graft-envu").resolve("t").toString
+    val path = tempDir("graft-envu").resolve("t").toString
     cat.commitState("ev", Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x")) // v0
     FileEnvelopeSink.create(spark, cat.table("ev"), path, Seq("k"), "UPSERT", 0L)
     // v1: update k=1, delete k=2, insert k=3
@@ -81,7 +79,7 @@ class SinkEnvelopeSpec extends SparkSpec {
 
   test("envelope sink self-heals a skipped version from its batch dirs") {
     val cat = newCatalog()
-    val path = Files.createTempDirectory("graft-envh").resolve("t").toString
+    val path = tempDir("graft-envh").resolve("t").toString
     cat.commitState("eh", Seq((1L, "a")).toDF("k", "v"))
     FileEnvelopeSink.create(spark, cat.table("eh"), path, Seq("k"), "UPSERT", 0L)
     // v1 (hook failed — never delivered): insert k=2

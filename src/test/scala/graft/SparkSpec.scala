@@ -12,4 +12,7 @@ object TestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val Sf = "/root/testdata/sf0.001"
+
+  /** A fresh temp directory, deleted when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = GraftSession.tempDir(prefix)
 }

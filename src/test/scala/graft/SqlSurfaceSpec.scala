@@ -56,7 +56,7 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(cur == Set((1L, 1L, "a"), (1L, 1L, "c")))
 
     // COPY TO exports through the DataFrame writer
-    val out = java.nio.file.Files.createTempDirectory("graft_sqlcopy_").toString
+    val out = tempDir("graft_sqlcopy_").toString
     spark.sql(s"COPY sqlsurf_mv TO '$out/mv' WITH (FORMAT parquet)")
     assert(spark.read.parquet(s"$out/mv").count() == 2)
     spark.sql(s"COPY (SELECT grp FROM sqlsurf_mv WHERE cnt = 1) TO '$out/q' WITH (FORMAT json)")
@@ -113,7 +113,7 @@ class SqlSurfaceSpec extends SparkSpec {
     spark.sql("CREATE SOURCE sqlsurf_auc FROM LOAD GENERATOR AUCTION (UP TO 100)")
     assert(spark.sql("SELECT count(DISTINCT item) FROM sqlsurf_auc").as[Long].head() == 8L)
     // file source: csv with header
-    val dir = java.nio.file.Files.createTempDirectory("graft-src-csv").toString + "/f"
+    val dir = tempDir("graft-src-csv").toString + "/f"
     Seq((1, "x"), (2, "y")).toDF("id", "tag").write.option("header", "true").csv(dir)
     spark.sql(s"CREATE SOURCE sqlsurf_csv FROM FILE '$dir' FORMAT CSV")
     assert(spark.sql("SELECT count(*) FROM sqlsurf_csv").as[Long].head() == 2L)
@@ -148,7 +148,7 @@ class SqlSurfaceSpec extends SparkSpec {
     spark.sql(
       """CREATE OR REPLACE MATERIALIZED VIEW snk_mv AS
         |SELECT grp, sum(v) AS total FROM snk_base GROUP BY grp""".stripMargin)
-    val path = java.nio.file.Files.createTempDirectory("graft-snk-spec").resolve("t").toString
+    val path = tempDir("graft-snk-spec").resolve("t").toString
     spark.sql(s"CREATE SINK snk_ice FROM snk_mv INTO ICEBERG '$path' KEY (grp)")
     val t = new IcebergTable(spark, path)
     assert(t.read().as[(String, Double)].collect().toSet ==

@@ -1,11 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 class TablesSpec extends SparkSpec {
 
   test("load reads a table rewritten in place with its new schema") {
-    val dir = Files.createTempDirectory("graft-tables").toString
+    val dir = tempDir("graft-tables").toString
     val path = s"$dir/t.parquet"
     spark.range(3).selectExpr("id AS k").write.parquet(path)
     assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("k"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sql.SubscribeFrame
@@ -17,7 +15,7 @@ class TemporalViewSpec extends SparkSpec {
   import spark.implicits._
 
   private def newView(): (ViewCatalog, TemporalView) = {
-    val cat = new ViewCatalog(spark, Files.createTempDirectory("graft-tv").toString)
+    val cat = new ViewCatalog(spark, tempDir("graft-tv").toString)
     val tv = new TemporalView(cat, "tv",
       s => {
         import s.implicits._
@@ -55,7 +53,7 @@ class TemporalViewSpec extends SparkSpec {
 
   test("advance is state-only: defining query does not re-run") {
     var evals = 0
-    val cat = new ViewCatalog(spark, Files.createTempDirectory("graft-tv").toString)
+    val cat = new ViewCatalog(spark, tempDir("graft-tv").toString)
     val tv = new TemporalView(cat, "tv2",
       s => {
         evals += 1

@@ -25,7 +25,7 @@ class WebhookSourceSpec extends SparkSpec {
       WebhookSource.SignatureHeader -> signature), body)
 
   test("batch ingest validates, rejects, and dedups") {
-    val dir = java.nio.file.Files.createTempDirectory("webhook_spec_").toString
+    val dir = tempDir("webhook_spec_").toString
     val good1 = """{"id":1,"v":"a"}"""
     val good2 = """{"id":2,"v":"b"}"""
     val notJson = """{"id":"""
