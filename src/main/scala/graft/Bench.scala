@@ -22,16 +22,15 @@ object Bench {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
     // warm-up: JVM/codegen/parquet-footer caches (not counted). The second
-    // warm-up exercises the fixpoint driver loop (checkpoint/except/isEmpty
-    // round-trips) whose JIT warmth otherwise lands on whichever letrec_*
-    // query runs first — measured drift was warm-up, not plan cost.
+    // warm-up exercises the fixpoint driver loop (checkpoint/aggregate/
+    // isEmpty round-trips) whose JIT warmth otherwise lands on whichever
+    // letrec_* query runs first — measured drift was warm-up, not plan cost.
     try runOnce(SparkEntry.queries("q1_agg")) catch { case _: Throwable => () }
     try {
       import org.apache.spark.sql.functions.col
       val base = spark.range(1).select(col("id").as("n"))
       graft.plans.Recursion.fixpoint(base,
-        f => f.select((col("n") + 1).as("n")).filter(col("n") <= 3),
-        stepsPerCheck = 2) // warm the batched path the letrec queries use
+        f => f.select((col("n") + 1).as("n")).filter(col("n") <= 3))
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => () }
     // Third warm-up: the 3-term incremental-join delta chain + threshold.

@@ -27,6 +27,8 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
     // GraftSqlParser — Spark's ResolveWindowOrder throws before injected
     // resolution rules run, so a resolution rule cannot catch them)
     e.injectParser((session, delegate) => new graft.sql.GraftSqlParser(session, delegate))
+    // the parser's WITH MUTUALLY RECURSIVE leaf runs its fixpoint here
+    e.injectPlannerStrategy(_ => graft.sql.LetRecStrategy)
     // generate_series in both scalar position (SELECT generate_series(..))
     // and FROM position — the reference's core table function
     e.injectFunction(graft.functions.SeriesFunctions.scalarFunction)

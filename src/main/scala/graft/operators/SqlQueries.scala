@@ -103,12 +103,8 @@ object SqlQueries {
         .agg(sum(col("c_acctbal").cast("decimal(18,2)")).cast("double"))
     },
 
-    // LetRec with MUTUAL recursion (relation.rs:154-166, N bindings):
-    // evens/odds defined in terms of each other, iterated jointly to the
-    // fixed point by Recursion.mutualFixpoint. Oracle states the closed
-    // form.
-    // The same LetRec machinery reached purely through SQL text — the
-    // reference's WITH MUTUALLY RECURSIVE statement (plan_mutually_recursive,
+    // The LetRec loop reached purely through SQL text — the reference's
+    // WITH MUTUALLY RECURSIVE statement (plan_mutually_recursive,
     // src/sql/src/plan/query.rs; graft.sql.MutualRecursionSql). The oracle
     // states the fixpoint's closed form.
     Q("sql_surface_wmr",
@@ -124,6 +120,10 @@ object SqlQueries {
           |SELECT CAST(sum(n) AS BIGINT) AS total FROM t""".stripMargin)
     },
 
+    // LetRec with MUTUAL recursion (relation.rs:154-166, N bindings):
+    // evens/odds defined in terms of each other, iterated jointly (Jacobi
+    // rounds, set semantics) to the fixed point by Recursion.letRec. The
+    // oracle states the closed form.
     Q("letrec_mutual",
       """SELECT 'even' AS side, n FROM (SELECT unnest(generate_series(0, 8, 2)) AS n)
         |UNION ALL
@@ -131,18 +131,14 @@ object SqlQueries {
       import s.implicits._
       val even0 = Seq(0L).toDF("n")
       val odd0 = s.emptyDataFrame.select(lit(0L).as("n")).limit(0)
-      val Seq(evens, odds) = Recursion.mutualFixpoint(
+      val (Seq(evens, odds), _) = Recursion.letRec(
         Seq(even0, odd0),
         { case Seq(e, o) =>
           Seq(
             Seq(0L).toDF("n").unionByName(o.select((col("n") + 1).as("n"))).filter(col("n") <= 8),
             e.select((col("n") + 1).as("n")).filter(col("n") <= 8))
-        },
-        // inflationary bindings (both only grow) → batch 10 rounds per
-        // materialized convergence check: the 9-round fixpoint over 9 rows
-        // converges in TWO driver round-trips (changed, then stable), and
-        // driver/job latency — not data — is the entire cost here
-        stepsPerCheck = 10)
+            .map(_.distinct().localCheckpoint(false))
+        })
       evens.select(lit("even").as("side"), col("n"))
         .unionByName(odds.select(lit("odd").as("side"), col("n")))
     },
@@ -175,10 +171,8 @@ object SqlQueries {
       // cached partitions stay pinned for the rest of the 70-query session.
       try
         Recursion.fixpoint(base,
-          frontier => frontier.join(edges, frontier("n") === edges("u")).select(col("v").as("n")),
-          // linear step (frontier ⋈ static edges) — batching 2 rounds per
-          // materialized check is the r19-verified win on this path
-          stepsPerCheck = 2)
+          // linear step (frontier ⋈ static edges), as fixpoint requires
+          frontier => frontier.join(edges, frontier("n") === edges("u")).select(col("v").as("n")))
       finally graft.plans.Arrangement.release(edges)
     }
   )

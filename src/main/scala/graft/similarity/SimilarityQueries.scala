@@ -371,12 +371,10 @@ object SimilarityQueries {
         // lazily (the no-arg form is eager: one extra job at plan build)
         .localCheckpoint(false)
       val base = e.select(col("vec_id").as("vid"), col("vec_id").as("l"))
+      // linear step (static edges ⋈ frontier), as fixpoint requires
       val reach = Recursion.fixpoint(base, frontier =>
         sym.join(frontier, col("nb") === col("vid"))
-          .select(col("evid").as("vid"), col("l")),
-        // linear step (static edges ⋈ frontier) — batching 2 rounds per
-        // materialized check is the r19-verified win on this path
-        stepsPerCheck = 2)
+          .select(col("evid").as("vid"), col("l")))
       reach.groupBy(col("vid"))
         .agg(min(col("l")).as("canon_id"),
           (count(lit(1)) - 1).cast("int").as("n_linked"))

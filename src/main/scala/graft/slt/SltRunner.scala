@@ -7779,8 +7779,8 @@ object SltRunner {
             // explosion this emulation refuses; reads fail honestly
             """(?i)MUTUALLY\s+RECURSIVE""".r.findAllIn(body).size == 1) {
           try {
-            graft.sql.MutualRecursionSql.run(spark, body)
-              .createOrReplaceTempView(n)
+            // eager: the fixpoint runs (and fails) inside this try
+            spark.sql(body).localCheckpoint().createOrReplaceTempView(n)
             wmrMaterialized(n) = mutationEpoch
           } catch { case _: Throwable => () } // reads fail honestly
         }

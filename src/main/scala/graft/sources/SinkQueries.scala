@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{GraftSession, Q, Tables}
 
 /** Driver-checked queries for the Iceberg-style table sink (reference
   * `src/storage/src/sink/iceberg.rs`): the full commit lifecycle — create,
@@ -24,7 +22,7 @@ object SinkQueries {
         |  CASE WHEN o_orderkey % 10 = 3 THEN -o_totalprice ELSE o_totalprice END AS price
         |FROM orders""".stripMargin) { (s, dir) =>
       val t = new IcebergTable(s,
-        Files.createTempDirectory("graft-iceq").resolve("t").toString)
+        GraftSession.tempDir("graft-iceq").resolve("t").toString)
       val orders = Tables.load(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_orderpriority").as("pri"),
           col("o_totalprice").as("price"))
@@ -55,7 +53,7 @@ object SinkQueries {
         |SELECT o_orderstatus AS st, count(*) AS cnt,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM sink_base GROUP BY o_orderstatus""".stripMargin)
-      val path = Files.createTempDirectory("graft-snk").resolve("t").toString
+      val path = GraftSession.tempDir("graft-snk").resolve("t").toString
       s.sql(s"CREATE SINK sink_ice FROM sink_mv INTO ICEBERG '$path' KEY (st)")
       // widen the base: every group's aggregates change through the sink
       s.sql("""CREATE OR REPLACE TEMP VIEW sink_base AS
@@ -86,7 +84,7 @@ object SinkQueries {
         |SELECT o_orderstatus AS st, count(*) AS cnt,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM envsink_base GROUP BY o_orderstatus""".stripMargin)
-      val path = Files.createTempDirectory("graft-envsnk").resolve("t").toString
+      val path = GraftSession.tempDir("graft-envsnk").resolve("t").toString
       s.sql(s"CREATE SINK envsink_s FROM envsink_mv INTO FILE '$path' " +
         "KEY (st) ENVELOPE UPSERT FORMAT AVRO")
       // widen the base: every group's aggregates change through the sink
@@ -116,7 +114,7 @@ object SinkQueries {
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate <= TIMESTAMP '1996-12-31 23:59:59'""".stripMargin) { (s, dir) =>
       val t = new IcebergTable(s,
-        Files.createTempDirectory("graft-icep").resolve("t").toString)
+        GraftSession.tempDir("graft-icep").resolve("t").toString)
       val li = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_shipdate"), col("l_quantity"))
       t.create(li.repartitionByRange(16, col("l_shipdate")),

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Q, Tables}
+import graft.{GraftSession, Q, Tables}
 import graft.streaming.Changelog
 
 /** Driver-checked CDC ingestion: the events table is re-encoded as Debezium
@@ -93,7 +93,7 @@ object SourceQueries {
     Q("source_webhook_drop",
       "SELECT n_nationkey, n_name FROM nation WHERE n_nationkey < 20") { (s, dir) =>
       graft.functions.GraftFunctions.register(s)
-      val work = java.nio.file.Files.createTempDirectory("graft_webhook_").toString
+      val work = GraftSession.tempDir("graft_webhook_").toString
       val secret = "graft-webhook-secret"
       val bodySchema = StructType(Seq(
         StructField("n_nationkey", LongType), StructField("n_name", StringType)))
@@ -177,7 +177,7 @@ object SourceQueries {
       ProtobufFunctions.register(s)
       val readerDdl = "p_partkey BIGINT, p_name STRING, p_retailprice DOUBLE"
       val writerV2Ddl = readerDdl + ", p_brand STRING"
-      val regFile = java.nio.file.Files.createTempFile("graft_registry_", ".tsv")
+      val regFile = GraftSession.tempDir("graft_registry_").resolve("registry.tsv")
       Confluent.writeRegistryFile(regFile.toString, Seq(
         (1, "avro", readerDdl), (2, "protobuf", writerV2Ddl)))
       ConfluentFunctions.register(s, Confluent.registryFromFile(regFile.toString))

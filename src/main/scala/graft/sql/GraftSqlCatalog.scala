@@ -115,10 +115,10 @@ object GraftSqlCatalog {
     commentMeta.getOrElseUpdate(spark.sharedState, TrieMap.empty)
   def nextCommentSeq(): Int = commentSeq.incrementAndGet()
 
-  /** WITH MUTUALLY RECURSIVE view bodies (name -> WMR text): the fixpoint
-    * can't live as a lazy Spark temp view, so readers re-materialize the
-    * name from the recorded body before use (the same freshness-on-read
-    * contract the SLT layer applies to materialized views). */
+  /** WITH MUTUALLY RECURSIVE view bodies (name -> WMR text): readers
+    * re-materialize the name from the recorded body before use (the SLT
+    * layer's freshness-on-read contract for materialized views), though a
+    * lazy [[LetRec]] plan could now back an ordinary view. */
   private val wmrViews = TrieMap.empty[AnyRef, TrieMap[String, String]]
   def wmrViewsFor(spark: SparkSession): TrieMap[String, String] =
     wmrViews.getOrElseUpdate(spark.sharedState, TrieMap.empty)

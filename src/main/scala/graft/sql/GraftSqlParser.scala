@@ -155,10 +155,8 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
           .map(_.toUpperCase.replaceAll("\\s+", " ")),
         target)
     case wmr if MutualRecursionSql.matches(wmr) =>
-      // evaluated eagerly like SubscribeFrame: the fixpoint runs now; the
-      // ANALYZED body plan is returned (the binding temp views are already
-      // dropped, so the unresolved form would no longer resolve)
-      MutualRecursionSql.run(session, wmr).queryExecution.analyzed
+      // a LetRec leaf: the fixpoint runs when the plan executes
+      MutualRecursionSql.plan(session, wmr, parsePlan)
     case CreateSink(name, view, path, keyList) =>
       CreateSinkCommand(name, view, path,
         Option(keyList).toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)))
@@ -327,7 +325,7 @@ object GraftSqlParser {
     (s"(?is)^\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?(?:GLOBAL\\s+)?(?:TEMP(?:ORARY)?\\s+)?" +
       s"VIEW\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?$Id\\b.*$$").r
   /** `CREATE VIEW <name> AS WITH MUTUALLY RECURSIVE ...` — the WMR body
-    * can't delegate to Spark's parser; [[MutualRecursionSql]] runs it. */
+    * can't delegate to Spark's parser; [[MutualRecursionSql]] plans it. */
   val CreateViewWmrStmt: Regex =
     (s"(?is)^\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?(?:GLOBAL\\s+)?(?:TEMP(?:ORARY)?\\s+)?" +
       s"(?:MATERIALIZED\\s+)?VIEW\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?$Id\\s+AS\\s+" +

@@ -1,6 +1,20 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.DynamicVariable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.{MultiInstanceRelation, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan,
+  Statistics, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StringType
+
+import graft.plans.Recursion
 
 /** SQL surface for `WITH MUTUALLY RECURSIVE` — the reference's signature
   * recursive-SQL construct (parser `src/sql-parser/src/parser.rs` CTE
@@ -23,11 +37,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `ERROR AT` raises, and hitting the safety cap without a declared limit
   * raises (a non-terminating WMR is a bug, not a hang).
   *
-  * Spark-first: bindings live as temp views; each round is distributed
-  * (`exceptAll` change detection, `localCheckpoint` lineage truncation —
-  * the same machinery as [[graft.plans.Recursion]]); the driver only
-  * orchestrates. Evaluation is eager at parse time (the [[SubscribeFrame]]
-  * precedent) so the statement composes with everything that accepts SQL
+  * Spark-first: the parser returns a [[LetRec]] leaf, and [[LetRecExec]]
+  * runs [[graft.plans.Recursion.letRec]] and then the body when the plan
+  * executes, so `spark.sql` and `EXPLAIN` run no job. Each round plugs the
+  * bindings' current relations into the parsed plans; no session temp view
+  * is touched. The statement composes with everything that accepts SQL
   * text, including CREATE MATERIALIZED VIEW.
   */
 object MutualRecursionSql {
@@ -39,118 +53,83 @@ object MutualRecursionSql {
   final case class Wmr(limit: Option[Int], errorAtLimit: Boolean,
       bindings: Seq[Binding], body: String)
 
+  /** Bindings of the statements being planned around this one, which a WMR
+    * nested in a binding or body may read (their empty relations). */
+  private val enclosing = new DynamicVariable[Map[String, LogicalPlan]](Map.empty)
+
   def matches(sqlText: String): Boolean =
     """(?is)^\s*WITH\s+MUTUALLY\s+RECURSIVE\b""".r.findFirstIn(sqlText).isDefined
 
-  /** Execute the statement and return the body's DataFrame. */
-  def run(spark: SparkSession, sqlText: String): DataFrame = {
+  /** The statement as a [[LetRec]] leaf; runs no job. Each binding's text
+    * is parsed once by `parsePlan` (so graft's own statement forms work
+    * inside it) and type-checked against its declared schema over empty
+    * bindings; the node's output is the body analyzed the same way. */
+  def plan(spark: SparkSession, sqlText: String,
+      parsePlan: String => LogicalPlan): LetRec = {
     val wmr = parse(sqlText)
-    // every binding starts as the empty collection of its declared type.
-    // Bare NUMERIC/DECIMAL declarations get the reference's wide numeric
-    // (Spark's bare DECIMAL is (10,0), which would truncate fractions).
-    val schemas = wmr.bindings.map { b =>
-      val ddl = """(?i)\b(numeric|decimal)\b(?!\s*\()""".r
-        .replaceAllIn(b.schemaDdl, "DECIMAL(38,18)")
-      b.name -> spark.sessionState.sqlParser.parseTableSchema(ddl)
-    }.toMap
-    wmr.bindings.foreach { b =>
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemas(b.name))
-        .createOrReplaceTempView(b.name)
+    val empties = wmr.bindings.map(b => LocalRelation(declaredAttributes(spark, b.schemaDdl)))
+    val scope = enclosing.value ++ LetRec.scope(wmr, empties)
+    val (values, body) = enclosing.withValue(scope) {
+      (wmr.bindings.map(b => parsePlan(b.query)), parsePlan(wmr.body))
     }
-    // bindings are lexically scoped in the reference: whatever happens below
-    // (non-convergence throw, analysis error in a binding or the body), the
-    // binding temp views must not leak into the session namespace. A
-    // pre-existing same-name temp view is shadowed-then-dropped — documented
-    // limitation.
-    try runBody(spark, wmr, schemas)
-    finally wmr.bindings.foreach(b => spark.catalog.dropTempView(b.name))
+    def analyzed(p: LogicalPlan) = GraftPlanBridge.ofRows(spark, LetRec.bindIn(p, scope))
+    wmr.bindings.zip(values).zip(empties).foreach { case ((b, v), empty) =>
+      val (got, schema) = (analyzed(v).schema, empty.schema)
+      require(got.length == schema.length,
+        s"binding ${b.name} declares ${schema.length} columns, query returns ${got.length}")
+      // the reference type-checks each binding against its declared
+      // signature: a text/unknown literal does NOT coerce into a numeric
+      // column ("declared types (bigint), but query returns types
+      // (text)", with_mutually_recursive.slt:653); numeric widths
+      // assignment-cast with range checks, which `evaluate` applies
+      got.fields.zip(schema.fields).foreach { case (g, decl) =>
+        if (g.dataType == StringType && decl.dataType != StringType)
+          throw new IllegalArgumentException(
+            s"""WITH MUTUALLY RECURSIVE query "${b.name}" declared types """ +
+              s"(${decl.dataType.simpleString}), but query returns types (text)")
+      }
+    }
+    LetRec(spark, wmr, empties, values, body, analyzed(body).queryExecution.analyzed.output)
   }
 
-  private def runBody(spark: SparkSession, wmr: Wmr,
-      schemas: Map[String, org.apache.spark.sql.types.StructType]): DataFrame = {
-    val maxIter = wmr.limit.getOrElse(DefaultMaxIter)
-    // One round: sequential re-evaluation of every binding — each sees
-    // bindings already updated in THIS round through their refreshed temp
-    // views (lazily; plans nest within the batch). Results are coerced to
-    // the DECLARED column names and types (the reference plans each binding
-    // against its signature).
-    def round(): Map[String, DataFrame] =
-      wmr.bindings.map { b =>
-        val raw = spark.sql(b.query)
-        val schema = schemas(b.name)
-        require(raw.columns.length == schema.length,
-          s"binding ${b.name} declares ${schema.length} columns, query returns ${raw.columns.length}")
-        // the reference type-checks each binding against its declared
-        // signature: a text/unknown literal does NOT coerce into a numeric
-        // column ("declared types (bigint), but query returns types
-        // (text)", with_mutually_recursive.slt:653); numeric widths
-        // assignment-cast with range checks, which the coercion below
-        // already applies
-        raw.schema.fields.zip(schema.fields).foreach { case (got, decl) =>
-          import org.apache.spark.sql.types._
-          if (got.dataType == StringType && decl.dataType != StringType)
-            throw new IllegalArgumentException(
-              s"""WITH MUTUALLY RECURSIVE query "${b.name}" declared types """ +
-                s"(${decl.dataType.simpleString}), but query returns types (text)")
-        }
-        val coerced = raw.select(raw.columns.toIndexedSeq.zip(schema.fields).map {
-          case (c, f) =>
-            org.apache.spark.sql.functions.col(s"`$c`").cast(f.dataType).as(f.name)
+  /** Run `node`'s fixpoint, then return its body over the final bindings. */
+  def evaluate(node: LetRec): DataFrame = {
+    def df(plan: LogicalPlan) = GraftPlanBridge.ofRows(node.session, plan)
+    def plans(vals: Seq[DataFrame]) = vals.map(_.queryExecution.logical)
+    // the sequential-update rule: binding j sees the bindings before it as
+    // already updated (and lazily checkpointed) in this round. Columns are
+    // cast to the declared schema by position.
+    def round(cur: Seq[DataFrame]): Seq[DataFrame] = {
+      val vals = cur.toArray
+      node.values.indices.foreach { j =>
+        val raw = df(LetRec.bindIn(node.values(j), LetRec.scope(node.wmr, plans(vals.toSeq))))
+        val pos = raw.columns.indices.map(c => s"c$c")
+        vals(j) = raw.toDF(pos: _*).select(node.empties(j).schema.zip(pos).map {
+          case (f, c) => col(c).cast(f.dataType).as(f.name)
         }: _*).localCheckpoint(false)
-        coerced.createOrReplaceTempView(b.name)
-        b.name -> coerced
-      }.toMap
-    // Driver round-trips, not data, dominate small fixpoints — so batch K
-    // lazy rounds per materialized check. The check compares the batch's
-    // LAST TWO consecutive rounds: X^{k} == X^{k-1} is the exact fixpoint
-    // condition (no inflationary assumption needed — a fixpoint reached
-    // mid-batch stays fixed, so the boundary check still sees it), at the
-    // cost of up to K-1 extra lazy rounds of plan building. One job per
-    // batch: the lazy checkpoints of every round materialize inside it.
-    val batchK = 8
-    var cur: Map[String, DataFrame] = Map.empty
-    var converged = false
-    var i = 0
-    while (i < maxIter && !converged) {
-      val k = math.min(batchK, maxIter - i)
-      var prevRound = cur
-      var lastRound = cur
-      (1 to k).foreach { _ =>
-        prevRound = lastRound
-        lastRound = round()
       }
-      // per binding: ONE +1/-1 sum aggregation (multiset symmetric
-      // difference ≠ empty) instead of two exceptAll anti-joins — one
-      // exchange per binding, not four
-      import org.apache.spark.sql.functions.{col, lit, sum}
-      val diffs = wmr.bindings.flatMap { b =>
-        prevRound.get(b.name).map { prev =>
-          val last = lastRound(b.name)
-          val cols = last.columns.toIndexedSeq.map(c => col(s"`$c`"))
-          last.withColumn("__graft_sign", lit(1L))
-            .union(prev.withColumn("__graft_sign", lit(-1L)))
-            .groupBy(cols: _*)
-            .agg(sum(col("__graft_sign")).as("__graft_sign"))
-            .filter(col("__graft_sign") =!= 0L)
-            .select(lit(1).as("one"))
-        }
-      }
-      converged = diffs.size == wmr.bindings.size &&
-        diffs.reduce(_ unionByName _).isEmpty
-      cur = lastRound
-      i += k
+      vals.toSeq
     }
-    if (!converged) {
-      if (wmr.errorAtLimit || wmr.limit.isEmpty)
-        throw new IllegalStateException(
-          s"WITH MUTUALLY RECURSIVE did not converge within $maxIter iterations" +
-            (if (wmr.limit.isEmpty) " (no RECURSION LIMIT declared)" else ""))
-      // RETURN AT RECURSION LIMIT: current state is the result
-    }
-    val out = spark.sql(wmr.body)
-    out.queryExecution.analyzed // force resolution against the binding views
-    out
+    val limit = node.wmr.limit
+    val maxIter = limit.getOrElse(DefaultMaxIter)
+    val (finals, converged) =
+      Recursion.letRec(node.empties.map(df), round, maxIter = maxIter)
+    // RETURN AT RECURSION LIMIT: the state at the limit is the result
+    if (!converged && (node.wmr.errorAtLimit || limit.isEmpty))
+      throw new IllegalStateException(
+        s"WITH MUTUALLY RECURSIVE did not converge within $maxIter iterations" +
+          (if (limit.isEmpty) " (no RECURSION LIMIT declared)" else ""))
+    df(LetRec.bindIn(node.body, LetRec.scope(node.wmr, plans(finals))))
+  }
+
+  /** The declared columns. Bare NUMERIC/DECIMAL get the reference's wide
+    * numeric (Spark's bare DECIMAL is (10,0), which would truncate
+    * fractions). All are nullable: the node's output is analyzed over
+    * them, so they must not promise more than the rounds deliver. */
+  private def declaredAttributes(spark: SparkSession, ddl: String) = {
+    val wide = """(?i)\b(numeric|decimal)\b(?!\s*\()""".r.replaceAllIn(ddl, "DECIMAL(38,18)")
+    DataTypeUtils.toAttributes(spark.sessionState.sqlParser.parseTableSchema(wide))
+      .map(_.withNullability(true))
   }
 
   // ---- parsing (paren- and quote-aware scanner) ---------------------------
@@ -234,5 +213,75 @@ object MutualRecursionSql {
     }
     throw new IllegalArgumentException(
       s"unbalanced parentheses starting at: ${s.drop(open).take(40)}")
+  }
+}
+
+/** `WITH MUTUALLY RECURSIVE` as a logical leaf (reference `LetRec`,
+  * relation.rs:154-166): the parsed binding (`values`) and body plans, run
+  * by [[LetRecExec]] when the plan executes. `empties` are the bindings'
+  * initial, declared-schema relations; `output` is the body analyzed over
+  * them. */
+case class LetRec(
+    session: SparkSession,
+    wmr: MutualRecursionSql.Wmr,
+    empties: Seq[LocalRelation],
+    values: Seq[LogicalPlan],
+    body: LogicalPlan,
+    output: Seq[Attribute]) extends LeafNode with MultiInstanceRelation {
+  override def newInstance(): LetRec = copy(output = output.map(_.newInstance()))
+  // the size is unknown until the loop runs; the default keeps the result
+  // off the broadcast side of a join
+  override def computeStats(): Statistics = Statistics(sizeInBytes = conf.defaultSizeInBytes)
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(wmr.bindings.map(_.name).mkString("[", ", ", "]"), output)
+}
+
+object LetRec {
+  def scope(wmr: MutualRecursionSql.Wmr, rels: Seq[LogicalPlan]): Map[String, LogicalPlan] =
+    wmr.bindings.map(_.name.toLowerCase).zip(rels).toMap
+
+  /** `plan` with each single-part reference to a name in `scope` replaced
+    * by its relation — inside subquery expressions and nested WMRs too —
+    * except where an inner WITH or WMR rebinds the name. */
+  def bindIn(plan: LogicalPlan, scope: Map[String, LogicalPlan]): LogicalPlan =
+    if (scope.isEmpty) plan else plan match {
+      case r: UnresolvedRelation if r.multipartIdentifier.length == 1 &&
+          scope.contains(r.multipartIdentifier.head.toLowerCase) =>
+        SubqueryAlias(r.multipartIdentifier.head, scope(r.multipartIdentifier.head.toLowerCase))
+      case w: UnresolvedWith =>
+        // a CTE name shadows from its own definition on (WITH RECURSIVE)
+        // or from the next one on, and throughout the WITH's query
+        var inner = scope
+        val defs = w.cteRelations.map { case (n, d, depth) =>
+          if (w.allowRecursion) inner -= n.toLowerCase
+          val bound = bindIn(d, inner).asInstanceOf[SubqueryAlias]
+          inner -= n.toLowerCase
+          (n, bound, depth)
+        }
+        w.copy(child = bindIn(w.child, inner), cteRelations = defs)
+      case l: LetRec =>
+        val inner = scope -- l.wmr.bindings.map(_.name.toLowerCase)
+        l.copy(values = l.values.map(bindIn(_, inner)), body = bindIn(l.body, inner))
+      case p =>
+        p.mapChildren(bindIn(_, scope)).transformExpressions {
+          case s: SubqueryExpression => s.withNewPlan(bindIn(s.plan, scope))
+        }
+    }
+}
+
+/** Runs a [[LetRec]]'s fixpoint and body once per plan, when it executes. */
+case class LetRecExec(node: LetRec) extends LeafExecNode {
+  override def output: Seq[Attribute] = node.output
+  @transient private lazy val rows: RDD[InternalRow] =
+    MutualRecursionSql.evaluate(node).queryExecution.toRdd
+  override protected def doExecute(): RDD[InternalRow] = rows
+  override def simpleString(maxFields: Int): String = node.simpleString(maxFields)
+}
+
+/** Plans [[LetRec]]; installed by [[graft.GraftExtensions]]. */
+object LetRecStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case l: LetRec => LetRecExec(l) :: Nil
+    case _ => Nil
   }
 }

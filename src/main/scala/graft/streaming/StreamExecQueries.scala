@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.{Q, Tables}
+import graft.{GraftSession, Q, Tables}
 import graft.sources.ExactlyOnceSink
 
 /** STREAMING executions surfaced as driver-checked CORRECTNESS rows — the
@@ -128,7 +128,7 @@ object StreamExecQueries {
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
         |  FROM events WHERE user_id % 5 = 0)
         |WHERE rn = 1 AND event_type <> 'error'""".stripMargin) { (s, dir) =>
-      val work = Files.createTempDirectory("graft_stream_upsert_").toString
+      val work = GraftSession.tempDir("graft_stream_upsert_").toString
       val (in, out, ckpt) = (s"$work/in", s"$work/out", s"$work/ckpt")
       val chunks = 3
       val input = upsertInput(s, dir,
@@ -191,7 +191,7 @@ object StreamExecQueries {
         |    FROM sub) WHERE rn = 1)
         |SELECT c.user_id, n_inserts, n_inserts - 1 AS n_retracts, last_type
         |FROM chg c JOIN last l ON c.user_id = l.user_id""".stripMargin) { (s, dir) =>
-      val work = Files.createTempDirectory("graft_stream_subscribe_").toString
+      val work = GraftSession.tempDir("graft_stream_subscribe_").toString
       val (in, out) = (s"$work/in", s"$work/out")
       val chunks = 3
       val input = upsertInput(s, dir, col("event_type"), chunks)

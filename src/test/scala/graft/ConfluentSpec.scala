@@ -66,7 +66,7 @@ class ConfluentSpec extends SparkSpec {
   }
 
   test("file-backed registry round-trips and rejects bad lines") {
-    val f = java.nio.file.Files.createTempFile("graft_reg_", ".tsv")
+    val f = tempDir("graft_reg_").resolve("registry.tsv")
     Confluent.writeRegistryFile(f.toString, Seq(
       (1, "avro", "a BIGINT, s STRING"), (2, "protobuf", "a BIGINT")))
     val reg = Confluent.registryFromFile(f.toString)

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 /** `WITH MUTUALLY RECURSIVE` SQL surface (reference
   * `doc/user/content/sql/select/recursive-ctes.md`,
   * `test/sqllogictest/with_mutually_recursive.slt`): the statements below
@@ -96,5 +101,92 @@ class MutualRecursionSqlSpec extends SparkSpec {
         |  wmr_scope_probe (n int) AS (VALUES (1))
         |SELECT * FROM wmr_scope_probe""".stripMargin).collect()
     assert(!spark.catalog.tableExists("wmr_scope_probe"))
+  }
+
+  /** Spark jobs `f` launches from this thread. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val probe = "wmr-jobs-" + System.nanoTime()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.probe") == probe)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.probe", probe)
+    try f
+    finally {
+      sc.setLocalProperty("graft.probe", null)
+      TestListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("spark.sql and EXPLAIN of a WMR run no job; collect runs the fixpoint") {
+    val wmr =
+      """WITH MUTUALLY RECURSIVE
+        |  t (n int) AS (VALUES (1) UNION ALL SELECT n+1 FROM t WHERE n < 10)
+        |SELECT sum(n) AS total FROM t""".stripMargin
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { df = spark.sql(wmr) } == 0)
+    var plan = ""
+    assert(jobsOf {
+      plan = spark.sql(s"EXPLAIN PHYSICAL PLAN FOR $wmr").as[String].collect().mkString("\n")
+    } == 0)
+    assert(plan.contains("LetRec"), plan)
+    assert(jobsOf(spark.sql(s"EXPLAIN PLAN FOR $wmr").collect()) == 0)
+    var total = 0L
+    assert(jobsOf { total = df.as[Long].head() } > 0)
+    assert(total == 55L)
+  }
+
+  test("a session temp view named like a binding keeps its own rows") {
+    Seq(42).toDF("n").createOrReplaceTempView("wmr_shadowed")
+    try {
+      val total = spark.sql(
+        """WITH MUTUALLY RECURSIVE
+          |  wmr_shadowed (n int) AS (
+          |    VALUES (1) UNION ALL SELECT n+1 FROM wmr_shadowed WHERE n < 5
+          |  )
+          |SELECT sum(n) FROM wmr_shadowed""".stripMargin).as[Long].head()
+      assert(total == 15L)
+      assert(spark.table("wmr_shadowed").as[Int].collect().toSeq == Seq(42))
+    } finally spark.catalog.dropTempView("wmr_shadowed")
+  }
+
+  test("bindings resolve inside subqueries; an inner WITH keeps its own name") {
+    val row = spark.sql(
+      """WITH MUTUALLY RECURSIVE
+        |  t (n int) AS (
+        |    VALUES (1)
+        |    UNION ALL
+        |    SELECT n+1 FROM t WHERE n < 5 AND n IN (SELECT n FROM t)
+        |  )
+        |SELECT (SELECT count(*) FROM t) AS c,
+        |       (WITH t AS (SELECT 100 AS n) SELECT max(n) FROM t) AS inner_t""".stripMargin)
+      .as[(Long, Int)].head()
+    assert(row == ((5L, 100)))
+  }
+
+  test("a WMR nested in a binding reads the outer bindings") {
+    val n = spark.sql(
+      """WITH MUTUALLY RECURSIVE
+        |  outer_t (n int) AS (
+        |    WITH MUTUALLY RECURSIVE
+        |      inner_t (m int) AS (SELECT 1 UNION SELECT n + 1 FROM outer_t WHERE n < 5)
+        |    SELECT m FROM inner_t
+        |  )
+        |SELECT sum(n) FROM outer_t""".stripMargin).as[Long].head()
+    assert(n == 15L)
+  }
+
+  test("a text binding declared numeric fails in spark.sql, not at collect") {
+    val e = intercept[IllegalArgumentException](spark.sql(
+      """WITH MUTUALLY RECURSIVE
+        |  t (n bigint) AS (SELECT 'a')
+        |SELECT * FROM t""".stripMargin))
+    assert(e.getMessage.contains("declared types (bigint), but query returns types (text)"))
   }
 }
