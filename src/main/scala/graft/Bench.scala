@@ -48,11 +48,9 @@ object Bench {
         Changelog.fromRows(rel("c").withColumnRenamed("k", "k2")))
       val deltas = states.map(Changelog.negate)
       val stepKeys = Seq(Seq("k"), Seq("k2"))
-      val init = states.zipWithIndex.tail.foldLeft(states.head) { case (acc, (p, j)) =>
-        IncrementalJoin.joinChangelogs(acc, p, stepKeys(j - 1))
-      }
       Changelog.threshold(Changelog.unionAll(
-          init, IncrementalJoin.deltaN(states, deltas, stepKeys)))
+          IncrementalJoin.joinChain(states, stepKeys),
+          IncrementalJoin.deltaN(states, deltas, stepKeys)))
         .groupBy(col("k"))
         .agg(org.apache.spark.sql.functions.sum(col(Changelog.DiffCol)).as("n"))
         .write.format("noop").mode("overwrite").save()

@@ -685,14 +685,12 @@ case class SubscribeContinuousCommand(view: String, snapshot: Boolean, progress:
     val version = cat.currentVersion(view).getOrElse(
       throw new IllegalArgumentException(
         s"cannot SUBSCRIBE: no committed version of $view"))
-    val snap = cat.table(view)
-    val cursor = new SubscriptionCursor(view, snap.schema, progress, envelope)
-    if (snapshot)
-      cursor.enqueue(graft.streaming.Changelog.fromRows(snap), version)
+    val snap = cat.zsetAt(view, version)
+    val cursor = new SubscriptionCursor(view,
+      snap.drop(graft.streaming.Changelog.DiffCol).schema, progress, envelope)
+    if (snapshot) cursor.enqueue(snap, version)
     else if (progress) // no snapshot requested: still announce the frontier
-      cursor.enqueue(snap.limit(0).withColumn(
-        graft.streaming.Changelog.DiffCol,
-        org.apache.spark.sql.functions.lit(1L)), version)
+      cursor.enqueue(snap.limit(0), version)
     subs.put(view, cursor)
     cat.addCommitHook(view, s"subscribe:$view", { (delta, _, v) =>
       cursor.enqueue(delta, v)

@@ -150,7 +150,7 @@ object SubscribeFrame {
       throw new IllegalArgumentException(s"cannot SUBSCRIBE: no committed version of $name"))
     val from = asOf.getOrElse(cur)
     require(from >= 0 && from <= cur, s"AS OF $from outside [0, $cur] for $name")
-    val snapshot = stamp(Changelog.fromRows(cat.tableAt(name, from)), from)
+    val snapshot = stamp(cat.zsetAt(name, from), from)
     val steps = ((from + 1) to cur).map(v => stamp(cat.deltaAt(name, v), v))
     (snapshot +: steps).reduce(_.unionByName(_))
   }

@@ -5,13 +5,13 @@ import scala.util.DynamicVariable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.{MultiInstanceRelation, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, SubqueryExpression}
+import org.apache.spark.sql.catalyst.analysis.{GetColumnByOrdinal, MultiInstanceRelation,
+  UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan,
-  Statistics, SubqueryAlias, UnresolvedWith}
+  Project, Statistics, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StringType
 
 import graft.plans.Recursion
@@ -98,15 +98,15 @@ object MutualRecursionSql {
     def plans(vals: Seq[DataFrame]) = vals.map(_.queryExecution.logical)
     // the sequential-update rule: binding j sees the bindings before it as
     // already updated (and lazily checkpointed) in this round. Columns are
-    // cast to the declared schema by position.
+    // cast to the declared schema by position, in the same plan, so each
+    // binding is analyzed once per round.
     def round(cur: Seq[DataFrame]): Seq[DataFrame] = {
       val vals = cur.toArray
       node.values.indices.foreach { j =>
-        val raw = df(LetRec.bindIn(node.values(j), LetRec.scope(node.wmr, plans(vals.toSeq))))
-        val pos = raw.columns.indices.map(c => s"c$c")
-        vals(j) = raw.toDF(pos: _*).select(node.empties(j).schema.zip(pos).map {
-          case (f, c) => col(c).cast(f.dataType).as(f.name)
-        }: _*).localCheckpoint(false)
+        val bound = LetRec.bindIn(node.values(j), LetRec.scope(node.wmr, plans(vals.toSeq)))
+        vals(j) = df(Project(node.empties(j).output.zipWithIndex.map { case (a, i) =>
+          Alias(Cast(GetColumnByOrdinal(i, a.dataType), a.dataType), a.name)()
+        }, bound)).localCheckpoint(false)
       }
       vals.toSeq
     }

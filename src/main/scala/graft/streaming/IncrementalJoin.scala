@@ -4,22 +4,25 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental equi-join maintenance under arbitrary insert/retract
-  * changelogs — the reference's linear join plan
-  * (`src/compute/src/render/join/`, `JoinPlan::Linear`): for collections A, B
-  * with updates δA, δB in one timestamp's batch,
+  * changelogs — the reference's delta-query join plan (`JoinPlan::Delta`,
+  * `src/compute-types/src/plan/join.rs:46-51`; `src/compute/src/render/join/`).
+  * Multiset multiplicities MULTIPLY through the join
+  * (`diff_out = diff_l · diff_r` — differential dataflow's product rule).
   *
-  *   δ(A ⋈ B) = δA ⋈ B ∪ A ⋈ δB ∪ δA ⋈ δB
+  * One delta rule covers every arity: for a chain `A_1 ⋈ … ⋈ A_n` (input
+  * `j+1` joins the prefix on `stepKeys(j)`) and one batch's updates `δA_i`,
   *
-  * where multiset multiplicities MULTIPLY through the join
-  * (`diff_out = diff_l · diff_r` — differential dataflow's product rule; a
-  * retraction meeting a retraction yields +1, which is exactly the
-  * inclusion-exclusion correction).
+  *   δOut = Σ_i  A_1' ⋈ … ⋈ A_{i-1}' ⋈ δA_i ⋈ A_{i+1} ⋈ … ⋈ A_n
   *
-  * Scale: each term is a plain Spark equi-join — shuffled on the join key
-  * (or broadcast when one side is small), so the delta evaluation
-  * parallelizes like any batch join and touches |δ|·matches rows, never the
-  * full A ⋈ B. In continuous operation A and B are the maintained state
-  * (e.g. materialized-view snapshots); the deltas are micro-batches.
+  * (primes = post-batch states `A_j ∪ δA_j`). At n = 2 this is
+  * `δA ⋈ B ∪ A' ⋈ δB`, which equals the textbook three-term
+  * `δA ⋈ B ∪ A ⋈ δB ∪ δA ⋈ δB` over Z-relations ("Recent Increments in
+  * Incremental View Maintenance", PODS 2024) with one join fewer.
+  *
+  * Scale: each term is a plain Spark equi-join routed through a delta-sized
+  * input, so no intermediate of the full join is ever materialized — the
+  * property that gave the reference its 9.4 GB vs 45.5 GB LDBC result
+  * (`test/ldbc-bi/20231206_eager_delta_join_experiment.md`).
   */
 object IncrementalJoin {
 
@@ -34,59 +37,30 @@ object IncrementalJoin {
       .withColumn(Changelog.DiffCol, col(L) * col(R))
       .drop(L, R)
 
-  /** The delta rule: output changelog of `A ⋈ B` for one batch, given the
-    * pre-batch states and the batch's deltas. Union the result into the
-    * maintained output (then consolidate) to advance the view. */
-  def delta(
-      aState: DataFrame, aDelta: DataFrame,
-      bState: DataFrame, bDelta: DataFrame,
-      keys: Seq[String]): DataFrame =
-    Changelog.unionAll(
-      joinChangelogs(aDelta, bState, keys),
-      joinChangelogs(aState, bDelta, keys),
-      joinChangelogs(aDelta, bDelta, keys))
+  /** `parts(0) ⋈ parts(1) ⋈ …`, part `j` joining the prefix on
+    * `stepKeys(j - 1)`. */
+  def joinChain(parts: Seq[DataFrame], stepKeys: Seq[Seq[String]]): DataFrame = {
+    require(parts.nonEmpty && stepKeys.size == parts.size - 1,
+      s"${parts.size} inputs need ${parts.size - 1} step keys, got ${stepKeys.size}")
+    parts.tail.zip(stepKeys).foldLeft(parts.head) { case (acc, (p, k)) =>
+      joinChangelogs(acc, p, k)
+    }
+  }
 
-  /** N-ary linear-chain delta rule — the reference's delta-query plan shape
-    * (`JoinPlan::Delta`, `src/compute-types/src/plan/join.rs:46-51`): for a
-    * join chain `A_1 ⋈ A_2 ⋈ … ⋈ A_n` (input `i+1` joins the prefix on
-    * `stepKeys(i)`), one batch's output delta telescopes as
-    *
-    *   δOut = Σ_i  A_1' ⋈ … ⋈ A_{i-1}' ⋈ δA_i ⋈ A_{i+1} ⋈ … ⋈ A_n
-    *
-    * (primes = post-batch states `A_j ∪ δA_j`). Every term routes through a
-    * delta-sized input, so no intermediate of the full join is ever
-    * materialized — the property that gave the reference its 9.4 GB vs
-    * 45.5 GB LDBC result (`test/ldbc-bi/20231206_eager_delta_join_experiment.md`). */
+  /** The delta rule: the output changelog of `joinChain(states)` for one
+    * batch, given the pre-batch states and the batch's deltas (any may be
+    * empty). Union it into the maintained output (then consolidate) to
+    * advance the view. */
   def deltaN(
       states: Seq[DataFrame],
       deltas: Seq[DataFrame],
-      stepKeys: Seq[Seq[String]]): DataFrame =
-    deltaNWithUpdated(states,
-      states.zip(deltas).map { case (s, d) => Changelog.unionAll(s, d) },
-      deltas, stepKeys)
-
-  /** [[deltaN]] with caller-supplied post-batch states — the ARRANGEMENT
-    * SHARING hook (reference `join_implementation.rs`: per-input pipelines
-    * reuse one arrangement of each input across all N telescoping terms).
-    * Input j appears in up to N-1 terms; a caller that pins each
-    * `states(j)`/`updated(j)` once (e.g. [[graft.plans.Arrangement.arrangeBy]]
-    * on its join key) makes every term reuse that one shuffle+scan instead
-    * of re-reading the collection per term. */
-  def deltaNWithUpdated(
-      states: Seq[DataFrame],
-      updated: Seq[DataFrame],
-      deltas: Seq[DataFrame],
       stepKeys: Seq[Seq[String]]): DataFrame = {
-    require(states.size >= 2 && states.size == deltas.size &&
-      updated.size == states.size && stepKeys.size == states.size - 1)
-    val terms = states.indices.map { i =>
-      val parts = states.indices.map { j =>
+    require(states.size >= 2 && deltas.size == states.size)
+    val updated = states.zip(deltas).map { case (s, d) => Changelog.unionAll(s, d) }
+    Changelog.unionAll(states.indices.map { i =>
+      joinChain(states.indices.map { j =>
         if (j < i) updated(j) else if (j == i) deltas(i) else states(j)
-      }
-      parts.zipWithIndex.tail.foldLeft(parts.head) { case (acc, (p, j)) =>
-        joinChangelogs(acc, p, stepKeys(j - 1))
-      }
-    }
-    Changelog.unionAll(terms: _*)
+      }, stepKeys)
+    }: _*)
   }
 }

@@ -134,10 +134,11 @@ object StreamingQueries {
     },
 
     // Incremental join delta rule (reference `src/compute/src/render/join/`):
-    // δ(A⋈B) = δA⋈B ∪ A⋈δB ∪ δA⋈δB with multiplied diffs. States: orders ⋈
-    // customer; deltas retract cheap orders AND negative-balance customers —
-    // the δA⋈δB term's +1 products are the inclusion-exclusion correction,
-    // so the maintained output must equal the join of the updated inputs.
+    // δ(A⋈B) = δA⋈B ∪ A'⋈δB with multiplied diffs (A' = A ∪ δA). States:
+    // orders ⋈ customer; deltas retract cheap orders AND negative-balance
+    // customers — a retraction meeting a retraction inside A'⋈δB yields the
+    // +1 inclusion-exclusion correction, so the maintained output must
+    // equal the join of the updated inputs.
     Q("incremental_join_delta",
       """SELECT o_orderkey, c_name FROM orders JOIN customer ON o_custkey = c_custkey
         |WHERE o_totalprice >= 50000 AND c_acctbal >= 0""".stripMargin) { (s, dir) =>
@@ -152,7 +153,7 @@ object StreamingQueries {
       val keys = Seq("o_custkey")
       val maintained = Changelog.unionAll(
         IncrementalJoin.joinChangelogs(aState, bState, keys),
-        IncrementalJoin.delta(aState, aDelta, bState, bDelta, keys))
+        IncrementalJoin.deltaN(Seq(aState, bState), Seq(aDelta, bDelta), Seq(keys)))
       Changelog.threshold(maintained).select(col("o_orderkey"), col("c_name"))
     },
 
@@ -184,11 +185,9 @@ object StreamingQueries {
         Changelog.negate(Changelog.fromRows(orders.filter(col("o_totalprice") < 100000))),
         Changelog.negate(Changelog.fromRows(cust.filter(col("c_acctbal") < 0))))
       val stepKeys = Seq(Seq("l_orderkey"), Seq("o_custkey"))
-      val init = states.zipWithIndex.tail.foldLeft(states.head) { case (acc, (p, j)) =>
-        IncrementalJoin.joinChangelogs(acc, p, stepKeys(j - 1))
-      }
       val maintained = Changelog.threshold(Changelog.unionAll(
-        init, IncrementalJoin.deltaN(states, deltas, stepKeys)))
+        IncrementalJoin.joinChain(states, stepKeys),
+        IncrementalJoin.deltaN(states, deltas, stepKeys)))
       maintained
         .groupBy(col("c_custkey"))
         .agg(sum(col(Changelog.DiffCol)).as("n"),

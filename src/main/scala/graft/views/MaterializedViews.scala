@@ -104,18 +104,13 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * already applied `batchId` or a later one, the call is a no-op
     * returning false — a restarted/replayed `foreachBatch` cannot
     * double-apply. `batchId = -1` always applies (non-batch maintenance).
-    *
-    * `deltas` optionally supplies a member's commit changelog (see
-    * [[commitState]]); members without one get the generic diff fallback
-    * inside [[writeVersion]].
     */
-  def commitGroup(group: String, batchId: Long, dfs: Map[String, DataFrame],
-      deltas: Map[String, DataFrame => DataFrame] = Map.empty): Boolean = {
+  def commitGroup(group: String, batchId: Long, dfs: Map[String, DataFrame]): Boolean = {
     val curBatch = lastBatchId(group)
     if (batchId >= 0 && curBatch >= batchId) return false // replayed batch
     val vers = dfs.map { case (n, df) =>
       val next = currentVersion(n).fold(0L)(_ + 1)
-      writeVersion(n, df, next, deltas.get(n))
+      writeVersion(n, df, next, None)
       n -> next
     }
     commit(CommitTimeline.Entry(vers,
@@ -176,7 +171,7 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * [[tableAt]] reconstructs, and every `compactEvery`-th commit still
     * materializes it so merge-on-read chains stay bounded. */
   private def writeVersion(name: String, df: DataFrame, next: Long,
-      known: Option[DataFrame => DataFrame]): Unit = {
+      known: Option[DataFrame]): Unit = {
     if (next == 0L) {
       // a new incarnation (CREATE, CREATE OR REPLACE, re-create after DROP):
       // its history — possibly of another schema, possibly orphan dirs of a
@@ -184,21 +179,17 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
       deleteRecursive(viewDir(name))
       forgetSchemas(name)
     }
-    val delta: Option[DataFrame => DataFrame] =
+    val delta: Option[DataFrame] =
       if (next == 0 || df.columns.contains(Changelog.DiffCol)) None
-      else known.orElse(Some { (newSnap: DataFrame) =>
+      else known.orElse(Some(
         // generic commit changelog `new ∖ old ∪ -(old ∖ new)`, computed from
         // the not-yet-written plan — acceptable only here, on the
         // full-refresh path, which is already O(|view|)
         Changelog.consolidate(Changelog.unionAll(
-          Changelog.fromRows(newSnap),
-          Changelog.negate(Changelog.fromRows(tableAt(name, next - 1)))))
-      })
+          Changelog.fromRows(df),
+          Changelog.negate(Changelog.fromRows(tableAt(name, next - 1)))))))
     delta match {
-      case Some(d) =>
-        // `df` IS the new snapshot relation (not yet written) — the delta
-        // function receives the plan instead of a read-back
-        val dd = d(df)
+      case Some(dd) =>
         dd.write.mode("overwrite").parquet(deltaDir(name, next).toString)
         // asNullable: schema inference over parquet always yields nullable
         // fields, so the recorded schema must match what a read would infer
@@ -216,15 +207,6 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     }
   }
 
-  /** Write `df` as the next version of `name` and commit it. */
-  private def commitVersion(name: String, df: DataFrame,
-      knownDelta: Option[DataFrame => DataFrame] = None): Long = {
-    val next = currentVersion(name).fold(0L)(_ + 1)
-    writeVersion(name, df, next, knownDelta)
-    commit(CommitTimeline.Entry(Map(name -> next)))
-    next
-  }
-
   /** Rename `e` into the timeline — the commit's visibility point — then
     * re-bind SQL names and run the commit hooks of every view it advanced. */
   private def commit(e: CommitTimeline.Entry): Unit = {
@@ -234,16 +216,25 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   }
 
   /** The stored commit changelog `version-1 → version` — `(row..., diff)`.
-    * Version 0 is the snapshot itself at diff +1. Falls back to the snapshot
-    * diff for changelog-valued collections and pre-delta history. Delta dirs
-    * survive [[vacuum]] (they are the history SUBSCRIBE serves). */
+    * Version 0 is [[zsetAt]] itself. Falls back to the Z-set difference of
+    * the two versions for changelog-valued collections and pre-delta
+    * history. Delta dirs survive [[vacuum]] (they are the history SUBSCRIBE
+    * serves). */
   def deltaAt(name: String, version: Long): DataFrame = {
     val d = deltaDir(name, version)
     if (Files.exists(d)) readParquet(d, deltaSchemas.get((name, version)))
-    else if (version == 0L) Changelog.fromRows(tableAt(name, 0L))
+    else if (version == 0L) zsetAt(name, 0L)
     else Changelog.consolidate(Changelog.unionAll(
-      Changelog.fromRows(tableAt(name, version)),
-      Changelog.negate(Changelog.fromRows(tableAt(name, version - 1)))))
+      zsetAt(name, version), Changelog.negate(zsetAt(name, version - 1))))
+  }
+
+  /** Version `version` of `name` as a Z-set `(row..., diff)`: a
+    * changelog-valued collection (one with a `diff` column) as stored — its
+    * `diff` is the multiplicity, not a data column — and a snapshot-valued
+    * view at diff +1 per row. */
+  def zsetAt(name: String, version: Long): DataFrame = {
+    val t = tableAt(name, version)
+    if (t.columns.contains(Changelog.DiffCol)) t else Changelog.fromRows(t)
   }
 
   /** Register a post-commit hook under `hookId` (idempotent re-register
@@ -366,7 +357,7 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   def refreshFull(name: String): Long = {
     val query = defs.getOrElse(name,
       throw new IllegalArgumentException(s"view definition not registered: $name"))
-    commitVersion(name, query(spark))
+    commitState(name, query(spark))
   }
 
   /** Incremental refresh of an **accumulable-aggregate** view whose rows are
@@ -397,23 +388,25 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     // changed key — two semi-join-pruned scans whose OUTPUT is ∝ |delta
     // keys|, never the full-snapshot diff (`exceptAll`) the fallback pays.
     val changedKeys = delta.select(keyCols.map(col).toIndexedSeq: _*).distinct()
-    commitVersion(name, merged, Some { newSnap =>
-      Changelog.consolidate(Changelog.unionAll(
-        Changelog.fromRows(newSnap.join(changedKeys, keyCols, "left_semi")),
-        Changelog.negate(Changelog.fromRows(old.join(changedKeys, keyCols, "left_semi")))))
-    })
+    commitState(name, merged, Some(Changelog.consolidate(Changelog.unionAll(
+      Changelog.fromRows(merged.join(changedKeys, keyCols, "left_semi")),
+      Changelog.negate(Changelog.fromRows(old.join(changedKeys, keyCols, "left_semi")))))))
   }
 
-  /** Commit `df` as the next version of `name` without re-running the
-    * registered definition — the entry point for state-only maintenance
-    * paths ([[TemporalView.advance]]: the new state derives from the old
-    * state, not from the defining query). `knownDelta`, when the caller
-    * already knows the commit's changelog (a temporal advance knows its
-    * retraction set exactly), is persisted as-is instead of the generic
-    * snapshot diff; it receives the durably-written new snapshot. */
+  /** Write `df` as the next version of `name` and commit it, without
+    * re-running the registered definition — the commit of a full refresh
+    * and of state-only maintenance paths ([[TemporalView.advance]]: the new
+    * state derives from the old state, not from the defining query).
+    * `knownDelta`, when the caller already knows the commit's changelog (a
+    * temporal advance knows its retraction set exactly), is persisted as-is
+    * instead of the generic snapshot diff. */
   def commitState(name: String, df: DataFrame,
-      knownDelta: Option[DataFrame => DataFrame] = None): Long =
-    commitVersion(name, df, knownDelta)
+      knownDelta: Option[DataFrame] = None): Long = {
+    val next = currentVersion(name).fold(0L)(_ + 1)
+    writeVersion(name, df, next, knownDelta)
+    commit(CommitTimeline.Entry(Map(name -> next)))
+    next
+  }
 
   // ---- linearized reads across independent views ---------------------------
 

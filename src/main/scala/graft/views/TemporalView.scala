@@ -100,12 +100,12 @@ final class TemporalView(
       // the range partitioning on __expires_at makes this filter a
       // file-pruned scan of just the expiring tail, delta ∝ |expired|
       cat.commitState(name, ranged(alive(old, c)),
-        Some(_ => Changelog.negate(Changelog.fromRows(
+        Some(Changelog.negate(Changelog.fromRows(
           old.filter(col(ExpiresCol) < lit(c))))))
     } else {
       val pendingOld = cat.table(pendingName)
       cat.commitState(pendingName, ranged(alive(pendingOld, c)),
-        Some(_ => Changelog.negate(Changelog.fromRows(
+        Some(Changelog.negate(Changelog.fromRows(
           pendingOld.filter(col(ExpiresCol) < lit(c))))))
       // insertions: appearance bound crossed inside (oldClock, c], still
       // alive at c; retractions: deadline passed. Both file-pruned tails.
@@ -114,7 +114,7 @@ final class TemporalView(
         .filter(oldClock.map(o => col(AppearsCol) > lit(o)).getOrElse(lit(true)))
       val expiring = old.filter(col(ExpiresCol) < lit(c))
       cat.commitState(name, ranged(visibleAt(pendingOld, c)),
-        Some(_ => Changelog.consolidate(Changelog.unionAll(
+        Some(Changelog.consolidate(Changelog.unionAll(
           Changelog.fromRows(appearing),
           Changelog.negate(Changelog.fromRows(expiring))))))
     }

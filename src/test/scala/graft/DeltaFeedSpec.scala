@@ -61,7 +61,7 @@ class DeltaFeedSpec extends SparkSpec {
       // state-only commit with a known delta: one inserted row per version
       val ins = Seq((1000L + i, i.toLong)).toDF("k", "v")
       cat.commitState("ticks", old.unionByName(ins),
-        Some(_ => Changelog.fromRows(ins)))
+        Some(Changelog.fromRows(ins)))
     }
     val frame = SubscribeFrame(cat, "ticks", Some(0L))
     val files = frame.inputFiles.toSeq
@@ -86,13 +86,13 @@ class DeltaFeedSpec extends SparkSpec {
     // version 1: hook "fails" — the sink never sees it
     val ins1 = Seq((900L, 1L)).toDF("k", "v")
     cat.commitState("mv", cat.table("mv").unionByName(ins1),
-      Some(_ => Changelog.fromRows(ins1)))
+      Some(Changelog.fromRows(ins1)))
     // version 2: drop k=0..9, insert one more row
     val old = cat.table("mv")
     val gone = old.filter(col("k") < 10)
     val ins2 = Seq((901L, 2L)).toDF("k", "v")
     cat.commitState("mv", old.filter(col("k") >= 10).unionByName(ins2),
-      Some(_ => Changelog.unionAll(
+      Some(Changelog.unionAll(
         Changelog.negate(Changelog.fromRows(gone)), Changelog.fromRows(ins2))))
 
     // the hook for version 2 runs with ONLY version 2's delta; resumeUpper=0

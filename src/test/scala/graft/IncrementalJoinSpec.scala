@@ -29,7 +29,7 @@ class IncrementalJoinSpec extends SparkSpec {
     val bState = Changelog.fromRows(b0)
     val maintained = Changelog.threshold(Changelog.unionAll(
       IncrementalJoin.joinChangelogs(aState, bState, Seq("k")),
-      IncrementalJoin.delta(aState, aDelta, bState, bDelta, Seq("k"))))
+      IncrementalJoin.deltaN(Seq(aState, bState), Seq(aDelta, bDelta), Seq(Seq("k")))))
       .select(col("k"), col("av"), col("bv"), col(Changelog.DiffCol))
 
     // Ground truth: join of the post-batch collections.

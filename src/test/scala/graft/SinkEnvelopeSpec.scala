@@ -51,11 +51,10 @@ class SinkEnvelopeSpec extends SparkSpec {
     FileEnvelopeSink.create(spark, cat.table("ev"), path, Seq("k"), "UPSERT", 0L)
     // v1: update k=1, delete k=2, insert k=3
     val newState = Seq((1L, 11.0), (3L, 30.0)).toDF("k", "x")
-    cat.commitState("ev", newState, Some { snap =>
+    cat.commitState("ev", newState, Some(
       Changelog.consolidate(Changelog.unionAll(
-        Changelog.fromRows(snap),
-        Changelog.negate(Changelog.fromRows(cat.tableAt("ev", 0L)))))
-    })
+        Changelog.fromRows(newState),
+        Changelog.negate(Changelog.fromRows(cat.tableAt("ev", 0L)))))))
     FileEnvelopeSink.applyCommit(spark, cat, "ev", path, Seq("k"), "UPSERT",
       cat.deltaAt("ev", 1L), 1L)
 
@@ -84,10 +83,10 @@ class SinkEnvelopeSpec extends SparkSpec {
     FileEnvelopeSink.create(spark, cat.table("eh"), path, Seq("k"), "UPSERT", 0L)
     // v1 (hook failed — never delivered): insert k=2
     cat.commitState("eh", Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
-      Some(_ => Changelog.fromRows(Seq((2L, "b")).toDF("k", "v"))))
+      Some(Changelog.fromRows(Seq((2L, "b")).toDF("k", "v"))))
     // v2: insert k=3; hook sees only v2's delta but must fold in v1's
     cat.commitState("eh", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"),
-      Some(_ => Changelog.fromRows(Seq((3L, "c")).toDF("k", "v"))))
+      Some(Changelog.fromRows(Seq((3L, "c")).toDF("k", "v"))))
     FileEnvelopeSink.applyCommit(spark, cat, "eh", path, Seq("k"), "UPSERT",
       cat.deltaAt("eh", 2L), 2L)
     assert(FileEnvelopeSink.resumeUpper(path) == 2L)

@@ -68,7 +68,7 @@ class TimestampOracleSpec extends SparkSpec {
     def rows(df: DataFrame): Set[(Int, String, String)] =
       df.select("k", "av", "bv").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSet
-    val views = Seq("j__a", "j__b", "j__out", "solo")
+    val views = Seq("j__in0", "j__in1", "j__out", "solo")
     val versions = views.map(cat.currentVersion)
     val joined = rows(mj.output)
     val readTs = cat.globalReadTs()
