@@ -12,7 +12,8 @@ object Schemas {
     StructType(schema.fields.map(f =>
       f.copy(dataType = nullableType(f.dataType), nullable = true)))
 
-  private def nullableType(dt: DataType): DataType = dt match {
+  /** `dt` with every nested field, element and value nullable. */
+  def nullableType(dt: DataType): DataType = dt match {
     case s: StructType => nullable(s)
     case a: ArrayType => a.copy(elementType = nullableType(a.elementType), containsNull = true)
     case m: MapType => m.copy(keyType = nullableType(m.keyType),

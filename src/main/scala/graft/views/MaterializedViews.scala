@@ -2,6 +2,7 @@ package graft.views
 
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.concurrent.TrieMap
+import scala.collection.immutable.TreeMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,9 +36,36 @@ import graft.streaming.Changelog
   *    through the accumulable-Reduce delta rule (merge by key, add diff-
   *    weighted sums, drop keys at support ≤ 0 — reference
   *    `ReductionType::Accumulable`, `src/compute-types/src/plan/reduce.rs:89-102`)
-  *    without touching the base table. At 100 TB the merge is a single
-  *    shuffle of |state| + |delta| keyed rows; state never transits the
-  *    driver.
+  *    without touching the base table. The merge is a shuffle of |state| +
+  *    |delta| keyed rows; state transits the driver only while the view is
+  *    resident (below) and fits its row budget.
+  *  - **Resident versions** (the reference's fast-path peek from an
+  *    in-memory arrangement, `FastPathPlan::PeekExisting`,
+  *    `src/adapter/src/coord/peek.rs:171-182`). A snapshot-valued view (no
+  *    `diff` column) holds its last `compactEvery` (4) versions in driver
+  *    memory as immutable [[ResidentZSet]]s. All views of the catalog
+  *    share one budget of [[ResidentZSet.RowBudget]] rows (50,000; the
+  *    heap it bounds is stated there). The first delta commit of an
+  *    incarnation seeds the copy from the `v=<n>` snapshot it extends. Each
+  *    delta commit writes `delta=<n>` from its plan, reads the batch back
+  *    and derives version n as version n−1 ⊎ δ, and a compaction commit
+  *    writes `v=<n>` from the resident rows. Parquet footers are checked
+  *    before either read, so no snapshot or delta past the budget reaches
+  *    the driver. The new version is installed right after the timeline
+  *    rename, before SQL names re-bind. [[tableAt]] of a resident version
+  *    is a `LocalRelation`, which Spark's optimizer folds filters and
+  *    projections into, so point, range and AS OF reads inside the window
+  *    run no Spark job. Everything else reads persist: older versions,
+  *    changelog-valued collections, views that do not fit the budget, and
+  *    a reopened catalog until a commit of the view finds a `v=<n>`
+  *    snapshot to seed from.
+  *    Eviction: a version-0 write (a new incarnation) and [[dropView]]
+  *    forget the view's resident versions, [[vacuum]] forgets the ones it
+  *    makes unreadable, and a commit whose delta retracts a row the version
+  *    does not hold, inserts a row in another float form than the one held
+  *    (-0.0 for 0.0), or does not fit the budget leaves the view
+  *    persist-only until its next incarnation. A resident read returns
+  *    the rows persist returns for that version, float forms included.
   */
 final class ViewCatalog(spark: SparkSession, baseDir: String) {
 
@@ -63,6 +91,8 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   // schema-inference (each un-schema'd spark.read.parquet launches a footer
   // job — pure driver/job latency in the commit chain). Metadata only; a
   // catalog re-opened over a pre-existing baseDir simply misses and infers.
+  // `snapSchemas` holds an entry exactly for each `v=<n>` dir this instance
+  // wrote and has not vacuumed.
   private val snapSchemas =
     TrieMap.empty[(String, Long), org.apache.spark.sql.types.StructType]
   private val deltaSchemas =
@@ -71,6 +101,12 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   private def readParquet(p: Path,
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
     schema.fold(spark.read)(s => spark.read.schema(s)).parquet(p.toString)
+
+  // view -> its resident versions: absent until the incarnation's first
+  // delta commit, None once it is persist-only, else the window of the last
+  // `compactEvery` versions. Values are immutable and replaced whole, so a
+  // reader sees one consistent window.
+  private val resident = TrieMap.empty[String, Option[TreeMap[Long, ResidentZSet]]]
 
   private def viewDir(name: String): Path = Paths.get(baseDir, name)
   private def deltaDir(name: String, v: Long): Path =
@@ -108,13 +144,13 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   def commitGroup(group: String, batchId: Long, dfs: Map[String, DataFrame]): Boolean = {
     val curBatch = lastBatchId(group)
     if (batchId >= 0 && curBatch >= batchId) return false // replayed batch
-    val vers = dfs.map { case (n, df) =>
+    val written = dfs.map { case (n, df) =>
       val next = currentVersion(n).fold(0L)(_ + 1)
-      writeVersion(n, df, next, None)
-      n -> next
+      n -> (next, writeVersion(n, df, next, None))
     }
-    commit(CommitTimeline.Entry(vers,
-      group = Some(group -> (if (batchId >= 0) batchId else curBatch))))
+    commit(CommitTimeline.Entry(written.map { case (n, (v, _)) => n -> v },
+      group = Some(group -> (if (batchId >= 0) batchId else curBatch))),
+      written.collect { case (n, (_, Some(z))) => n -> z })
     true
   }
 
@@ -169,48 +205,130 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * ONLY that delta (one job, the persist-LSM shape the reference uses):
     * the snapshot of a delta-structured version is the derived artifact
     * [[tableAt]] reconstructs, and every `compactEvery`-th commit still
-    * materializes it so merge-on-read chains stay bounded. */
+    * materializes it so merge-on-read chains stay bounded.
+    *
+    * Returns the resident copy of the new version, for [[commit]] to
+    * install, when the view is resident. */
   private def writeVersion(name: String, df: DataFrame, next: Long,
-      known: Option[DataFrame]): Unit = {
+      known: Option[DataFrame]): Option[ResidentZSet] = {
     if (next == 0L) {
       // a new incarnation (CREATE, CREATE OR REPLACE, re-create after DROP):
       // its history — possibly of another schema, possibly orphan dirs of a
       // crashed commit — is removed rather than extended
+      resident.remove(name)
       deleteRecursive(viewDir(name))
       forgetSchemas(name)
     }
-    val delta: Option[DataFrame] =
-      if (next == 0 || df.columns.contains(Changelog.DiffCol)) None
-      else known.orElse(Some(
-        // generic commit changelog `new ∖ old ∪ -(old ∖ new)`, computed from
-        // the not-yet-written plan — acceptable only here, on the
-        // full-refresh path, which is already O(|view|)
-        Changelog.consolidate(Changelog.unionAll(
-          Changelog.fromRows(df),
-          Changelog.negate(Changelog.fromRows(tableAt(name, next - 1)))))))
-    delta match {
-      case Some(dd) =>
-        dd.write.mode("overwrite").parquet(deltaDir(name, next).toString)
-        // asNullable: schema inference over parquet always yields nullable
-        // fields, so the recorded schema must match what a read would infer
-        deltaSchemas.put((name, next), graft.Schemas.nullable(dd.schema))
-        snapSchemas.put((name, next), graft.Schemas.nullable(df.schema))
-        val base = baseVersionAtOrBelow(name, next - 1).getOrElse(-1L)
-        if (next - base >= compactEvery)
-          df.write.mode("overwrite").parquet(viewDir(name).resolve(s"v=$next").toString)
-      case None =>
-        // version 0 (deltaAt derives its changelog from the snapshot) and
-        // changelog-valued collections (their rows ARE the delta algebra;
-        // a second diff column would collide) stay snapshot-structured
-        df.write.mode("overwrite").parquet(viewDir(name).resolve(s"v=$next").toString)
-        snapSchemas.put((name, next), graft.Schemas.nullable(df.schema))
+    if (next == 0L || df.columns.contains(Changelog.DiffCol)) {
+      // version 0 (deltaAt derives its changelog from the snapshot) and
+      // changelog-valued collections (their rows ARE the delta algebra;
+      // a second diff column would collide) stay snapshot-structured
+      writeSnapshot(name, next, df)
+      return None
+    }
+    val prev = residentCopy(name, next - 1)
+    val delta = known.getOrElse(
+      // generic commit changelog `new ∖ old ∪ -(old ∖ new)`, computed from
+      // the not-yet-written plan — acceptable only here, on the
+      // full-refresh path, which is already O(|view|)
+      Changelog.consolidate(Changelog.unionAll(
+        Changelog.fromRows(df),
+        Changelog.negate(Changelog.fromRows(tableAt(name, next - 1))))))
+    val deltaPath = deltaDir(name, next)
+    delta.write.mode("overwrite").parquet(deltaPath.toString)
+    // asNullable: schema inference over parquet always yields nullable
+    // fields, so the recorded schema must match what a read would infer
+    val deltaSchema = graft.Schemas.nullable(delta.schema)
+    deltaSchemas.put((name, next), deltaSchema)
+    // the new resident version is version n−1 ⊎ the stored batch, read back
+    // only when its footers show it fits the budget: a larger delta never
+    // reaches the driver
+    val derived = prev.filter(z => graft.Schemas.nullable(df.schema) == z.schema &&
+        storedRows(deltaPath) <= rowsFree(name))
+      .flatMap(_.plus(readParquet(deltaPath, Some(deltaSchema)).collect(), deltaSchema))
+    if (prev.isDefined && derived.isEmpty) resident.put(name, None) // persist-only from here on
+    val base = baseVersionAtOrBelow(name, next - 1).getOrElse(-1L)
+    if (next - base < compactEvery) derived
+    else {
+      // the compaction writes the resident rows as they were inserted, so
+      // the merged plan is not run again
+      val stored = derived.map(_.asStored)
+      writeSnapshot(name, next, stored.fold(df)(_.toDF(spark).coalesce(1)))
+      stored
     }
   }
 
+  private def writeSnapshot(name: String, v: Long, df: DataFrame): Unit = {
+    df.write.mode("overwrite").parquet(viewDir(name).resolve(s"v=$v").toString)
+    snapSchemas.put((name, v), graft.Schemas.nullable(df.schema))
+  }
+
+  /** The resident copy of committed version `v` of `name`, if the view is
+    * resident. The first delta commit of an incarnation seeds it from the
+    * `v=<v>` snapshot when the snapshot's parquet footers show it fits the
+    * budget; a view found over the budget stays persist-only until its next
+    * incarnation. A version without its own snapshot (merge-on-read, as
+    * after a reopen) is not seeded: the next commit tries again, and a
+    * compaction commit writes one. */
+  private def residentCopy(name: String, v: Long): Option[ResidentZSet] =
+    resident.get(name) match {
+      case Some(window) => window.flatMap(_.get(v))
+      case None =>
+        val dir = viewDir(name).resolve(s"v=$v")
+        if (!Files.exists(dir)) None
+        else {
+          val z = Option.when(storedRows(dir) <= rowsFree(name)) {
+            val snap = readParquet(dir, snapSchemas.get((name, v)))
+            ResidentZSet.of(snap.schema, snap.collect())
+          }.flatten
+          if (z.exists(s => install(name, TreeMap(v -> s)))) z
+          else { resident.put(name, None); None }
+        }
+    }
+
+  /** Rows the parquet files under `dir` hold, from their footers: no job. */
+  private def storedRows(dir: Path): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val s = Files.list(dir)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet")).map { p =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(p.toUri), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    } finally s.close()
+  }
+
+  /** Rows of [[ResidentZSet.RowBudget]] the other views' windows leave. */
+  private def rowsFree(name: String): Long =
+    ResidentZSet.RowBudget - resident.iterator.collect {
+      case (n, Some(w)) if n != name => ResidentZSet.held(w.values)
+    }.sum
+
+  /** Make `w` the window of `name` if every window then fits the budget
+    * together, else leave `name` persist-only; true if installed. */
+  private def install(name: String, w: TreeMap[Long, ResidentZSet]): Boolean =
+    resident.synchronized {
+      val fits = ResidentZSet.held(w.values) <= rowsFree(name)
+      resident.put(name, Option.when(fits)(w))
+      fits
+    }
+
   /** Rename `e` into the timeline — the commit's visibility point — then
-    * re-bind SQL names and run the commit hooks of every view it advanced. */
-  private def commit(e: CommitTimeline.Entry): Unit = {
+    * install the new resident versions, re-bind SQL names and run the
+    * commit hooks of every view it advanced. Installing after the rename
+    * means a resident version is always a committed one; installing before
+    * the re-bind means a re-bound name reads the new version from memory. */
+  private def commit(e: CommitTimeline.Entry,
+      installs: Map[String, ResidentZSet] = Map.empty): Unit = {
     timeline.commit(e)
+    installs.foreach { case (n, z) =>
+      val v = e.views(n)
+      resident.get(n).flatten.foreach(w =>
+        install(n, (w + (v -> z)).rangeFrom(v - compactEvery + 1)))
+    }
     e.views.keys.foreach(syncTempView)
     e.views.foreach { case (n, v) => runCommitHooks(n, v) }
   }
@@ -322,8 +440,14 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
 
   /** AS OF read: a specific committed version (the timestamp-oracle analog —
     * versions are the view's logical timestamps; history persists until
-    * [[vacuum]]). */
-  def tableAt(name: String, version: Long): DataFrame = {
+    * [[vacuum]]). A resident version (see the class doc) is a
+    * `LocalRelation` over its rows in driver memory; any other is read
+    * from persist. */
+  def tableAt(name: String, version: Long): DataFrame =
+    resident.get(name).flatten.flatMap(_.get(version))
+      .fold(persistedAt(name, version))(_.toDF(spark))
+
+  private def persistedAt(name: String, version: Long): DataFrame = {
     val dir = viewDir(name).resolve(s"v=$version")
     if (Files.exists(dir)) readParquet(dir, snapSchemas.get((name, version)))
     else {
@@ -403,8 +527,8 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   def commitState(name: String, df: DataFrame,
       knownDelta: Option[DataFrame] = None): Long = {
     val next = currentVersion(name).fold(0L)(_ + 1)
-    writeVersion(name, df, next, knownDelta)
-    commit(CommitTimeline.Entry(Map(name -> next)))
+    val z = writeVersion(name, df, next, knownDelta)
+    commit(CommitTimeline.Entry(Map(name -> next)), z.map(name -> _).toMap)
     next
   }
 
@@ -431,15 +555,21 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   /** Drop snapshots below the current version (the persist GC analog) —
     * keeping the base snapshot the current version reconstructs from when
     * it is delta-structured. Delta batches survive (they are the history
-    * SUBSCRIBE serves). */
+    * SUBSCRIBE serves). Versions below that base become unreadable, so
+    * their resident copies go first. */
   def vacuum(name: String): Unit = currentVersion(name).foreach { cur =>
     val dir = viewDir(name)
     val keep = baseVersionAtOrBelow(name, cur).getOrElse(cur)
+    resident.synchronized {
+      resident.get(name).flatten.foreach(w => resident.put(name, Some(w.rangeFrom(keep))))
+    }
     if (Files.exists(dir)) {
       Files.list(dir).forEach { p =>
         val n = p.getFileName.toString
-        if (n.startsWith("v=") && n.stripPrefix("v=").toLong < keep)
+        if (n.startsWith("v=") && n.stripPrefix("v=").toLong < keep) {
           deleteRecursive(p)
+          snapSchemas.remove((name, n.stripPrefix("v=").toLong))
+        }
       }
     }
   }
@@ -447,6 +577,7 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   /** Drop `name`: a tombstone entry commits the drop (so a reopened catalog
     * does not bring the view back), then its data dirs are deleted. */
   def dropView(name: String): Unit = {
+    resident.remove(name)
     defs.remove(name)
     exposed.remove(name)
     if (currentVersion(name).isDefined)

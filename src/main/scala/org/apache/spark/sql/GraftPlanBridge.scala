@@ -17,6 +17,12 @@ object GraftPlanBridge {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
+  /** `e` with every float and double inside it normalized (-0.0 to 0.0,
+    * every NaN to one NaN), as Spark normalizes grouping and join keys. */
+  def normalizeFloats(
+      e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** The catalyst expression behind a [[Column]] (classic sessions only). */
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
