@@ -3,6 +3,8 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.streaming.Changelog
@@ -22,8 +24,9 @@ import graft.views.ViewCatalog
   * Resume position = max committed batch dir (the reference's
   * `retrieve_upper_from_snapshots` over topic metadata): a replayed view
   * version is a no-op, and a version SKIPPED by a failed hook is healed by
-  * folding the view's stored deltas `(resume, version]` into this commit's
-  * frame batch — always ∝ |delta|.
+  * folding the view's stored deltas `(resume, version]`
+  * ([[ViewCatalog.changesSince]]) into this commit's frame batch — always
+  * ∝ |delta|.
   */
 object FileEnvelopeSink {
 
@@ -42,13 +45,6 @@ object FileEnvelopeSink {
         .map(_.stripPrefix("batch=").toLong)
         .foldLeft(-1L)(math.max)
       finally listing.close()
-    }
-  }
-
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
     }
   }
 
@@ -76,10 +72,7 @@ object FileEnvelopeSink {
       keys: Seq[String], envelope: String, delta: DataFrame, version: Long): Unit = {
     val resume = resumeUpper(path)
     if (resume >= version) return // replayed refresh
-    val eff =
-      if (resume == version - 1) delta
-      else Changelog.consolidate(Changelog.unionAll(
-        ((math.max(resume, -1L) + 1) to version).map(v => cat.deltaAt(view, v)): _*))
+    val eff = if (resume == version - 1) delta else cat.changesSince(view, resume, version)
     writeBatch(spark, eff, path, keys, envelope, version)
   }
 

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.streaming.Changelog
 import graft.views.ViewCatalog
 
 /** The commit step of a continuously-maintained Iceberg sink on a
@@ -17,8 +16,8 @@ import graft.views.ViewCatalog
   *    hook was handed. Work ∝ |delta|.
   *  - `resumeUpper < version - 1` — a prior hook invocation failed AFTER the
   *    view's pointer flip (the view commit is durable, the sink commit is
-  *    not). Self-heal: union the STORED deltas `(resumeUpper, version]`
-  *    ([[ViewCatalog.deltaAt]]) and apply their consolidation — still
+  *    not). Self-heal: apply the consolidated STORED deltas
+  *    `(resumeUpper, version]` ([[ViewCatalog.changesSince]]) — still
   *    delta-sized, never a snapshot diff.
   *  - `resumeUpper >= version` — a replayed refresh; `applyChangeSet`'s
   *    resume-upper check drops it (and we skip the plan entirely).
@@ -45,9 +44,7 @@ object IcebergViewSink {
       val resumeUpper = table.metadata.resumeUpper
       if (resumeUpper >= version) return // replayed refresh: recorded no-op
       val eff =
-        if (resumeUpper == version - 1) delta
-        else Changelog.consolidate(Changelog.unionAll(
-          ((math.max(resumeUpper, -1L) + 1) to version).map(v => cat.deltaAt(view, v)): _*))
+        if (resumeUpper == version - 1) delta else cat.changesSince(view, resumeUpper, version)
       val (inserts, goneKeys) = SinkEnvelopes.changes(eff, keys)
       table.applyChangeSet(inserts, goneKeys, keys, batchId = version)
       ()

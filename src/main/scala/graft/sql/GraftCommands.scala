@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType}
@@ -451,35 +451,17 @@ case class ShowMaterializedViewsCommand() extends LeafRunnableCommand {
   * next refresh by catching up from the sink's own recorded resume
   * position. The KEY must uniquely identify view rows. */
 case class CreateSinkCommand(name: String, view: String, path: String, keys: Seq[String])
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("sink", StringType, nullable = false)(),
-    AttributeReference("path", StringType, nullable = false)())
+    extends CreateSinkPrologue {
 
-  override def run(spark: SparkSession): Seq[Row] = {
-    val cat = GraftSqlCatalog.forSession(spark)
-    val sinks = GraftSqlCatalog.sinksFor(spark)
-    if (sinks.contains(name))
-      throw new IllegalArgumentException(s"sink $name already exists")
-    val seedVersion = cat.currentVersion(view).getOrElse(
-      throw new IllegalArgumentException(
-        s"cannot CREATE SINK: no committed version of $view"))
-    val snapshot = cat.table(view)
-    val missing = keys.filterNot(snapshot.columns.contains)
-    require(missing.isEmpty, s"KEY columns not in $view: ${missing.mkString(", ")}")
-    // no statsCols: upsert-sink KEY columns are equality-delete targets, not
-    // range-pruning targets — nothing ever range-scans the sink on them, and
-    // recording their bounds forced the distributed per-file stats job on
-    // EVERY sink commit where the footer-metadata path suffices (r19; tables
-    // that want pruning pass statsCols at create, e.g. sink_iceberg_prune)
-    new graft.sources.IcebergTable(spark, path)
-      .create(snapshot, batchId = seedVersion)
-    cat.addCommitHook(view, s"sink:$name", { (delta, _, version) =>
+  override def run(spark: SparkSession): Seq[Row] =
+    createSink(spark) { (snapshot, seedVersion) =>
+      // no statsCols: KEY columns are equality-delete targets, never range
+      // scanned, and their bounds would cost a stats job on every sink commit
+      new graft.sources.IcebergTable(spark, path).create(snapshot, batchId = seedVersion)
+      ()
+    } { (cat, delta, version) =>
       graft.sources.IcebergViewSink.applyCommit(spark, cat, view, path, keys, delta, version)
-    })
-    sinks.put(name, (view, path, keys))
-    Seq(Row(name, path))
-  }
+    }
 }
 
 /** `CREATE SINK <name> FROM <view> INTO FILE '<path>' KEY (k, ...)
@@ -492,10 +474,7 @@ case class CreateSinkCommand(name: String, view: String, path: String, keys: Seq
   * Replay and failure recovery follow the sink's own resume position
   * ([[graft.sources.FileEnvelopeSink]]). */
 case class CreateEnvelopeSinkCommand(name: String, view: String, path: String,
-    keys: Seq[String], envelope: String, format: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("sink", StringType, nullable = false)(),
-    AttributeReference("path", StringType, nullable = false)())
+    keys: Seq[String], envelope: String, format: String) extends CreateSinkPrologue {
 
   override def run(spark: SparkSession): Seq[Row] = {
     val env = envelope.toUpperCase
@@ -503,6 +482,32 @@ case class CreateEnvelopeSinkCommand(name: String, view: String, path: String,
     require((env, fmt) == ("UPSERT", "AVRO") || (env, fmt) == ("DEBEZIUM", "JSON"),
       s"supported combinations: ENVELOPE UPSERT FORMAT AVRO, " +
         s"ENVELOPE DEBEZIUM FORMAT JSON (got ENVELOPE $env FORMAT $fmt)")
+    createSink(spark) { (snapshot, seedVersion) =>
+      graft.sources.FileEnvelopeSink.create(spark, snapshot, path, keys, env, seedVersion)
+    } { (cat, delta, version) =>
+      graft.sources.FileEnvelopeSink.applyCommit(
+        spark, cat, view, path, keys, env, delta, version)
+    }
+  }
+}
+
+/** The steps both CREATE SINK forms share: the sink name must be new, the
+  * view must have a committed version and the KEY columns. `seed` writes
+  * the view's current snapshot at that version into the sink, `apply`
+  * becomes the view's post-commit hook (the commit's stored delta and
+  * version), and the sink is registered for DROP SINK. */
+trait CreateSinkPrologue extends LeafRunnableCommand {
+  def name: String
+  def view: String
+  def path: String
+  def keys: Seq[String]
+
+  override val output: Seq[Attribute] = Seq(
+    AttributeReference("sink", StringType, nullable = false)(),
+    AttributeReference("path", StringType, nullable = false)())
+
+  protected def createSink(spark: SparkSession)(seed: (DataFrame, Long) => Unit)(
+      apply: (graft.views.ViewCatalog, DataFrame, Long) => Unit): Seq[Row] = {
     val cat = GraftSqlCatalog.forSession(spark)
     val sinks = GraftSqlCatalog.sinksFor(spark)
     if (sinks.contains(name))
@@ -513,11 +518,8 @@ case class CreateEnvelopeSinkCommand(name: String, view: String, path: String,
     val snapshot = cat.table(view)
     val missing = keys.filterNot(snapshot.columns.contains)
     require(missing.isEmpty, s"KEY columns not in $view: ${missing.mkString(", ")}")
-    graft.sources.FileEnvelopeSink.create(spark, snapshot, path, keys, env, seedVersion)
-    cat.addCommitHook(view, s"sink:$name", { (delta, _, version) =>
-      graft.sources.FileEnvelopeSink.applyCommit(
-        spark, cat, view, path, keys, env, delta, version)
-    })
+    seed(snapshot, seedVersion)
+    cat.addCommitHook(view, s"sink:$name", { (delta, _, version) => apply(cat, delta, version) })
     sinks.put(name, (view, path, keys))
     Seq(Row(name, path))
   }

@@ -3,9 +3,8 @@ package graft.sql
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.streaming.{Changelog, Subscribe}
+import graft.streaming.Subscribe
 import graft.views.ViewCatalog
 
 /** Per-session [[ViewCatalog]] registry backing the SQL DDL surface — the
@@ -139,19 +138,15 @@ object GraftSqlCatalog {
   * snapshots. */
 object SubscribeFrame {
 
-  private def stamp(chg: DataFrame, ts: Long): DataFrame = {
-    val rest = chg.columns.filterNot(_ == Changelog.DiffCol).map(col)
-    chg.select((lit(ts).as(Subscribe.TsCol) +:
-      col(Changelog.DiffCol).as(Subscribe.DiffCol) +: rest.toIndexedSeq): _*)
-  }
-
   def apply(cat: ViewCatalog, name: String, asOf: Option[Long]): DataFrame = {
     val cur = cat.currentVersion(name).getOrElse(
       throw new IllegalArgumentException(s"cannot SUBSCRIBE: no committed version of $name"))
     val from = asOf.getOrElse(cur)
     require(from >= 0 && from <= cur, s"AS OF $from outside [0, $cur] for $name")
-    val snapshot = stamp(cat.zsetAt(name, from), from)
-    val steps = ((from + 1) to cur).map(v => stamp(cat.deltaAt(name, v), v))
+    val base = cat.zsetAt(name, from)
+    val columns = Subscribe.rowColumns(base)
+    val snapshot = Subscribe.stamp(base, from, columns)
+    val steps = ((from + 1) to cur).map(v => Subscribe.stamp(cat.deltaAt(name, v), v, columns))
     (snapshot +: steps).reduce(_.unionByName(_))
   }
 }

@@ -3,10 +3,9 @@ package graft.sql
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
-import graft.streaming.{Changelog, Subscribe}
+import graft.streaming.Subscribe
 
 /** Continuous SUBSCRIBE as a cursor (reference
   * `src/compute/src/sink/subscribe.rs` + the pgwire FETCH loop,
@@ -89,10 +88,7 @@ final class SubscriptionCursor(
     * per timestamp, which is exactly the envelope's grouping unit — so
     * FETCH is a pure queue drain with no driver-side DataFrame round-trip. */
   def enqueue(changelog: DataFrame, version: Long): Unit = {
-    val cols = viewSchema.fieldNames.map(col).toIndexedSeq
-    val stamped = changelog.select(
-      lit(version).cast("long").as(Subscribe.TsCol) +:
-        col(Changelog.DiffCol).cast("long").as(Subscribe.DiffCol) +: cols: _*)
+    val stamped = Subscribe.stamp(changelog, version, viewSchema.fieldNames.toSeq)
     envelope match {
       case None =>
         stamped.collect().foreach { r =>

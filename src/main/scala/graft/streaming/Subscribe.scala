@@ -27,12 +27,16 @@ object Subscribe {
   val TsCol = "mz_ts"
   val DiffCol = "mz_diff"
 
-  /** Stamp a micro-batch changelog as (mz_ts, mz_diff, row...). */
-  private def stamp(batch: DataFrame, batchId: Long): DataFrame = {
-    val rest = batch.columns.filterNot(_ == Changelog.DiffCol).map(col)
-    batch.select(
-      (lit(batchId).as(TsCol) +: col(Changelog.DiffCol).as(DiffCol) +: rest.toIndexedSeq): _*)
-  }
+  /** Stamp a changelog at logical time `ts` as `(mz_ts, mz_diff, row...)`,
+    * the row's columns in the order `columns` names — the one SUBSCRIBE
+    * row shape of the streaming tail, the batch frame and the cursor. */
+  def stamp(changelog: DataFrame, ts: Long, columns: Seq[String]): DataFrame =
+    changelog.select(lit(ts).as(TsCol) +:
+      col(Changelog.DiffCol).cast("long").as(DiffCol) +: columns.map(col): _*)
+
+  /** The row columns of a changelog, in its own order. */
+  def rowColumns(changelog: DataFrame): Seq[String] =
+    changelog.columns.toSeq.filterNot(_ == Changelog.DiffCol)
 
   /** Tail `changelog` (a streaming DataFrame with a `diff` column), handing
     * each stamped batch DataFrame to `consume` in timestamp order.
@@ -46,7 +50,7 @@ object Subscribe {
       .queryName(name)
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        consume(batchId, stamp(batch.toDF(), batchId))
+        consume(batchId, stamp(batch, batchId, rowColumns(batch)))
       }
     trigger.foreach(w.trigger)
     w.start()

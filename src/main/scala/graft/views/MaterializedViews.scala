@@ -6,6 +6,7 @@ import scala.collection.immutable.TreeMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 import graft.streaming.Changelog
 
@@ -27,9 +28,21 @@ import graft.streaming.Changelog
   *    consistent frontier" guarantee. A crash before the rename leaves only
   *    orphan data dirs, which the next commit of that version overwrites.
   *    Old versions stay until `vacuum()`.
+  *  - **One schema per incarnation** (the reference's `RelationDesc`):
+  *    version 0 fixes the column names, order and types (nullability
+  *    aside) until the next DROP or CREATE OR REPLACE. A commit of other
+  *    columns fails before it writes anything; a stored delta batch has
+  *    those columns plus `diff: bigint`. Every read states the schema.
+  *  - **One layout rule.** Version n reads the `v=<n>` snapshot of n itself
+  *    for a changelog-valued collection (a `diff` column) and of
+  *    n − n % `compactEvery` otherwise, plus the `delta=` batches above it.
+  *    Reads, resident seeds, compaction and [[vacuum]]'s keep follow it; no
+  *    directory listing decides them.
   *  - **One catalog instance per `baseDir`.** The instance owns the write
   *    clock ([[CommitTimeline]]); a catalog reopened over the directory
-  *    rebuilds every view's and group's state from the timeline alone.
+  *    rebuilds every view's and group's state from the timeline alone, and
+  *    learns each view's schema on first use from one parquet footer of its
+  *    current version (the schema Spark writes there; no Spark job).
   *  - **Full refresh** re-runs the defining query (the reference's recompute
   *    path for non-incrementalizable plans).
   *  - **Incremental refresh** applies a `(row..., diff)` changelog batch
@@ -87,20 +100,14 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   private val commitHooks =
     TrieMap.empty[String, TrieMap[String, (DataFrame, DataFrame, Long) => Unit]]
 
-  // schemas recorded at write time, so read-backs skip parquet
-  // schema-inference (each un-schema'd spark.read.parquet launches a footer
-  // job — pure driver/job latency in the commit chain). Metadata only; a
-  // catalog re-opened over a pre-existing baseDir simply misses and infers.
-  // `snapSchemas` holds an entry exactly for each `v=<n>` dir this instance
-  // wrote and has not vacuumed.
-  private val snapSchemas =
-    TrieMap.empty[(String, Long), org.apache.spark.sql.types.StructType]
-  private val deltaSchemas =
-    TrieMap.empty[(String, Long), org.apache.spark.sql.types.StructType]
+  // view -> the schema of its incarnation, nullability aside: recorded by
+  // the version-0 write, or read once from one parquet footer by a catalog
+  // opened over an existing directory (see [[schemaOf]])
+  private val schemas = TrieMap.empty[String, StructType]
 
-  private def readParquet(p: Path,
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(p.toString)
+  // every read states its schema, so none runs a schema-inference job
+  private def readStored(p: Path, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(p.toString)
 
   // view -> its resident versions: absent until the incarnation's first
   // delta commit, None once it is persist-only, else the window of the last
@@ -109,6 +116,7 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   private val resident = TrieMap.empty[String, Option[TreeMap[Long, ResidentZSet]]]
 
   private def viewDir(name: String): Path = Paths.get(baseDir, name)
+  private def snapDir(name: String, v: Long): Path = viewDir(name).resolve(s"v=$v")
   private def deltaDir(name: String, v: Long): Path =
     viewDir(name).resolve(s"delta=$v")
 
@@ -144,10 +152,8 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   def commitGroup(group: String, batchId: Long, dfs: Map[String, DataFrame]): Boolean = {
     val curBatch = lastBatchId(group)
     if (batchId >= 0 && curBatch >= batchId) return false // replayed batch
-    val written = dfs.map { case (n, df) =>
-      val next = currentVersion(n).fold(0L)(_ + 1)
-      n -> (next, writeVersion(n, df, next, None))
-    }
+    val nexts = dfs.map { case (n, df) => n -> nextVersion(n, df, None) } // before any write
+    val written = dfs.map { case (n, df) => n -> (nexts(n), writeVersion(n, df, nexts(n), None)) }
     commit(CommitTimeline.Entry(written.map { case (n, (v, _)) => n -> v },
       group = Some(group -> (if (batchId >= 0) batchId else curBatch))),
       written.collect { case (n, (_, Some(z))) => n -> z })
@@ -159,56 +165,69 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
 
   // ---- delta-structured persist -------------------------------------------
   //
-  // The reference's persist stores an MV as an LSM of DELTA batches; full
-  // snapshots are derived artifacts produced by background compaction
-  // (`src/persist-client/src/lib.rs`). Mirroring that: a commit whose delta
-  // the engine already knows (incremental refresh, temporal advance) writes
-  // ONLY the `delta=<n>` batch — work and bytes ∝ |delta|, never |view| —
-  // and every `compactEvery`-th version also writes a full `v=<n>` snapshot
-  // (the compaction event) so merge-on-read chains stay bounded. Reads of a
-  // version without its own snapshot reconstruct base ⊎ deltas via the
-  // changelog algebra. Full refreshes (already O(|view|)) keep writing
-  // snapshots directly.
+  // The reference's persist stores an MV as an LSM of DELTA batches, its
+  // snapshots derived by compaction (`src/persist-client/src/lib.rs`). Here
+  // a snapshot-valued view's commit writes its `delta=<n>` batch — work and
+  // bytes ∝ |delta| when the engine knows the changelog — and every
+  // `compactEvery`-th also a `v=<n>` snapshot (the class doc's layout rule).
 
   /** Delta-only commits tolerated on top of a base snapshot before a commit
     * also compacts to a full snapshot: merge-on-read chains stay at most 3
     * deltas long, and one snapshot write is amortized over four commits. */
   private val compactEvery = 4L
 
-  /** Greatest version at or below `v` that has a full snapshot dir. */
-  private def baseVersionAtOrBelow(name: String, v: Long): Option[Long] = {
-    val dir = viewDir(name)
-    if (!Files.exists(dir)) None
-    else {
-      val s = Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        val bases = s.iterator.asScala.flatMap { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("v=")) Some(n.stripPrefix("v=").toLong).filter(_ <= v)
-          else None
-        }.toSeq
-        if (bases.isEmpty) None else Some(bases.max)
-      } finally s.close()
+  /** The schema of `name`'s incarnation, which every version keeps. A
+    * catalog opened over an existing directory reads it once per view from
+    * the schema Spark writes into each parquet footer, of the current
+    * version's `v=<n>` snapshot or else its `delta=<n>` batch: no Spark
+    * job. */
+  private def schemaOf(name: String): StructType = schemas.getOrElseUpdate(name, {
+    val cur = currentVersion(name).getOrElse(
+      throw new IllegalArgumentException(s"materialized view not found: $name"))
+    if (Files.exists(snapDir(name, cur))) footerSchema(snapDir(name, cur))
+    else StructType(footerSchema(deltaDir(name, cur)).filterNot(_.name == Changelog.DiffCol))
+  })
+
+  /** The schema of `name`'s stored delta batches. */
+  private def deltaSchema(name: String): StructType =
+    schemaOf(name).add(Changelog.DiffCol, LongType)
+
+  /** A changelog-valued collection: its rows carry their own `diff`. */
+  private def changelogValued(name: String): Boolean =
+    schemaOf(name).fieldNames.contains(Changelog.DiffCol)
+
+  /** The version whose `v=<n>` snapshot version `v` of `name` is read
+    * from: `v` itself for a changelog-valued collection, which writes a
+    * snapshot on every commit, else the last compaction at or below `v`. */
+  private def baseOf(name: String, v: Long): Long =
+    if (changelogValued(name)) v else v - v % compactEvery
+
+  /** The version a commit of `df`, with its `known` changelog, makes of
+    * `name`. A commit after version 0 must keep the incarnation's column
+    * names, order and types (nullability aside), or it fails here, before
+    * anything is written. */
+  private def nextVersion(name: String, df: DataFrame, known: Option[DataFrame]): Long = {
+    val next = currentVersion(name).fold(0L)(_ + 1)
+    if (next > 0L) {
+      requireColumns(name, df.schema, schemaOf(name))
+      known.foreach(d => requireColumns(name, d.schema, deltaSchema(name)))
     }
+    next
   }
 
-  /** Persist version `next` of `name` as a delta batch (plus periodic
-    * compaction) whenever a changelog exists for the commit; only version 0
-    * and changelog-VALUED collections write full snapshots.
-    *
-    * Commits that know their changelog (incremental refresh, temporal
-    * advance) always took the delta path. Full refreshes used to write the
-    * new snapshot AND then diff it against the old one into the stored delta
-    * — two sequential write jobs per refresh. The generic diff is itself a
-    * complete changelog of the commit, so the full-refresh path now writes
-    * ONLY that delta (one job, the persist-LSM shape the reference uses):
-    * the snapshot of a delta-structured version is the derived artifact
-    * [[tableAt]] reconstructs, and every `compactEvery`-th commit still
-    * materializes it so merge-on-read chains stay bounded.
-    *
-    * Returns the resident copy of the new version, for [[commit]] to
-    * install, when the view is resident. */
+  private def requireColumns(name: String, got: StructType, want: StructType): Unit = {
+    def columns(s: StructType) =
+      s.fields.toSeq.map(f => f.name -> graft.Schemas.nullableType(f.dataType))
+    require(columns(got) == columns(want),
+      s"cannot commit ${got.simpleString} to $name, whose schema is ${want.simpleString}")
+  }
+
+  /** Persist version `next` of `name`: version 0 and a changelog-valued
+    * collection's versions as `v=<n>` snapshots, any other as its
+    * `delta=<n>` batch — the `known` changelog, or for a full refresh the
+    * generic diff against version n−1 — plus the `v=<n>` compaction on
+    * every `compactEvery`-th. Returns the resident copy of the new
+    * version, for [[commit]] to install, when the view is resident. */
   private def writeVersion(name: String, df: DataFrame, next: Long,
       known: Option[DataFrame]): Option[ResidentZSet] = {
     if (next == 0L) {
@@ -217,9 +236,9 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
       // crashed commit — is removed rather than extended
       resident.remove(name)
       deleteRecursive(viewDir(name))
-      forgetSchemas(name)
+      schemas.put(name, graft.Schemas.nullable(df.schema))
     }
-    if (next == 0L || df.columns.contains(Changelog.DiffCol)) {
+    if (next == 0L || changelogValued(name)) {
       // version 0 (deltaAt derives its changelog from the snapshot) and
       // changelog-valued collections (their rows ARE the delta algebra;
       // a second diff column would collide) stay snapshot-structured
@@ -236,19 +255,13 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
         Changelog.negate(Changelog.fromRows(tableAt(name, next - 1))))))
     val deltaPath = deltaDir(name, next)
     delta.write.mode("overwrite").parquet(deltaPath.toString)
-    // asNullable: schema inference over parquet always yields nullable
-    // fields, so the recorded schema must match what a read would infer
-    val deltaSchema = graft.Schemas.nullable(delta.schema)
-    deltaSchemas.put((name, next), deltaSchema)
     // the new resident version is version n−1 ⊎ the stored batch, read back
     // only when its footers show it fits the budget: a larger delta never
     // reaches the driver
-    val derived = prev.filter(z => graft.Schemas.nullable(df.schema) == z.schema &&
-        storedRows(deltaPath) <= rowsFree(name))
-      .flatMap(_.plus(readParquet(deltaPath, Some(deltaSchema)).collect(), deltaSchema))
+    val derived = prev.filter(_ => storedRows(deltaPath) <= rowsFree(name))
+      .flatMap(_.plus(readStored(deltaPath, deltaSchema(name)).collect()))
     if (prev.isDefined && derived.isEmpty) resident.put(name, None) // persist-only from here on
-    val base = baseVersionAtOrBelow(name, next - 1).getOrElse(-1L)
-    if (next - base < compactEvery) derived
+    if (next % compactEvery != 0L) derived
     else {
       // the compaction writes the resident rows as they were inserted, so
       // the merged plan is not run again
@@ -258,10 +271,8 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     }
   }
 
-  private def writeSnapshot(name: String, v: Long, df: DataFrame): Unit = {
-    df.write.mode("overwrite").parquet(viewDir(name).resolve(s"v=$v").toString)
-    snapSchemas.put((name, v), graft.Schemas.nullable(df.schema))
-  }
+  private def writeSnapshot(name: String, v: Long, df: DataFrame): Unit =
+    df.write.mode("overwrite").parquet(snapDir(name, v).toString)
 
   /** The resident copy of committed version `v` of `name`, if the view is
     * resident. The first delta commit of an incarnation seeds it from the
@@ -273,33 +284,42 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   private def residentCopy(name: String, v: Long): Option[ResidentZSet] =
     resident.get(name) match {
       case Some(window) => window.flatMap(_.get(v))
+      case None if baseOf(name, v) != v => None
       case None =>
-        val dir = viewDir(name).resolve(s"v=$v")
-        if (!Files.exists(dir)) None
-        else {
-          val z = Option.when(storedRows(dir) <= rowsFree(name)) {
-            val snap = readParquet(dir, snapSchemas.get((name, v)))
-            ResidentZSet.of(snap.schema, snap.collect())
-          }.flatten
-          if (z.exists(s => install(name, TreeMap(v -> s)))) z
-          else { resident.put(name, None); None }
-        }
+        val dir = snapDir(name, v)
+        val z = Option.when(storedRows(dir) <= rowsFree(name)) {
+          ResidentZSet.of(schemaOf(name), readStored(dir, schemaOf(name)).collect())
+        }.flatten
+        if (z.exists(s => install(name, TreeMap(v -> s)))) z
+        else { resident.put(name, None); None }
     }
 
-  /** Rows the parquet files under `dir` hold, from their footers: no job. */
-  private def storedRows(dir: Path): Long = {
+  /** `read` applied to the footers of at most `files` parquet files under
+    * `dir`: no Spark job. */
+  private def footers[A](dir: Path, files: Int = Int.MaxValue)(
+      read: org.apache.parquet.hadoop.ParquetFileReader => A): List[A] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val s = Files.list(dir)
     try {
       import scala.jdk.CollectionConverters._
-      s.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet")).map { p =>
+      s.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet")).take(files).map { p =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
             new org.apache.hadoop.fs.Path(p.toUri), conf))
-        try r.getRecordCount finally r.close()
-      }.sum
+        try read(r) finally r.close()
+      }.toList
     } finally s.close()
   }
+
+  /** Rows the parquet files under `dir` hold. */
+  private def storedRows(dir: Path): Long = footers(dir)(_.getRecordCount).sum
+
+  /** The schema Spark recorded in a parquet footer under `dir` (the
+    * `org.apache.spark.sql.parquet.row.metadata` key), all nullable. */
+  private def footerSchema(dir: Path): StructType = footers(dir, 1)(r => Option(
+      r.getFooter.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")))
+    .flatten.headOption.map(j => graft.Schemas.nullable(DataType.fromJson(j).asInstanceOf[StructType]))
+    .getOrElse(throw new IllegalStateException(s"no Spark schema in the parquet footers of $dir"))
 
   /** Rows of [[ResidentZSet.RowBudget]] the other views' windows leave. */
   private def rowsFree(name: String): Long =
@@ -334,17 +354,23 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   }
 
   /** The stored commit changelog `version-1 → version` — `(row..., diff)`.
-    * Version 0 is [[zsetAt]] itself. Falls back to the Z-set difference of
-    * the two versions for changelog-valued collections and pre-delta
-    * history. Delta dirs survive [[vacuum]] (they are the history SUBSCRIBE
-    * serves). */
-  def deltaAt(name: String, version: Long): DataFrame = {
-    val d = deltaDir(name, version)
-    if (Files.exists(d)) readParquet(d, deltaSchemas.get((name, version)))
-    else if (version == 0L) zsetAt(name, 0L)
+    * Version 0 is [[zsetAt]] itself. A changelog-valued collection stores
+    * no delta batches, so its changelog is the Z-set difference of the two
+    * versions. Delta dirs survive [[vacuum]] (they are the history
+    * SUBSCRIBE serves). */
+  def deltaAt(name: String, version: Long): DataFrame =
+    if (version == 0L) zsetAt(name, 0L)
+    else if (!changelogValued(name)) readStored(deltaDir(name, version), deltaSchema(name))
     else Changelog.consolidate(Changelog.unionAll(
       zsetAt(name, version), Changelog.negate(zsetAt(name, version - 1))))
-  }
+
+  /** The consolidated changelog `after → upTo` of `name`: the union of the
+    * stored commit changelogs of versions `(after, upTo]` ([[deltaAt]]),
+    * starting from version 0's snapshot when `after` is below 0 — what a
+    * sink that last applied version `after` catches up with. */
+  def changesSince(name: String, after: Long, upTo: Long): DataFrame =
+    Changelog.consolidate(Changelog.unionAll(
+      ((math.max(after, -1L) + 1) to upTo).map(v => deltaAt(name, v)): _*))
 
   /** Version `version` of `name` as a Z-set `(row..., diff)`: a
     * changelog-valued collection (one with a `diff` column) as stored — its
@@ -448,29 +474,22 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
       .fold(persistedAt(name, version))(_.toDF(spark))
 
   private def persistedAt(name: String, version: Long): DataFrame = {
-    val dir = viewDir(name).resolve(s"v=$version")
-    if (Files.exists(dir)) readParquet(dir, snapSchemas.get((name, version)))
+    val base = baseOf(name, version)
+    if (!Files.exists(snapDir(name, base)))
+      throw new IllegalArgumentException(s"version $version of $name not found (vacuumed?)")
+    val snap = readStored(snapDir(name, base), schemaOf(name))
+    if (base == version) snap
     else {
       // merge-on-read: a delta-structured version derives its snapshot from
-      // the nearest base snapshot plus the stored delta batches above it —
-      // one consolidation shuffle over |base| + |chain deltas|, with chain
+      // its base snapshot plus the stored delta batches above it — one
+      // consolidation shuffle over |base| + |chain deltas|, with chain
       // length bounded by `compactEvery`
-      val base = baseVersionAtOrBelow(name, version).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $version of $name not found (vacuumed?)"))
-      val chain = ((base + 1) to version).map { v =>
-        val d = deltaDir(name, v)
-        require(Files.exists(d),
-          s"version $version of $name not found (missing delta=$v)")
-        readParquet(d, deltaSchemas.get((name, v)))
-      }
-      val baseChg = Changelog.fromRows(
-        readParquet(viewDir(name).resolve(s"v=$base"), snapSchemas.get((name, base))))
+      val chain = ((base + 1) to version).map(v => readStored(deltaDir(name, v), deltaSchema(name)))
       // single all-columns aggregation: the consolidated result is a valid
       // snapshot (net multiplicities ≥ 0 by the commit invariants), so the
       // expansion skips threshold()'s second exchange over the same rows
       Changelog.toRowsOfConsolidated(Changelog.consolidate(
-        Changelog.unionAll((baseChg +: chain).toIndexedSeq: _*)))
+        Changelog.unionAll((Changelog.fromRows(snap) +: chain): _*)))
     }
   }
 
@@ -507,6 +526,9 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
       .agg(sum(col("support")).as("support"),
         sumColToValue.keys.map(s => sum(col(s)).as(s)).toSeq: _*)
       .filter(col("support") > 0)
+      // back in the view's column order and types: a sum over a
+      // diff-weighted product widens (decimal(28,2) to decimal(38,2))
+      .select(schemaOf(name).fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
     // the engine KNOWS which state rows changed: exactly the delta's keys.
     // The stored commit changelog is retract(old row) + insert(new row) per
     // changed key — two semi-join-pruned scans whose OUTPUT is ∝ |delta
@@ -526,7 +548,7 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * instead of the generic snapshot diff. */
   def commitState(name: String, df: DataFrame,
       knownDelta: Option[DataFrame] = None): Long = {
-    val next = currentVersion(name).fold(0L)(_ + 1)
+    val next = nextVersion(name, df, knownDelta)
     val z = writeVersion(name, df, next, knownDelta)
     commit(CommitTimeline.Entry(Map(name -> next)), z.map(name -> _).toMap)
     next
@@ -559,17 +581,14 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * their resident copies go first. */
   def vacuum(name: String): Unit = currentVersion(name).foreach { cur =>
     val dir = viewDir(name)
-    val keep = baseVersionAtOrBelow(name, cur).getOrElse(cur)
+    val keep = baseOf(name, cur)
     resident.synchronized {
       resident.get(name).flatten.foreach(w => resident.put(name, Some(w.rangeFrom(keep))))
     }
     if (Files.exists(dir)) {
       Files.list(dir).forEach { p =>
         val n = p.getFileName.toString
-        if (n.startsWith("v=") && n.stripPrefix("v=").toLong < keep) {
-          deleteRecursive(p)
-          snapSchemas.remove((name, n.stripPrefix("v=").toLong))
-        }
+        if (n.startsWith("v=") && n.stripPrefix("v=").toLong < keep) deleteRecursive(p)
       }
     }
   }
@@ -583,12 +602,7 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     if (currentVersion(name).isDefined)
       timeline.commit(CommitTimeline.Entry(dropped = Seq(name)))
     deleteRecursive(viewDir(name))
-    forgetSchemas(name)
-  }
-
-  private def forgetSchemas(name: String): Unit = {
-    snapSchemas.keys.filter(_._1 == name).foreach(snapSchemas.remove)
-    deltaSchemas.keys.filter(_._1 == name).foreach(deltaSchemas.remove)
+    schemas.remove(name)
   }
 
   private def deleteRecursive(p: Path): Unit =

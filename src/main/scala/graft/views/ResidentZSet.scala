@@ -49,18 +49,17 @@ private[views] final class ResidentZSet private (
   /** This version, read as the raw rows a `v=<n>` snapshot of it holds. */
   def asStored: ResidentZSet = new ResidentZSet(schema, rows, size, added, stored = true)
 
-  /** `this ⊎ delta` for `(column..., diff)` rows of `deltaSchema`, whose
-    * columns are matched to the view's by name. None — the caller evicts —
-    * when the columns do not match or `diff` is not a `bigint`, when a
+  /** `this ⊎ delta` for rows of the view's columns followed by their
+    * `diff: bigint`. None — the caller evicts — when a column type has no
+    * byte-canonical row form (maps, variants, user-defined types), when a
     * multiplicity would go negative (the delta retracts a row the version
     * does not hold), or when an insert's bytes differ from the held row of
     * the same SQL value (-0.0 for a held 0.0: one key cannot serve both
     * forms as persist stores them). */
-  def plus(delta: Array[Row], deltaSchema: StructType): Option[ResidentZSet] = {
-    val diffAt = deltaSchema.fieldNames.indexOf(Changelog.DiffCol)
-    if (diffAt < 0 || deltaSchema(diffAt).dataType != LongType) return None
-    projections(deltaSchema, schema).flatMap { case (rawOf, keyOf) =>
-      val encode = ExpressionEncoder(deltaSchema).createSerializer()
+  def plus(delta: Array[Row]): Option[ResidentZSet] = {
+    val diffAt = schema.length
+    projections(schema).flatMap { case (rawOf, keyOf) =>
+      val encode = ExpressionEncoder(schema.add(Changelog.DiffCol, LongType)).createSerializer()
       var m = rows
       var n = size
       var ok = true
@@ -101,34 +100,26 @@ private[views] object ResidentZSet {
     window.headOption.fold(0L)(_.size) + window.iterator.drop(1).map(_.added).sum
 
   /** A `stored` version from a snapshot's rows (each at multiplicity 1):
-    * the empty Z-set plus the snapshot as an all-inserts delta. None when
-    * a column type has no byte-canonical row form (maps, variants,
-    * user-defined types) or the snapshot holds one SQL value in two byte
-    * forms. */
-  def of(schema: StructType, snapshot: Array[Row]): Option[ResidentZSet] = {
-    val s = graft.Schemas.nullable(schema)
-    new ResidentZSet(s, HashMap.empty, 0L, 0L, stored = true).plus(
-      snapshot.map(r => Row.fromSeq(r.toSeq :+ 1L)), s.add(Changelog.DiffCol, LongType))
-      .map(_.asStored)
-  }
+    * the empty Z-set plus the snapshot as an all-inserts delta, so None
+    * when [[plus]] refuses it (the snapshot holds one SQL value in two
+    * byte forms, or a column cannot be a key). */
+  def of(schema: StructType, snapshot: Array[Row]): Option[ResidentZSet] =
+    new ResidentZSet(graft.Schemas.nullable(schema), HashMap.empty, 0L, 0L, stored = true)
+      .plus(snapshot.map(r => Row.fromSeq(r.toSeq :+ 1L))).map(_.asStored)
 
   /** A row as inserted and its multiplicity. */
   final class Held(val raw: UnsafeRow, val n: Long)
 
-  /** Projections from rows of `from` to the raw and to the normalized rows
-    * of `view`'s columns, matched by name and type; None if `from` lacks
-    * one of them. */
-  private def projections(from: StructType,
-      view: StructType): Option[(UnsafeProjection, UnsafeProjection)] = {
-    val bound = view.fields.toSeq.flatMap { f =>
-      Some(from.fieldNames.indexOf(f.name)).filter(i => i >= 0 && keyable(f.dataType) &&
-          graft.Schemas.nullableType(from(i).dataType) == graft.Schemas.nullableType(f.dataType))
-        .map(i => BoundReference(i, from(i).dataType, true))
+  /** Projections from `(column..., diff)` rows to the raw and to the
+    * normalized rows of `view`'s columns; None if a column cannot be a
+    * key. */
+  private def projections(view: StructType): Option[(UnsafeProjection, UnsafeProjection)] =
+    Option.when(view.fields.forall(f => keyable(f.dataType))) {
+      val bound = view.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        BoundReference(i, f.dataType, true) }
+      (UnsafeProjection.create(bound),
+        UnsafeProjection.create(bound.map(GraftPlanBridge.normalizeFloats)))
     }
-    if (bound.size != view.size) None
-    else Some((UnsafeProjection.create(bound),
-      UnsafeProjection.create(bound.map(GraftPlanBridge.normalizeFloats))))
-  }
 
   private def keyable(t: DataType): Boolean = t match {
     case s: StructType => s.fields.forall(f => keyable(f.dataType))

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
+
 import graft.streaming.Changelog
 import graft.views.ViewCatalog
 
@@ -112,6 +116,70 @@ class MaterializedViewSpec extends SparkSpec {
     cat.vacuum("acc")
     assert(Files.exists(dir.resolve("acc/v=4")))
     assert(cat.table("acc").count() == 5005)
+  }
+
+  test("an incremental refresh commits in the view's types: a decimal sum keeps its precision") {
+    val dir = tempDir("graft-mv-decimal").toString
+    val cat = new ViewCatalog(spark, dir)
+    def rows(xs: (String, String)*) =
+      xs.toDF("k", "x").select(col("k"), col("x").cast("decimal(18,2)").as("x"))
+    // sum(decimal(18,2)) is decimal(28,2); the refresh's diff-weighted sum
+    // of decimal(18,2) * bigint is decimal(38,2)
+    cat.createMaterializedView("mv_spec_dec", _ => rows("a" -> "1.25", "b" -> "2.50")
+      .groupBy(col("k")).agg(count(lit(1)).as("support"), sum(col("x")).as("sum_x")))
+    cat.exposeAsTempView("mv_spec_dec")
+    (1 to 5).foreach { i =>
+      cat.refreshIncrementalAccumulable("mv_spec_dec", Changelog.fromRows(rows("a" -> s"$i.10")),
+        Seq("k"), Map("sum_x" -> "x"))
+    }
+    val reopened = new ViewCatalog(spark, dir)
+    (0L to 5L).foreach { v =>
+      assert(cat.tableAt("mv_spec_dec", v).schema("sum_x").dataType == DecimalType(28, 2), s"version $v")
+      assert(reopened.tableAt("mv_spec_dec", v).schema("sum_x").dataType == DecimalType(28, 2), s"version $v")
+    }
+    assert(spark.table("mv_spec_dec").schema("sum_x").dataType == DecimalType(28, 2))
+    assert(cat.table("mv_spec_dec").inputFiles.isEmpty, "the view was evicted from memory")
+    assert(cat.table("mv_spec_dec").filter(col("k") === "a").select("sum_x").as[BigDecimal].head() ==
+      BigDecimal("16.75"))
+  }
+
+  test("a commit with another schema fails and writes nothing") {
+    val dir = tempDir("graft-mv-schema")
+    val cat = new ViewCatalog(spark, dir.toString)
+    cat.commitState("s", Seq((1L, "a")).toDF("k", "v"))
+    def listing: Seq[String] = {
+      val l = Files.list(dir.resolve("s"))
+      try l.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally l.close()
+    }
+    val before = listing
+    val next = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    Seq(
+      () => cat.commitState("s", Seq((1L, 2L)).toDF("k", "v")),
+      () => cat.commitState("s", Seq(("a", 1L)).toDF("v", "k")),
+      () => cat.commitState("s", Seq((1L, "a", 1L)).toDF("k", "v", "w")),
+      () => cat.commitState("s", next, Some(Changelog.fromRows(Seq(2L).toDF("k")))),
+      () => cat.commitGroup("g", -1L, Map("t" -> next, "s" -> next.select("v", "k")))
+    ).foreach(c => intercept[IllegalArgumentException](c()))
+    assert(cat.currentVersion("s").contains(0L))
+    assert(cat.currentVersion("t").isEmpty && !Files.exists(dir.resolve("t")))
+    assert(listing == before)
+    // nullability is not part of the schema
+    cat.commitState("s", Seq((Option(2L), "b")).toDF("k", "v"))
+    assert(cat.table("s").as[(Long, String)].collect().toSeq == Seq((2L, "b")))
+  }
+
+  test("CREATE OR REPLACE starts an incarnation with a new schema") {
+    val dir = tempDir("graft-mv-replace").toString
+    val cat = new ViewCatalog(spark, dir)
+    cat.createMaterializedView("r", _ => Seq((1L, "a")).toDF("k", "v"))
+    cat.commitState("r", Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    cat.createMaterializedView("r", _ => Seq((1.5, 1L), (2.5, 2L)).toDF("x", "y"))
+    cat.refreshFull("r")
+    assert(cat.currentVersion("r").contains(1L))
+    intercept[IllegalArgumentException](cat.commitState("r", Seq((1L, "a")).toDF("k", "v")))
+    val reopened = new ViewCatalog(spark, dir)
+    assert(reopened.table("r").as[(Double, Long)].collect().toSet == Set((1.5, 1L), (2.5, 2L)))
+    assert(reopened.deltaAt("r", 1L).count() == 0L)
   }
 
   test("vacuum drops superseded versions, keeps current") {

@@ -16,7 +16,8 @@ import graft.views.ViewCatalog
   * no Spark job: the SQL point lookup through the view's temp name, and
   * AS OF reads of the last four versions. Older versions still scan
   * parquet, and so does a view that does not fit the catalog's row
-  * budget. */
+  * budget. A catalog opened over an existing directory builds those
+  * persist reads without a job too: it knows each view's schema. */
 class ResidentViewJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -102,6 +103,25 @@ class ResidentViewJobsSpec extends SparkSpec {
     var got: Array[Row] = null
     assert(jobsOf { got = read(2) } > 0)
     assert(got.toSet == Set(Row(1L, 13L), Row(2L, 20L)))
+  }
+
+  test("a catalog opened over an existing directory builds merge-on-read reads without a job") {
+    val dir = tempDir("graft-resident-reopen").toString
+    val live = new ViewCatalog(spark, dir)
+    live.createMaterializedView("reopen_agg", _ =>
+      Seq((1L, 1L, 10L), (2L, 1L, 20L), (3L, 1L, 30L)).toDF("pkey", "support", "sum_qty"))
+    (1 to 3).foreach(i => refresh(live, "reopen_agg", (1L, i.toLong), (10L + i, 1L)))
+    // version 3 is v=0 plus delta=1..3; nothing of it is resident in a new catalog
+    val reopened = new ViewCatalog(spark, dir)
+    var table: org.apache.spark.sql.DataFrame = null
+    var delta: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { table = reopened.tableAt("reopen_agg", 3L) } == 0)
+    assert(jobsOf { delta = reopened.deltaAt("reopen_agg", 2L) } == 0)
+    assert(table.inputFiles.exists(_.contains("v=0")), "version 3 must read persist")
+    assert(table.collect().toSet == live.tableAt("reopen_agg", 3L).collect().toSet)
+    assert(delta.collect().toSet == live.deltaAt("reopen_agg", 2L).collect().toSet)
+    assert(delta.collect().toSet == Set(Row(1L, 2L, 11L, -1L), Row(1L, 3L, 13L, 1L),
+      Row(12L, 1L, 1L, 1L)))
   }
 
   test("a retraction of -0.0 cancels a stored 0.0 without evicting the view") {

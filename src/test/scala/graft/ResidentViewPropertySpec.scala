@@ -24,11 +24,13 @@ import graft.views.ViewCatalog
   * fail. Rows carry doubles with -0.0 and NaN and repeat, and retractions
   * name -0.0 for a stored 0.0.
   *
-  * About 26 s of test time (21 s and 5 s) on a 4-core host at load 3,
-  * the session already started. Most of it is the persist side: a
-  * reopened catalog has no recorded schemas, so each parquet dir a read
-  * touches costs a schema-inference job, and a step reads every version.
-  * Samples are few for that reason; the racing-reader test adds
+  * About 39 s of test time (35.3 s and 4.1 s) on a 4-core host at load
+  * about 1, in a run where it started the Spark session (about 13 s of
+  * the first test); 41.6 s (37.0 s and 4.6 s) in the same run shape
+  * before a reopened catalog knew each view's schema, when each parquet
+  * dir a read touched cost a schema-inference job. Most of the time is
+  * the persist side's merge-on-read jobs, since a step reads every
+  * version; samples are few for that reason. The racing-reader test adds
   * compaction commits. */
 class ResidentViewPropertySpec extends SparkSpec {
   import ResidentViewPropertySpec._
