@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
@@ -49,6 +50,16 @@ object ExactlyOnceSink {
       fs.create(marker, true).close()
       true
     }
+  }
+
+  /** The highest batch id with a `_committed_<id>` marker under `dir`, -1
+    * if none: the progress record, never the data directories, which a
+    * failed write can leave behind. */
+  def lastCommitted(dir: String, conf: Configuration): Long = {
+    val base = new Path(dir)
+    Option(base.getFileSystem(conf).globStatus(new Path(base, "_committed_*")))
+      .fold(-1L)(_.map(_.getPath.getName.stripPrefix("_committed_").toLong)
+        .foldLeft(-1L)(math.max))
   }
 
   /** Attach the sink to a streaming DataFrame. */

@@ -3,8 +3,6 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.streaming.Changelog
@@ -14,39 +12,29 @@ import graft.views.ViewCatalog
   * `src/storage/src/sink/kafka.rs` with the topic replaced by a directory —
   * the transport swap the ARCHITECTURE.md connector contract documents).
   *
-  * Layout: `<path>/batch=<viewVersion>/` holds one commit's framed
-  * key/value messages as parquet; Spark's partition discovery exposes
-  * `batch` as a column, so a reader gets `(key, value, batch)` — offset
-  * order — from one scan of the root. `_registry.tsv` (Avro envelope only)
-  * carries the key/value writer schemas under their Confluent ids, so the
-  * engine's own `registry_decode` replays the frames.
+  * Layout: [[ExactlyOnceSink]]'s. Each commit's framed key/value messages
+  * are staged, renamed to `<path>/batch=<viewVersion>/` and then marked
+  * `_committed_<viewVersion>`; Spark's partition discovery exposes `batch`
+  * as a column and hides the `_`/`.`-prefixed entries, so a reader gets
+  * `(key, value, batch)` — offset order — of the renamed batches from one
+  * scan of the root. `_registry.tsv` (Avro envelope only) carries the
+  * key/value writer schemas under their Confluent ids, so the engine's own
+  * `registry_decode` replays the frames.
   *
-  * Resume position = max committed batch dir (the reference's
-  * `retrieve_upper_from_snapshots` over topic metadata): a replayed view
-  * version is a no-op, and a version SKIPPED by a failed hook is healed by
-  * folding the view's stored deltas `(resume, version]`
-  * ([[ViewCatalog.changesSince]]) into this commit's frame batch — always
-  * ∝ |delta|.
+  * Position = the highest commit marker (the Kafka sink's progress
+  * record): a replayed view version is a no-op, and a commit whose frame
+  * write failed leaves the position where it was, so the next commit
+  * frames the view's changes since the position
+  * ([[ViewCatalog.changesSince]]) as one batch — always ∝ |delta|.
   */
 object FileEnvelopeSink {
 
   val KeySchemaId = 1
   val ValueSchemaId = 2
 
-  /** Last view version this sink committed, from the batch dirs. */
-  def resumeUpper(path: String): Long = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) -1L
-    else {
-      val listing = Files.list(root)
-      try listing.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("batch="))
-        .map(_.stripPrefix("batch=").toLong)
-        .foldLeft(-1L)(math.max)
-      finally listing.close()
-    }
-  }
+  /** Last view version this sink committed, from its commit markers. */
+  def resumeUpper(path: String): Long =
+    ExactlyOnceSink.lastCommitted(path, SparkSession.active.sessionState.newHadoopConf())
 
   /** Seed the sink: registry file (avro) + the snapshot as an all-insert
     * frame batch at the seeded view version. */
@@ -65,15 +53,13 @@ object FileEnvelopeSink {
     writeBatch(spark, Changelog.fromRows(snapshot), path, keys, envelope, version)
   }
 
-  /** The commit hook body: frame THIS commit's delta (catching up from the
-    * sink's recorded position when a prior hook failed) and append it as one
-    * batch dir. */
+  /** The commit hook body: frame the view's changes since the sink's
+    * position as one batch at `version`. */
   def applyCommit(spark: SparkSession, cat: ViewCatalog, view: String, path: String,
-      keys: Seq[String], envelope: String, delta: DataFrame, version: Long): Unit = {
+      keys: Seq[String], envelope: String, version: Long): Unit = {
     val resume = resumeUpper(path)
-    if (resume >= version) return // replayed refresh
-    val eff = if (resume == version - 1) delta else cat.changesSince(view, resume, version)
-    writeBatch(spark, eff, path, keys, envelope, version)
+    if (resume < version)
+      writeBatch(spark, cat.changesSince(view, resume, version), path, keys, envelope, version)
   }
 
   private def writeBatch(spark: SparkSession, delta: DataFrame, path: String,
@@ -87,8 +73,8 @@ object FileEnvelopeSink {
         SinkEnvelopes.debeziumJsonFrames(Changelog.consolidate(delta), keys, version)
       case other => throw new IllegalArgumentException(s"unknown ENVELOPE $other")
     }
-    frames.write.mode("overwrite")
-      .parquet(Paths.get(path, s"batch=$version").toString)
+    ExactlyOnceSink.writeBatch(frames, path, version)
+    ()
   }
 
   /** All frames in offset order: `(key, value, batch)` from one root scan.

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import org.apache.commons.io.FileUtils
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -77,8 +78,6 @@ final class IcebergTable(spark: SparkSession, tablePath: String) {
   def schema: StructType =
     DataType.fromJson(metadata.schemaJson).asInstanceOf[StructType]
 
-  def currentSnapshotId: Option[Long] = currentVersion.map(_ => metadata.lastSequence)
-
   // ---- commits -------------------------------------------------------------
 
   /** Create the table: snapshot 0 holds `df`. `statsCols` are the columns
@@ -150,7 +149,7 @@ final class IcebergTable(spark: SparkSession, tablePath: String) {
     if (Files.exists(dataRoot)) {
       val listing = Files.list(dataRoot)
       try listing.iterator().forEachRemaining { d =>
-        if (!live.contains(d.normalize)) deleteRecursively(d)
+        if (!live.contains(d.normalize)) FileUtils.deleteDirectory(d.toFile)
       } finally listing.close()
     }
   }
@@ -367,15 +366,6 @@ final class IcebergTable(spark: SparkSession, tablePath: String) {
         data.join(dels, cond, "left_anti")
       }
     out.drop(SeqCol)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val listing = Files.list(p)
-      try listing.iterator().forEachRemaining(deleteRecursively)
-      finally listing.close()
-    }
-    Files.deleteIfExists(p)
   }
 
   private def stripScheme(uri: String): String =

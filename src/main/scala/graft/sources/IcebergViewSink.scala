@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.views.ViewCatalog
@@ -10,17 +10,14 @@ import graft.views.ViewCatalog
   * consumes the view's persist CHANGELOG and derives its resume position
   * from its own snapshots, `retrieve_upper_from_snapshots`).
   *
-  * Invoked from the view's post-commit hook with the commit's stored delta.
-  * The sink table's `resumeUpper` records the last view version it applied:
-  *  - `resumeUpper == version - 1` — the common case; apply the delta the
-  *    hook was handed. Work ∝ |delta|.
-  *  - `resumeUpper < version - 1` — a prior hook invocation failed AFTER the
-  *    view's pointer flip (the view commit is durable, the sink commit is
-  *    not). Self-heal: apply the consolidated STORED deltas
-  *    `(resumeUpper, version]` ([[ViewCatalog.changesSince]]) — still
-  *    delta-sized, never a snapshot diff.
-  *  - `resumeUpper >= version` — a replayed refresh; `applyChangeSet`'s
-  *    resume-upper check drops it (and we skip the plan entirely).
+  * Invoked from the view's post-commit hook with the committed version.
+  * The sink's position is the `resumeUpper` of its table metadata, the
+  * last view version it applied: a version at or below it is a replayed
+  * refresh and a no-op, and any other applies
+  * [[ViewCatalog.changesSince]]`(resumeUpper, version)` — the stored delta
+  * of this commit, or the consolidated stored deltas since the position
+  * when a hook failed after the view commit. Work ∝ |delta|, never a
+  * snapshot diff.
   *
   * A changelog maps onto one Iceberg change set: insertions (`diff > 0`)
   * upsert by key; keys retracted and NOT re-inserted become equality
@@ -29,7 +26,7 @@ import graft.views.ViewCatalog
 object IcebergViewSink {
 
   def applyCommit(spark: SparkSession, cat: ViewCatalog, view: String,
-      path: String, keys: Seq[String], delta: DataFrame, version: Long): Unit = {
+      path: String, keys: Seq[String], version: Long): Unit = {
     val table = new IcebergTable(spark, path)
     if (version == 0L) {
       // the view was dropped and re-created from scratch while the sink
@@ -41,11 +38,9 @@ object IcebergViewSink {
       table.applyChangeSet(snap, gone, keys, batchId = 0L)
       ()
     } else {
-      val resumeUpper = table.metadata.resumeUpper
-      if (resumeUpper >= version) return // replayed refresh: recorded no-op
-      val eff =
-        if (resumeUpper == version - 1) delta else cat.changesSince(view, resumeUpper, version)
-      val (inserts, goneKeys) = SinkEnvelopes.changes(eff, keys)
+      // a replayed refresh has no changes, and its batch id is dropped
+      val (inserts, goneKeys) =
+        SinkEnvelopes.changes(cat.changesSince(view, table.metadata.resumeUpper, version), keys)
       table.applyChangeSet(inserts, goneKeys, keys, batchId = version)
       ()
     }

@@ -45,13 +45,14 @@ case class CreateMaterializedViewCommand(
         GraftSqlCatalog.temporalsFor(spark).put(name, tv)
         ver
       case None =>
-        GraftSqlCatalog.temporalsFor(spark).remove(name)
         // the DEFINITION is the SQL text — a refresh re-parses it against
         // live inputs, exactly like the reference re-rendering the dataflow
-        cat.createMaterializedView(name, s => s.sql(queryText))
+        val ver = cat.createMaterializedView(name, s => s.sql(queryText))
+        GraftSqlCatalog.temporalsFor(spark).remove(name)
+        ver
     }
     // expose committed snapshots to plain SQL reads of `name`; the catalog
-    // re-registers on every commit so SQL readers never pin a stale version
+    // re-binds it on every commit so SQL readers never pin a stale version
     cat.exposeAsTempView(name)
     GraftSqlCatalog.createSqlFor(spark).put(GraftSqlCatalog.normId(name),
       (true, s"CREATE MATERIALIZED VIEW $name AS ${queryText.trim};"))
@@ -443,13 +444,13 @@ case class ShowMaterializedViewsCommand() extends LeafRunnableCommand {
   * a continuously-maintained sink (reference `Plan::CreateSink`,
   * `src/storage/src/sink/iceberg.rs`): the view's CURRENT snapshot seeds
   * the table (recording the seeded view version as the sink's resume
-  * upper), and every subsequent commit of the view feeds the post-commit
-  * hook its STORED delta changelog — applied as a merge-on-read upsert plus
-  * equality deletes in one idempotent Iceberg commit keyed by the view
-  * version ([[graft.sources.IcebergViewSink]]). Work per refresh ∝ |delta|:
-  * the hook never diffs snapshots, and a hook failure self-heals on the
-  * next refresh by catching up from the sink's own recorded resume
-  * position. The KEY must uniquely identify view rows. */
+  * upper), and every subsequent commit of the view runs the post-commit
+  * hook, which applies the view's stored changes since that position as a
+  * merge-on-read upsert plus equality deletes in one idempotent Iceberg
+  * commit keyed by the view version ([[graft.sources.IcebergViewSink]]).
+  * Work per refresh ∝ |delta|: the hook never diffs snapshots, and a hook
+  * failure is caught up at the next refresh. The KEY must uniquely
+  * identify view rows. */
 case class CreateSinkCommand(name: String, view: String, path: String, keys: Seq[String])
     extends CreateSinkPrologue {
 
@@ -459,8 +460,8 @@ case class CreateSinkCommand(name: String, view: String, path: String, keys: Seq
       // scanned, and their bounds would cost a stats job on every sink commit
       new graft.sources.IcebergTable(spark, path).create(snapshot, batchId = seedVersion)
       ()
-    } { (cat, delta, version) =>
-      graft.sources.IcebergViewSink.applyCommit(spark, cat, view, path, keys, delta, version)
+    } { (cat, version) =>
+      graft.sources.IcebergViewSink.applyCommit(spark, cat, view, path, keys, version)
     }
 }
 
@@ -468,7 +469,8 @@ case class CreateSinkCommand(name: String, view: String, path: String, keys: Seq
   * ENVELOPE UPSERT FORMAT AVRO | ENVELOPE DEBEZIUM FORMAT JSON` — the
   * envelope-emitting sink (reference `src/interchange/src/envelopes.rs`,
   * `src/storage/src/sink/kafka.rs`, over the file transport): every view
-  * commit's stored delta becomes one batch of framed key/value messages
+  * commit becomes one batch of framed key/value messages holding the
+  * view's stored changes since the sink's position
   * ([[graft.sources.SinkEnvelopes]]), decodable by this engine's own
   * `registry_decode` (UPSERT/AVRO) or Debezium CDC source (DEBEZIUM/JSON).
   * Replay and failure recovery follow the sink's own resume position
@@ -484,9 +486,8 @@ case class CreateEnvelopeSinkCommand(name: String, view: String, path: String,
         s"ENVELOPE DEBEZIUM FORMAT JSON (got ENVELOPE $env FORMAT $fmt)")
     createSink(spark) { (snapshot, seedVersion) =>
       graft.sources.FileEnvelopeSink.create(spark, snapshot, path, keys, env, seedVersion)
-    } { (cat, delta, version) =>
-      graft.sources.FileEnvelopeSink.applyCommit(
-        spark, cat, view, path, keys, env, delta, version)
+    } { (cat, version) =>
+      graft.sources.FileEnvelopeSink.applyCommit(spark, cat, view, path, keys, env, version)
     }
   }
 }
@@ -494,8 +495,8 @@ case class CreateEnvelopeSinkCommand(name: String, view: String, path: String,
 /** The steps both CREATE SINK forms share: the sink name must be new, the
   * view must have a committed version and the KEY columns. `seed` writes
   * the view's current snapshot at that version into the sink, `apply`
-  * becomes the view's post-commit hook (the commit's stored delta and
-  * version), and the sink is registered for DROP SINK. */
+  * becomes the view's post-commit hook (told the committed version), and
+  * the sink is registered for DROP SINK. */
 trait CreateSinkPrologue extends LeafRunnableCommand {
   def name: String
   def view: String
@@ -507,7 +508,7 @@ trait CreateSinkPrologue extends LeafRunnableCommand {
     AttributeReference("path", StringType, nullable = false)())
 
   protected def createSink(spark: SparkSession)(seed: (DataFrame, Long) => Unit)(
-      apply: (graft.views.ViewCatalog, DataFrame, Long) => Unit): Seq[Row] = {
+      apply: (graft.views.ViewCatalog, Long) => Unit): Seq[Row] = {
     val cat = GraftSqlCatalog.forSession(spark)
     val sinks = GraftSqlCatalog.sinksFor(spark)
     if (sinks.contains(name))
@@ -519,7 +520,7 @@ trait CreateSinkPrologue extends LeafRunnableCommand {
     val missing = keys.filterNot(snapshot.columns.contains)
     require(missing.isEmpty, s"KEY columns not in $view: ${missing.mkString(", ")}")
     seed(snapshot, seedVersion)
-    cat.addCommitHook(view, s"sink:$name", { (delta, _, version) => apply(cat, delta, version) })
+    cat.addCommitHook(view, s"sink:$name", version => apply(cat, version))
     sinks.put(name, (view, path, keys))
     Seq(Row(name, path))
   }
@@ -606,18 +607,16 @@ case class CreateIndexCommand(idx: String, rel: String, key: String,
     spark.table(idx).createOrReplaceTempView(rel)
     reg.put(idx, GraftSqlCatalog.IndexEntry(rel, key, buckets, prior))
     // an index over a MAINTAINED view stays fresh: every commit of the view
-    // rebuilds the arrangement from the new snapshot and re-binds the name
+    // rebuilds the arrangement from the new version and re-binds the name
     // (the reference maintains arrangements continuously inside the dataflow,
     // doc/developer/arrangements.md; here the rebuild rides the commit hook,
-    // after syncTempView has re-pointed the name at the raw snapshot)
+    // after the commit has re-bound the name to the raw snapshot)
     val cat = GraftSqlCatalog.forSession(spark)
-    if (cat.isDefined(rel)) {
-      cat.setViewBinder(rel, () => spark.table(idx).createOrReplaceTempView(rel))
-      cat.addCommitHook(rel, s"graft.index.$idx", (_, snap, _) => {
-        graft.plans.CoLocatedJoin.bucketize(snap, idx, key, buckets)
+    if (cat.isDefined(rel))
+      cat.addCommitHook(rel, s"graft.index.$idx", v => {
+        graft.plans.CoLocatedJoin.bucketize(cat.tableAt(rel, v), idx, key, buckets)
         spark.table(idx).createOrReplaceTempView(rel)
       })
-    }
     Seq(Row(idx, rel, key))
   }
 }
@@ -633,7 +632,6 @@ case class DropIndexCommand(idx: String, ifExists: Boolean = false)
       case Some(e) =>
         val cat = GraftSqlCatalog.forSession(spark)
         cat.removeCommitHook(e.rel, s"graft.index.$idx")
-        cat.clearViewBinder(e.rel)
         // dropping an index never removes the relation (reference semantics):
         // a maintained view re-binds to its live snapshot; a plain temp view
         // gets its captured pre-index plan back; a catalog table only needs
@@ -667,8 +665,9 @@ case class ShowIndexesCommand() extends LeafRunnableCommand {
 /** `SUBSCRIBE [TO] <view> WITH (SNAPSHOT | PROGRESS, ...)` — start a
   * CONTINUOUS subscription (reference `src/compute/src/sink/subscribe.rs`;
   * cursor FETCH semantics `doc/user/content/sql/subscribe.md`): a commit
-  * hook stamps every subsequent commit's stored delta into the cursor's
-  * queue; `FETCH <view>` drains it; `CLOSE <view>` ends the subscription.
+  * hook queues the stamped stored changes of every subsequent version
+  * ([[SubscriptionCursor]]); `FETCH <view>` drains the queue; `CLOSE <view>`
+  * ends the subscription.
   * The batch frame over the version timeline stays `SUBSCRIBE v [AS OF n]`
   * (no WITH clause). */
 case class SubscribeContinuousCommand(view: String, snapshot: Boolean, progress: Boolean,
@@ -687,26 +686,18 @@ case class SubscribeContinuousCommand(view: String, snapshot: Boolean, progress:
     val version = cat.currentVersion(view).getOrElse(
       throw new IllegalArgumentException(
         s"cannot SUBSCRIBE: no committed version of $view"))
-    val snap = cat.zsetAt(view, version)
-    val cursor = new SubscriptionCursor(view,
-      snap.drop(graft.streaming.Changelog.DiffCol).schema, progress, envelope)
-    if (snapshot) cursor.enqueue(snap, version)
-    else if (progress) // no snapshot requested: still announce the frontier
-      cursor.enqueue(snap.limit(0), version)
+    val cursor = SubscriptionCursor.open(cat, view, version, snapshot, progress, envelope)
     subs.put(view, cursor)
-    cat.addCommitHook(view, s"subscribe:$view", { (delta, _, v) =>
-      cursor.enqueue(delta, v)
-    })
+    cat.addCommitHook(view, s"subscribe:$view", cursor.deliver)
     Seq(Row(view, version))
   }
 }
 
 /** `FETCH [ALL] <view>` — drain everything the subscription delivered since
   * the last FETCH, in timestamp order. The output schema is the cursor's
-  * stamped row shape (or its envelope's reshaped form), resolved at parse
-  * time. An enveloped drain reshapes through [[SubscribeEnvelope]]; progress
-  * rows re-attach after the data rows of their timestamp with NULL
-  * state/key/value, per the reference's SUBSCRIBE output contract. */
+  * [[SubscriptionCursor.fetchSchema]], fixed at SUBSCRIBE; progress rows
+  * follow the data rows of their timestamp with NULL state/key/value, per
+  * the reference's SUBSCRIBE output contract. */
 case class FetchSubscriptionCommand(view: String,
     rowSchema: org.apache.spark.sql.types.StructType,
     count: Option[Int] = None) extends LeafRunnableCommand {
@@ -716,10 +707,9 @@ case class FetchSubscriptionCommand(view: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val cursor = GraftSqlCatalog.subscriptionsFor(spark).getOrElse(view,
       throw new IllegalArgumentException(s"no open subscription on $view"))
-    // envelopes are applied at ENQUEUE (per commit = per timestamp, the
-    // envelope's grouping unit), so a drain is a pure queue read — no
-    // createDataFrame-then-collect round-trip however large the frame.
-    // A counted FETCH takes at most n rows, leaving the rest queued.
+    // envelopes are applied per version as the cursor queues it, so a
+    // drain is a pure queue read. A counted FETCH takes at most n rows,
+    // leaving the rest queued.
     cursor.drain(count)
   }
 }

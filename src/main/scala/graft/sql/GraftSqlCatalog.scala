@@ -145,8 +145,15 @@ object SubscribeFrame {
     require(from >= 0 && from <= cur, s"AS OF $from outside [0, $cur] for $name")
     val base = cat.zsetAt(name, from)
     val columns = Subscribe.rowColumns(base)
-    val snapshot = Subscribe.stamp(base, from, columns)
-    val steps = ((from + 1) to cur).map(v => Subscribe.stamp(cat.deltaAt(name, v), v, columns))
-    (snapshot +: steps).reduce(_.unionByName(_))
+    (Subscribe.stamp(base, from, columns) +: steps(cat, name, columns, from, cur))
+      .reduce(_.unionByName(_))
   }
+
+  /** The stored commit changelog of each version in `(after, upTo]`,
+    * stamped at its version with the view's row `columns`, in version
+    * order: the frame's updates after its snapshot, and what a
+    * [[SubscriptionCursor]] that last queued `after` queues next. */
+  def steps(cat: ViewCatalog, name: String, columns: Seq[String],
+      after: Long, upTo: Long): Seq[DataFrame] =
+    ((after + 1) to upTo).map(v => Subscribe.stamp(cat.deltaAt(name, v), v, columns))
 }

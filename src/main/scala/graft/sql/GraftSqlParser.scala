@@ -53,32 +53,18 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
       val unknown = options -- Set("SNAPSHOT", "PROGRESS")
       if (unknown.nonEmpty) throw new IllegalArgumentException(
         s"unknown SUBSCRIBE option(s): ${unknown.mkString(", ")} (SNAPSHOT, PROGRESS)")
-      val envelope = Option(env).map { e =>
-        val keys = Option(keyList).getOrElse("").split(",")
-          .map(_.trim).filter(_.nonEmpty).toSeq
-        require(keys.nonEmpty, s"ENVELOPE $e requires a KEY column list")
-        (e.toUpperCase, keys)
-      }
       SubscribeContinuousCommand(name,
         snapshot = options.contains("SNAPSHOT"), progress = options.contains("PROGRESS"),
-        envelope = envelope)
+        envelope = envelopeOf(env, keyList))
     case FetchStmt(count, name) =>
       val cursor = GraftSqlCatalog.subscriptionsFor(session).getOrElse(name,
         throw new IllegalArgumentException(s"no open subscription on $name"))
-      FetchSubscriptionCommand(name, cursor.fetchSchema(session),
+      FetchSubscriptionCommand(name, cursor.fetchSchema,
         Option(count).map(_.toInt))
     case CloseStmt(name) => CloseSubscriptionCommand(name)
     case SubscribeStmt(name, env, keyList, orderBy, asOf) =>
-      var frame = SubscribeFrame(GraftSqlCatalog.forSession(session), name,
-        Option(asOf).map(_.toLong))
-      Option(env).foreach { e =>
-        val keys = Option(keyList).getOrElse("").split(",")
-          .map(_.trim).filter(_.nonEmpty).toSeq
-        require(keys.nonEmpty, s"ENVELOPE $e requires a KEY column list")
-        frame =
-          if (e.equalsIgnoreCase("UPSERT")) SubscribeEnvelope.upsert(frame, keys)
-          else SubscribeEnvelope.debezium(frame, keys)
-      }
+      var frame = SubscribeEnvelope.shape(SubscribeFrame(GraftSqlCatalog.forSession(session),
+        name, Option(asOf).map(_.toLong)), envelopeOf(env, keyList))
       Option(orderBy).filter(_.trim.nonEmpty).foreach(o =>
         frame = SubscribeEnvelope.withinTimestampOrder(frame, o))
       frame.queryExecution.logical
@@ -249,17 +235,29 @@ object GraftSqlParser {
       s"(?:\\s+TO\\s+TIMESTAMP\\s+'([^']+)')?\\s*;?\\s*$$").r
   val DropMv: Regex =
     s"(?is)^\\s*DROP\\s+MATERIALIZED\\s+VIEW\\s+$Id\\s*;?\\s*$$".r
+  // the optional output envelope of both SUBSCRIBE forms: kind, KEY list
+  private val Envelope =
+    "(?:\\s+ENVELOPE\\s+(UPSERT|DEBEZIUM)\\s*\\(\\s*KEY\\s*\\(([^)]*)\\)\\s*\\))?"
+
+  /** The (kind, KEY columns) of a parsed [[Envelope]] clause, if any. */
+  def envelopeOf(kind: String, keyList: String): Option[(String, Seq[String])] =
+    Option(kind).map { e =>
+      val keys = keyList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      require(keys.nonEmpty, s"ENVELOPE $e requires a KEY column list")
+      (e.toUpperCase, keys)
+    }
+
   // batch frame with optional output envelope + in-timestamp ordering
   // (reference doc/user/content/sql/subscribe.md:34-57)
   val SubscribeStmt: Regex =
     (s"(?is)^\\s*SUBSCRIBE\\s+(?:TO\\s+)?$Id" +
-      s"(?:\\s+ENVELOPE\\s+(UPSERT|DEBEZIUM)\\s*\\(\\s*KEY\\s*\\(([^)]*)\\)\\s*\\))?" +
+      Envelope +
       s"(?:\\s+WITHIN\\s+TIMESTAMP\\s+ORDER\\s+BY\\s+(.*?))?" +
       s"(?:\\s+AS\\s+OF\\s+(\\d+))?\\s*;?\\s*$$").r
   // continuous subscription cursor: SUBSCRIBE v [ENVELOPE ...] WITH (SNAPSHOT, PROGRESS)
   val SubscribeWith: Regex =
     (s"(?is)^\\s*SUBSCRIBE\\s+(?:TO\\s+)?$Id" +
-      s"(?:\\s+ENVELOPE\\s+(UPSERT|DEBEZIUM)\\s*\\(\\s*KEY\\s*\\(([^)]*)\\)\\s*\\))?" +
+      Envelope +
       s"\\s+WITH\\s*\\(\\s*([A-Za-z_,\\s]*)\\)\\s*;?\\s*$$").r
   /** `FETCH [ALL | n] <cursor>` (reference doc/user/content/sql/fetch.md:
     * a count drains at most n rows, ALL/absent drains everything). */

@@ -23,6 +23,16 @@ object SubscribeEnvelope {
   private def valColsOf(frame: DataFrame, keys: Seq[String]): Seq[String] =
     frame.columns.filterNot(c => c == Ts || c == Diff || keys.contains(c)).toSeq
 
+  /** `frame` in the output `envelope` (kind UPSERT or DEBEZIUM, and its
+    * KEY columns), or as it is without one: the one shaping step of the
+    * batch SUBSCRIBE frame and the continuous cursor. */
+  def shape(frame: DataFrame, envelope: Option[(String, Seq[String])]): DataFrame =
+    envelope match {
+      case None => frame
+      case Some(("UPSERT", keys)) => upsert(frame, keys)
+      case Some((_, keys)) => debezium(frame, keys)
+    }
+
   /** `ENVELOPE UPSERT (KEY (...))`: per key within each timestamp, the net
     * result of the updates — `upsert` rows carry the new value, `delete`
     * rows NULL values, several live values collapse to `key_violation`. */

@@ -96,13 +96,6 @@ object Changelog {
     if (graft.plans.DiffProvenance.nonNegative(df)) df.filter(col(DiffCol) > 0L)
     else consolidate(df).filter(col(DiffCol) > 0L)
 
-  /** Distinct over a changelog: net-positive rows at multiplicity 1.
-    * Always consolidates — collapsing each row to multiplicity 1 is only
-    * correct on the consolidated shape (elided-threshold output may carry a
-    * row's multiplicity split across entries). */
-  def distinctRows(df: DataFrame): DataFrame =
-    consolidate(df).filter(col(DiffCol) > 0L).withColumn(DiffCol, lit(1L))
-
   /** Collapse a changelog back to a plain relation by expanding positive
     * multiplicities (the reference's `RepeatRow` table function,
     * `src/expr/src/relation/func.rs:3611-3614`). */

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
+
+import org.apache.commons.io.FileUtils
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -48,8 +50,10 @@ object StreamExecQueries {
       // the surviving sequence strictly increasing, which is all replay
       // determinism needs
       if (Files.exists(cdir)) {
-        val part = Files.list(cdir).filter(p => p.getFileName.toString.startsWith("part-"))
+        val listing = Files.list(cdir)
+        val part = try listing.filter(p => p.getFileName.toString.startsWith("part-"))
           .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $cdir"))
+        finally listing.close()
         val target = base.resolve(f"chunk-$i%03d.parquet")
         Files.move(part, target)
         // strictly increasing mtimes: FileStreamSource admits files in
@@ -59,15 +63,7 @@ object StreamExecQueries {
           (System.currentTimeMillis() / 60000L) * 60000L + i * 60000L))
       }
     }
-    deleteRecursively(stage)
-    ()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).forEach(deleteRecursively(_))
-    Files.deleteIfExists(p)
-    ()
+    FileUtils.deleteDirectory(stage.toFile)
   }
 
   /** The events table as an upsert stream `(_1 key, _2 value, _3 offset)`

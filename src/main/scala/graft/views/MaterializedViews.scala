@@ -3,8 +3,11 @@ package graft.views
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.collection.immutable.TreeMap
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
@@ -79,6 +82,15 @@ import graft.streaming.Changelog
   *    (-0.0 for 0.0), or does not fit the budget leaves the view
   *    persist-only until its next incarnation. A resident read returns
   *    the rows persist returns for that version, float forms included.
+  *  - **Consumers of a commit** (sinks, SUBSCRIBE cursors, indexes) are
+  *    commit hooks told only the committed version. Each keeps one
+  *    position, the last version it applied, and pulls the versions it
+  *    has not applied through [[changesSince]] (an index has no position:
+  *    it rebuilds from [[tableAt]]). A position belongs to one
+  *    incarnation, so [[dropView]] and a version-0 write over an existing
+  *    view (CREATE OR REPLACE) fail before anything is written while the
+  *    view has hooks, and name them; the reference likewise refuses to
+  *    drop a relation a sink or an index depends on.
   */
 final class ViewCatalog(spark: SparkSession, baseDir: String) {
 
@@ -91,14 +103,9 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   // so `spark.sql("select * from v")` always reads the latest version, even
   // when the refresh came through the Scala API rather than SQL REFRESH
   private val exposed = TrieMap.empty[String, Unit]
-  // post-commit hooks (continuous sinks): view -> hookId -> callback run with
-  // (delta changelog, new snapshot, committed version) after every commit
-  // — the analog of a sink dataflow reading the view's persist
-  // CHANGELOG, not re-diffing its snapshots. A hook that throws leaves the
-  // view commit durable (the timeline entry is already in place); consumers self-heal by
-  // resuming from their own recorded position via [[deltaAt]].
-  private val commitHooks =
-    TrieMap.empty[String, TrieMap[String, (DataFrame, DataFrame, Long) => Unit]]
+  // post-commit hooks: view -> hookId -> callback run with the committed
+  // version after every commit of the view (see [[addCommitHook]])
+  private val commitHooks = TrieMap.empty[String, TrieMap[String, Long => Unit]]
 
   // view -> the schema of its incarnation, nullability aside: recorded by
   // the version-0 write, or read once from one parquet footer by a catalog
@@ -233,9 +240,11 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     if (next == 0L) {
       // a new incarnation (CREATE, CREATE OR REPLACE, re-create after DROP):
       // its history — possibly of another schema, possibly orphan dirs of a
-      // crashed commit — is removed rather than extended
+      // crashed commit — is removed rather than extended, and no consumer
+      // position of the old one may carry over
+      requireNoHooks(name, "replace")
       resident.remove(name)
-      deleteRecursive(viewDir(name))
+      FileUtils.deleteDirectory(viewDir(name).toFile)
       schemas.put(name, graft.Schemas.nullable(df.schema))
     }
     if (next == 0L || changelogValued(name)) {
@@ -301,7 +310,6 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     val conf = spark.sparkContext.hadoopConfiguration
     val s = Files.list(dir)
     try {
-      import scala.jdk.CollectionConverters._
       s.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet")).take(files).map { p =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -364,12 +372,19 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     else Changelog.consolidate(Changelog.unionAll(
       zsetAt(name, version), Changelog.negate(zsetAt(name, version - 1))))
 
-  /** The consolidated changelog `after → upTo` of `name`: the union of the
-    * stored commit changelogs of versions `(after, upTo]` ([[deltaAt]]),
-    * starting from version 0's snapshot when `after` is below 0 — what a
-    * sink that last applied version `after` catches up with. */
+  /** The changelog `after → upTo` of `name`: what a consumer that last
+    * applied version `after` has not applied up to `upTo` — the one
+    * catch-up rule of every commit consumer. Empty when `after >= upTo`;
+    * the stored commit changelog ([[deltaAt]]) when `after == upTo - 1`;
+    * otherwise the consolidated union of the stored changelogs of versions
+    * `(after, upTo]`, starting from version 0's snapshot when `after` is
+    * below 0. Over Z-sets, applying the union equals applying the deltas
+    * one by one. */
   def changesSince(name: String, after: Long, upTo: Long): DataFrame =
-    Changelog.consolidate(Changelog.unionAll(
+    if (after >= upTo) spark.createDataFrame(java.util.List.of[Row](),
+      if (changelogValued(name)) schemaOf(name) else deltaSchema(name))
+    else if (after == upTo - 1) deltaAt(name, upTo)
+    else Changelog.consolidate(Changelog.unionAll(
       ((math.max(after, -1L) + 1) to upTo).map(v => deltaAt(name, v)): _*))
 
   /** Version `version` of `name` as a Z-set `(row..., diff)`: a
@@ -382,60 +397,50 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   }
 
   /** Register a post-commit hook under `hookId` (idempotent re-register
-    * replaces). The hook runs synchronously after every commit of
-    * `name`, receiving `(delta changelog, new snapshot, version)` — the
-    * delta is the STORED commit changelog ([[deltaAt]]), so a sink's work is
-    * ∝ |delta| regardless of view size. The commit precedes the hook, so a
-    * throwing hook leaves the view commit durable; hook consumers must
-    * record their own resume position and catch up from stored deltas. */
-  def addCommitHook(name: String, hookId: String,
-      f: (DataFrame, DataFrame, Long) => Unit): Unit =
+    * replaces). The hook runs synchronously after every commit of `name`,
+    * after the SQL name re-binds, and is told the committed version only: a
+    * consumer pulls what it has not applied through [[changesSince]] from
+    * its own position. The commit precedes the hook, so a throwing hook
+    * fails the statement but leaves the view commit durable; every
+    * consumer the throw skipped catches up at the next commit. */
+  def addCommitHook(name: String, hookId: String, f: Long => Unit): Unit =
     commitHooks.getOrElseUpdate(name, TrieMap.empty).put(hookId, f)
 
   def removeCommitHook(name: String, hookId: String): Unit =
     commitHooks.get(name).foreach(_.remove(hookId))
 
   private def runCommitHooks(name: String, version: Long): Unit =
-    commitHooks.get(name).foreach(_.values.foreach(f =>
-      f(deltaAt(name, version), tableAt(name, version), version)))
+    commitHooks.get(name).foreach(_.values.foreach(_(version)))
 
-  /** Make the view readable by plain `spark.sql` under its own name. The
-    * registration is refreshed inside EVERY commit path, so SQL readers
-    * resolve the latest committed version no matter which API refreshed it. */
-  def exposeAsTempView(name: String): Unit = {
-    exposed.put(name, ())
-    syncTempView(name)
+  /** Fail, before anything is written, if consumers hold positions in the
+    * current incarnation of `name`; the error names their hooks. */
+  private def requireNoHooks(name: String, what: String): Unit = {
+    val ids = commitHooks.get(name).fold(Seq.empty[String])(_.keys.toSeq.sorted)
+    if (ids.nonEmpty) throw new IllegalStateException(
+      s"cannot $what materialized view $name: ${ids.mkString(", ")} consume its " +
+        "commits (DROP SINK, CLOSE or DROP INDEX first)")
   }
 
-  // a view whose SQL name is bound by something other than the raw snapshot
-  // (CREATE INDEX binds the bucketed arrangement) installs a binder; every
-  // sync path routes through it so a later exposeAsTempView/commit cannot
-  // silently re-point the name at the un-arranged snapshot
-  private val binders = TrieMap.empty[String, () => Unit]
-
-  def setViewBinder(name: String, f: () => Unit): Unit = {
-    binders.put(name, f); ()
-  }
-
-  def clearViewBinder(name: String): Unit = {
-    binders.remove(name); ()
-  }
+  /** Make the view readable by plain `spark.sql` under its own name. Every
+    * commit re-binds the name to the new version, before the commit hooks
+    * run, so SQL readers resolve the latest committed version no matter
+    * which API refreshed it. A name already exposed is left as it is bound
+    * (an index hook binds it to its arrangement). */
+  def exposeAsTempView(name: String): Unit =
+    if (exposed.putIfAbsent(name, ()).isEmpty) syncTempView(name)
 
   private def syncTempView(name: String): Unit =
-    if (exposed.contains(name)) binders.get(name) match {
-      case Some(bind) => bind()
-      case None => table(name).createOrReplaceTempView(name)
-    }
+    if (exposed.contains(name)) table(name).createOrReplaceTempView(name)
 
   /** CREATE MATERIALIZED VIEW name AS query — runs the query once and
     * persists version 0. Re-creating an existing name (CREATE OR REPLACE)
     * starts a NEW incarnation: the reference drops and re-creates the
     * dataflow, so the old history — possibly of a different schema — is
-    * removed rather than extended. Attached commit hooks survive and
-    * observe the reseed as a version-0 commit. */
+    * removed rather than extended. It fails before anything is written
+    * while the view has commit hooks. */
   def createMaterializedView(name: String, query: SparkSession => DataFrame): Long = {
-    defs.put(name, query)
     writeVersion(name, query(spark), 0L, None)
+    defs.put(name, query)
     commit(CommitTimeline.Entry(Map(name -> 0L)))
     0L
   }
@@ -586,28 +591,26 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
       resident.get(name).flatten.foreach(w => resident.put(name, Some(w.rangeFrom(keep))))
     }
     if (Files.exists(dir)) {
-      Files.list(dir).forEach { p =>
+      val s = Files.list(dir)
+      val old = try s.iterator.asScala.filter { p =>
         val n = p.getFileName.toString
-        if (n.startsWith("v=") && n.stripPrefix("v=").toLong < keep) deleteRecursive(p)
-      }
+        n.startsWith("v=") && n.stripPrefix("v=").toLong < keep
+      }.toList finally s.close()
+      old.foreach(p => FileUtils.deleteDirectory(p.toFile))
     }
   }
 
   /** Drop `name`: a tombstone entry commits the drop (so a reopened catalog
-    * does not bring the view back), then its data dirs are deleted. */
+    * does not bring the view back), then its data dirs are deleted. Fails
+    * before anything is written while the view has commit hooks. */
   def dropView(name: String): Unit = {
+    requireNoHooks(name, "drop")
     resident.remove(name)
     defs.remove(name)
     exposed.remove(name)
     if (currentVersion(name).isDefined)
       timeline.commit(CommitTimeline.Entry(dropped = Seq(name)))
-    deleteRecursive(viewDir(name))
+    FileUtils.deleteDirectory(viewDir(name).toFile)
     schemas.remove(name)
   }
-
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-    }
 }

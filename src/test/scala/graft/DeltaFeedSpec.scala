@@ -35,8 +35,8 @@ class DeltaFeedSpec extends SparkSpec {
           sum(col("k") * col(Changelog.DiffCol)).as("sum_k")))
 
     var seen: Option[(Seq[String], Long)] = None
-    cat.addCommitHook("acc", "probe", { (delta, _, version) =>
-      seen = Some((delta.inputFiles.toSeq, version))
+    cat.addCommitHook("acc", "probe", { version =>
+      seen = Some((cat.changesSince("acc", version - 1, version).inputFiles.toSeq, version))
     })
     // delta touches two of the seven groups
     val delta = Changelog.fromRows(Seq((5000L, 3L), (5001L, 4L)).toDF("k", "v"))
@@ -95,18 +95,16 @@ class DeltaFeedSpec extends SparkSpec {
       Some(Changelog.unionAll(
         Changelog.negate(Changelog.fromRows(gone)), Changelog.fromRows(ins2))))
 
-    // the hook for version 2 runs with ONLY version 2's delta; resumeUpper=0
-    // forces the catch-up union of stored deltas (0, 2]
-    IcebergViewSink.applyCommit(spark, cat, "mv", path, Seq("k"),
-      cat.deltaAt("mv", 2L), 2L)
+    // the hook for version 2 runs; resumeUpper=0 forces the catch-up union
+    // of stored deltas (0, 2]
+    IcebergViewSink.applyCommit(spark, cat, "mv", path, Seq("k"), 2L)
 
     val sinkRows = new IcebergTable(spark, path).read()
     val want = cat.table("mv")
     assert(sinkRows.exceptAll(want).isEmpty && want.exceptAll(sinkRows).isEmpty,
       "sink must equal the view after catch-up")
     // a replayed version-2 hook is a recorded no-op
-    IcebergViewSink.applyCommit(spark, cat, "mv", path, Seq("k"),
-      cat.deltaAt("mv", 2L), 2L)
+    IcebergViewSink.applyCommit(spark, cat, "mv", path, Seq("k"), 2L)
     assert(new IcebergTable(spark, path).read().count() == want.count())
   }
 
@@ -117,8 +115,7 @@ class DeltaFeedSpec extends SparkSpec {
     t.create(Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"), statsCols = Seq("k"))
     // the re-created view has keys {2, 4} — 1 and 3 must vanish from the sink
     cat.commitState("mv2", Seq((2L, 21L), (4L, 40L)).toDF("k", "v"))
-    IcebergViewSink.applyCommit(spark, cat, "mv2", path, Seq("k"),
-      cat.deltaAt("mv2", 0L), 0L)
+    IcebergViewSink.applyCommit(spark, cat, "mv2", path, Seq("k"), 0L)
     val got = new IcebergTable(spark, path).read().as[(Long, Long)].collect().toSet
     assert(got == Set((2L, 21L), (4L, 40L)))
   }

@@ -55,8 +55,7 @@ class SinkEnvelopeSpec extends SparkSpec {
       Changelog.consolidate(Changelog.unionAll(
         Changelog.fromRows(newState),
         Changelog.negate(Changelog.fromRows(cat.tableAt("ev", 0L)))))))
-    FileEnvelopeSink.applyCommit(spark, cat, "ev", path, Seq("k"), "UPSERT",
-      cat.deltaAt("ev", 1L), 1L)
+    FileEnvelopeSink.applyCommit(spark, cat, "ev", path, Seq("k"), "UPSERT", 1L)
 
     graft.sources.ConfluentFunctions.register(spark,
       graft.sources.Confluent.registryFromFile(s"$path/_registry.tsv"))
@@ -84,11 +83,10 @@ class SinkEnvelopeSpec extends SparkSpec {
     // v1 (hook failed — never delivered): insert k=2
     cat.commitState("eh", Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
       Some(Changelog.fromRows(Seq((2L, "b")).toDF("k", "v"))))
-    // v2: insert k=3; hook sees only v2's delta but must fold in v1's
+    // v2: insert k=3; the hook for v2 must fold in v1's delta too
     cat.commitState("eh", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"),
       Some(Changelog.fromRows(Seq((3L, "c")).toDF("k", "v"))))
-    FileEnvelopeSink.applyCommit(spark, cat, "eh", path, Seq("k"), "UPSERT",
-      cat.deltaAt("eh", 2L), 2L)
+    FileEnvelopeSink.applyCommit(spark, cat, "eh", path, Seq("k"), "UPSERT", 2L)
     assert(FileEnvelopeSink.resumeUpper(path) == 2L)
     graft.sources.ConfluentFunctions.register(spark,
       graft.sources.Confluent.registryFromFile(s"$path/_registry.tsv"))
@@ -100,8 +98,35 @@ class SinkEnvelopeSpec extends SparkSpec {
       .select(col("d.r.k"), col("d.r.v")).as[(Long, String)].collect().toSet
     assert(rows == Set((1L, "a"), (2L, "b"), (3L, "c")))
     // replayed version 2 is a no-op
-    FileEnvelopeSink.applyCommit(spark, cat, "eh", path, Seq("k"), "UPSERT",
-      cat.deltaAt("eh", 2L), 2L)
+    FileEnvelopeSink.applyCommit(spark, cat, "eh", path, Seq("k"), "UPSERT", 2L)
     assert(FileEnvelopeSink.resumeUpper(path) == 2L)
+  }
+
+  test("a failed frame write leaves the position at v-1 and the next commit delivers v") {
+    val cat = newCatalog()
+    val path = tempDir("graft-envf").resolve("t").toString
+    cat.commitState("ef", Seq((1L, "a")).toDF("k", "v"))
+    FileEnvelopeSink.create(spark, cat.table("ef"), path, Seq("k"), "UPSERT", 0L)
+    cat.commitState("ef", Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
+      Some(Changelog.fromRows(Seq((2L, "b")).toDF("k", "v"))))
+    // the frame write's tasks fail after Spark's committer set up its
+    // output: for this one call, parquet's writer asks for a codec absent
+    // from the classpath
+    val codec = "spark.sql.parquet.compression.codec"
+    spark.conf.set(codec, "brotli")
+    try intercept[Exception](
+      FileEnvelopeSink.applyCommit(spark, cat, "ef", path, Seq("k"), "UPSERT", 1L))
+    finally spark.conf.unset(codec)
+    assert(FileEnvelopeSink.resumeUpper(path) == 0L)
+    assert(FileEnvelopeSink.readFrames(spark, path).filter(col("batch") === 1L).isEmpty)
+
+    FileEnvelopeSink.applyCommit(spark, cat, "ef", path, Seq("k"), "UPSERT", 1L)
+    assert(FileEnvelopeSink.resumeUpper(path) == 1L)
+    graft.sources.ConfluentFunctions.register(spark,
+      graft.sources.Confluent.registryFromFile(s"$path/_registry.tsv"))
+    val delivered = FileEnvelopeSink.readFrames(spark, path).filter(col("batch") === 1L)
+      .select(expr("registry_decode(value, 'k BIGINT, v STRING')").as("d"))
+      .select(col("d.r.k"), col("d.r.v")).as[(Long, String)].collect().toSet
+    assert(delivered == Set((2L, "b")))
   }
 }

@@ -293,6 +293,62 @@ class SqlSurfaceSpec extends SparkSpec {
     spark.sql("DROP MATERIALIZED VIEW sqlsub_mv")
   }
 
+  test("DROP and CREATE OR REPLACE refuse a view a sink, cursor or index consumes") {
+    val create = """CREATE OR REPLACE MATERIALIZED VIEW cons_mv AS
+      |SELECT grp, sum(v) AS total FROM cons_base GROUP BY grp""".stripMargin
+    val path = tempDir("graft-cons").resolve("t").toString
+    Seq(
+      ("sink:cons_ice", s"CREATE SINK cons_ice FROM cons_mv INTO ICEBERG '$path' KEY (grp)",
+        "DROP SINK cons_ice"),
+      ("subscribe:cons_mv", "SUBSCRIBE cons_mv WITH (SNAPSHOT)", "CLOSE cons_mv"),
+      ("graft.index.cons_i", "CREATE INDEX cons_i ON cons_mv (grp) WITH (BUCKETS 2)",
+        "DROP INDEX cons_i")
+    ).foreach { case (hook, attach, detach) =>
+      Seq(("a", 5.0), ("b", 2.0)).toDF("grp", "v").createOrReplaceTempView("cons_base")
+      spark.sql(create)
+      spark.sql(attach)
+      Seq(("x", 9.0), ("y", 1.0)).toDF("grp", "v").createOrReplaceTempView("cons_base")
+      Seq(create, "DROP MATERIALIZED VIEW cons_mv").foreach { stmt =>
+        val e = intercept[Exception](spark.sql(stmt))
+        assert(e.getMessage.contains(hook), s"$stmt: ${e.getMessage}")
+      }
+      // the refused statements changed nothing: same incarnation, same rows
+      assert(GraftSqlCatalog.forSession(spark).currentVersion("cons_mv").contains(0L))
+      assert(spark.sql("SELECT grp, total FROM cons_mv").as[(String, Double)].collect().toSet ==
+        Set(("a", 5.0), ("b", 2.0)))
+      spark.sql(detach)
+      spark.sql(create)
+      assert(spark.sql("SELECT grp, total FROM cons_mv").as[(String, Double)].collect().toSet ==
+        Set(("x", 9.0), ("y", 1.0)))
+      spark.sql("DROP MATERIALIZED VIEW cons_mv")
+    }
+  }
+
+  test("an Iceberg sink never holds a replaced view's rows") {
+    import graft.sources.IcebergTable
+    val create = """CREATE OR REPLACE MATERIALIZED VIEW repl_mv AS
+      |SELECT grp, sum(v) AS total FROM repl_base GROUP BY grp""".stripMargin
+    def view = spark.sql("SELECT grp, total FROM repl_mv").as[(String, Double)].collect().toSet
+    Seq(("a", 4.0), ("b", 2.0)).toDF("grp", "v").createOrReplaceTempView("repl_base")
+    spark.sql(create)
+    val path = tempDir("graft-repl").resolve("t").toString
+    spark.sql(s"CREATE SINK repl_ice FROM repl_mv INTO ICEBERG '$path' KEY (grp)")
+    val sink = new IcebergTable(spark, path)
+    def sinkRows = sink.read().as[(String, Double)].collect().toSet
+    Seq(("a", 5.0), ("b", 2.0)).toDF("grp", "v").createOrReplaceTempView("repl_base")
+    spark.sql("REFRESH MATERIALIZED VIEW repl_mv")
+    assert(sinkRows == Set(("a", 5.0), ("b", 2.0)))
+    // a new incarnation over other rows: refused while the sink is attached
+    Seq(("x", 9.0), ("y", 1.0)).toDF("grp", "v").createOrReplaceTempView("repl_base")
+    scala.util.Try(spark.sql(create))
+    spark.sql("REFRESH MATERIALIZED VIEW repl_mv")
+    assert(sinkRows == view, s"sink ${sinkRows} != view ${view}")
+    spark.sql("DROP SINK repl_ice")
+    spark.sql(create)
+    assert(view == Set(("x", 9.0), ("y", 1.0)))
+    spark.sql("DROP MATERIALIZED VIEW repl_mv")
+  }
+
   test("EXPLAIN as a statement: plan stages, filter pushdown, timestamp") {
     Tables.load(spark, Sf, "orders").createOrReplaceTempView("sqlexp_orders")
     val formatted = spark.sql(
