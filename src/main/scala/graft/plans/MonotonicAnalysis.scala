@@ -24,9 +24,12 @@ import graft.streaming.Changelog
   * append-only state path, whose `require(diff > 0)` kills the query at
   * runtime.)
   *
-  * Consumers use the flag to pick the cheap state shape: see
-  * [[graft.streaming.HierarchicalMinMax.monotonicMinMaxStream]] — O(1)
-  * (min,max) state instead of a per-key value multiset.
+  * No planner consults the flag today: a caller that knows its input is
+  * append-only picks a monotonic reducer itself
+  * ([[graft.streaming.HierarchicalMinMax.monotonicMinMaxStream]], O(1)
+  * (min,max) state instead of a per-key value multiset, or
+  * [[graft.streaming.MonotonicTopK]]), and DiffProvenance's sign proof
+  * serves [[Changelog.threshold]].
   */
 object MonotonicAnalysis {
 

@@ -9818,6 +9818,15 @@ object SltRunner {
       // views (MV names recur across corpus files; a stale definition would
       // turn the next file's plain CREATE into a duplicate error)
       val cat = graft.sql.GraftSqlCatalog.forSession(spark)
+      // their consumers first: dropView refuses a view whose commits an
+      // index, sink or open SUBSCRIBE still consumes
+      import graft.sql.{CloseSubscriptionCommand, DropIndexCommand, DropSinkCommand, GraftSqlCatalog}
+      GraftSqlCatalog.indexesFor(spark).toSeq.collect { case (i, e) if cat.isDefined(e.rel) => i }
+        .foreach(i => DropIndexCommand(i).run(spark))
+      GraftSqlCatalog.sinksFor(spark).toSeq.collect { case (n, (v, _, _)) if cat.isDefined(v) => n }
+        .foreach(n => DropSinkCommand(n).run(spark))
+      GraftSqlCatalog.subscriptionsFor(spark).keys.filter(cat.isDefined).toSeq
+        .foreach(v => CloseSubscriptionCommand(v).run(spark))
       cat.viewNames.foreach(n => try cat.dropView(n) catch { case _: Throwable => () })
       // stale index-registry entries would turn the next file's CREATE
       // INDEX into a duplicate error

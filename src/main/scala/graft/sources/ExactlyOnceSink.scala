@@ -43,7 +43,10 @@ object ExactlyOnceSink {
       // re-drive any partial earlier attempt from scratch
       if (fs.exists(staging)) fs.delete(staging, true)
       if (fs.exists(target)) fs.delete(target, true)
-      batch.write.mode("overwrite").parquet(staging.toString)
+      // a failed write leaves no staging dir behind: a later batch id would
+      // never overwrite, and so never reclaim, this one
+      try batch.write.mode("overwrite").parquet(staging.toString)
+      catch { case e: Throwable => fs.delete(staging, true); throw e }
       fs.mkdirs(base)
       if (!fs.rename(staging, target))
         throw new java.io.IOException(s"rename $staging -> $target failed")

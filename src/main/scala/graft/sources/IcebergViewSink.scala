@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 import graft.views.ViewCatalog
 
@@ -28,21 +27,10 @@ object IcebergViewSink {
   def applyCommit(spark: SparkSession, cat: ViewCatalog, view: String,
       path: String, keys: Seq[String], version: Long): Unit = {
     val table = new IcebergTable(spark, path)
-    if (version == 0L) {
-      // the view was dropped and re-created from scratch while the sink
-      // stayed attached: reseed — upsert the snapshot AND delete sink keys
-      // absent from it, so rows of the old incarnation cannot survive
-      val snap = cat.tableAt(view, 0L)
-      val gone = table.read().select(keys.map(col): _*)
-        .exceptAll(snap.select(keys.map(col): _*)).distinct()
-      table.applyChangeSet(snap, gone, keys, batchId = 0L)
-      ()
-    } else {
-      // a replayed refresh has no changes, and its batch id is dropped
-      val (inserts, goneKeys) =
-        SinkEnvelopes.changes(cat.changesSince(view, table.metadata.resumeUpper, version), keys)
-      table.applyChangeSet(inserts, goneKeys, keys, batchId = version)
-      ()
-    }
+    // a replayed refresh has no changes, and its batch id is dropped
+    val (inserts, goneKeys) =
+      SinkEnvelopes.changes(cat.changesSince(view, table.metadata.resumeUpper, version), keys)
+    table.applyChangeSet(inserts, goneKeys, keys, batchId = version)
+    ()
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Retraction-capable per-key top-k maintenance — the reference's
   * `TopKPlan::Basic` (`src/compute-types/src/plan/top_k.rs:34,85`, render
@@ -36,45 +35,21 @@ object BasicTopK {
     * DESC (top = largest). */
   def topKChangelogStream[K](deltas: Dataset[(K, Double, Long)], k: Int)(
       implicit ke: Encoder[K],
-      ine: Encoder[(K, Double, Long)], // also the output row encoder
+      oute: Encoder[(K, Double, Long)],
       ste: Encoder[Map[Double, Long]]): Dataset[(K, Double, Long)] = {
     require(k > 0)
-    deltas
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: K, rows: Iterator[(K, Double, Long)], state: GroupState[Map[Double, Long]]) =>
-          val ms0 = state.getOption.getOrElse(Map.empty[Double, Long])
-          val oldTop = topOf(ms0, k)
-          var ms = ms0
-          rows.foreach { case (_, v, d) =>
-            val nc = ms.getOrElse(v, 0L) + d
-            require(nc >= 0L,
-              s"top-k state for key $key went negative at value $v — " +
-                "retraction of a row that was never inserted")
-            ms = if (nc == 0L) ms - v else ms.updated(v, nc)
-          }
-          if (ms.isEmpty) state.remove() else state.update(ms)
-          val newTop = topOf(ms, k)
-          (oldTop.keySet ++ newTop.keySet).toSeq.sorted.iterator.flatMap { v =>
-            val d = newTop.getOrElse(v, 0L) - oldTop.getOrElse(v, 0L)
-            if (d == 0L) None else Some((key, v, d))
-          }
-      }
+    KeyedReduce(deltas, top(k))((_, _, _))
   }
 
-  /** The top-k sub-multiset (`value -> multiplicity inside the top k`) of a
-    * value multiset, values DESC — duplicates consume top-k slots. */
-  private[streaming] def topOf(ms: Map[Double, Long], k: Int): Map[Double, Long] = {
+  /** The key's top-k sub-multiset (`value -> multiplicity inside the top
+    * k`), values DESC — duplicates consume top-k slots. */
+  private[streaming] def top(k: Int) = Reducer.overMultiset { ms =>
     var remaining = k.toLong
-    val b = Map.newBuilder[Double, Long]
-    ms.toSeq.sortBy(-_._1).foreach { case (v, c) =>
-      if (remaining > 0L) {
-        val t = math.min(c, remaining)
-        b += v -> t
-        remaining -= t
-      }
+    ms.toSeq.sortBy(-_._1).flatMap { case (v, c) =>
+      val t = math.min(c, remaining)
+      remaining -= t
+      if (t > 0L) Some(v -> t) else None
     }
-    b.result()
   }
 
   /** Batch form of the same semantics: resolve a retraction-bearing

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Incremental min/max maintenance under retractions — the reference's
   * **hierarchical** reduction class (`ReductionType::Hierarchical`,
@@ -16,68 +15,38 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Output is the changelog of the maintained `(key, min, max)` view:
   * retract-old / insert-new pairs per touched key, empty for no-op batches —
-  * the same contract as [[IncrementalReduce.accumulableChangelogStream]].
+  * the [[KeyedReduce]] contract every streaming reducer shares.
   */
 object HierarchicalMinMax {
 
+  /** One `(min, max)` row while the key's value multiset is non-empty. */
+  private[streaming] val extrema = Reducer.overMultiset(ms =>
+    if (ms.isEmpty) Nil else Seq((ms.keys.min, ms.keys.max) -> 1L))
+
+  /** `(min, max)` of an append-only input, `(+∞, −∞)` before its first row. */
+  private[streaming] val monotonicExtrema =
+    Reducer[(Double, Double), Double, (Double, Double)](
+      (Double.PositiveInfinity, Double.NegativeInfinity),
+      { case ((mn, mx), v, diff) =>
+        require(diff > 0, "monotonic min/max plan received a retraction")
+        (math.min(mn, v), math.max(mx, v))
+      },
+      s => if (s._1 <= s._2) Seq(s -> 1L) else Nil)
+
   /** Monotonic (append-only) min/max — the reference's `MonotonicTop1` plan
-    * (`src/compute-types/src/plan/top_k.rs:28-35`): when
-    * [[graft.plans.MonotonicAnalysis]] proves the input never retracts,
-    * state shrinks from a value multiset to a single (min, max) pair — O(1)
-    * per key instead of O(distinct values). Negative diffs are rejected
-    * loudly (the planner must not have chosen this path). */
+    * (`src/compute-types/src/plan/top_k.rs:28-35`): when the caller knows
+    * the input never retracts, state shrinks from a value multiset to a
+    * single (min, max) pair — O(1) per key instead of O(distinct values).
+    * Negative diffs are rejected loudly. */
   def monotonicMinMaxStream[K](deltas: Dataset[(K, Double, Long)])(
       implicit ke: Encoder[K],
-      ine: Encoder[(K, Double, Long)],
       ste: Encoder[(Double, Double)],
-      oute: Encoder[(K, Double, Double, Long)]): Dataset[(K, Double, Double, Long)] = {
-    deltas
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: K, rows: Iterator[(K, Double, Long)], state: GroupState[(Double, Double)]) =>
-          val old = state.getOption
-          var cur = old
-          rows.foreach { case (_, v, diff) =>
-            require(diff > 0, s"monotonic min/max plan received a retraction for key $key")
-            cur = cur match {
-              case None => Some((v, v))
-              case Some((mn, mx)) => Some((math.min(mn, v), math.max(mx, v)))
-            }
-          }
-          cur.foreach(state.update)
-          if (old == cur) Iterator.empty
-          else
-            (old.map { case (mn, mx) => (key, mn, mx, -1L) } ++
-              cur.map { case (mn, mx) => (key, mn, mx, 1L) }).iterator
-      }
-  }
+      oute: Encoder[(K, Double, Double, Long)]): Dataset[(K, Double, Double, Long)] =
+    KeyedReduce(deltas, monotonicExtrema) { case (k, (mn, mx), d) => (k, mn, mx, d) }
 
   def minMaxChangelogStream[K](deltas: Dataset[(K, Double, Long)])(
       implicit ke: Encoder[K],
-      ine: Encoder[(K, Double, Long)],
       ste: Encoder[Map[Double, Long]],
-      oute: Encoder[(K, Double, Double, Long)]): Dataset[(K, Double, Double, Long)] = {
-    deltas
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: K, rows: Iterator[(K, Double, Long)], state: GroupState[Map[Double, Long]]) =>
-          val old = state.getOption.getOrElse(Map.empty[Double, Long])
-          var multiset = old
-          rows.foreach { case (_, v, diff) =>
-            val n = multiset.getOrElse(v, 0L) + diff
-            multiset = if (n == 0L) multiset - v else multiset.updated(v, n)
-          }
-          require(multiset.values.forall(_ > 0),
-            s"negative multiplicity in min/max state for key $key")
-          val oldExtrema =
-            if (old.isEmpty) None else Some((old.keys.min, old.keys.max))
-          val newExtrema =
-            if (multiset.isEmpty) None else Some((multiset.keys.min, multiset.keys.max))
-          if (multiset.isEmpty) state.remove() else state.update(multiset)
-          if (oldExtrema == newExtrema) Iterator.empty
-          else
-            (oldExtrema.map { case (mn, mx) => (key, mn, mx, -1L) } ++
-              newExtrema.map { case (mn, mx) => (key, mn, mx, 1L) }).iterator
-      }
-  }
+      oute: Encoder[(K, Double, Double, Long)]): Dataset[(K, Double, Double, Long)] =
+    KeyedReduce(deltas, extrema) { case (k, (mn, mx), d) => (k, mn, mx, d) }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Incremental maintenance of **accumulable** aggregates (sum/count and
   * everything derivable: avg, stddev) under arbitrary insert/retract
@@ -11,12 +10,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `src/compute/src/render/reduce.rs`).
   *
   * Accumulable aggregates are invertible: a retraction `(row, -1)` is handled
-  * by adding `-value`. Hierarchical aggregates (min/max) are NOT invertible
-  * and need recompute-per-key — keep them recompute-only (SURVEY §7.4).
+  * by adding `-value`. Hierarchical aggregates (min/max) are NOT invertible:
+  * [[HierarchicalMinMax]] keeps each key's value multiset instead.
   *
   * Batch form: one `groupBy` with diff-weighted sums — a single shuffle with
   * map-side partial aggregation, scale-safe. Streaming form: per-key running
-  * sums in keyed state via `flatMapGroupsWithState`.
+  * sums through [[KeyedReduce]].
   */
 object IncrementalReduce {
 
@@ -33,6 +32,13 @@ object IncrementalReduce {
       .withColumn("avg_val", col("sum_val") / col("support"))
   }
 
+  /** `(support, total)` per key: the view has one row while support is
+    * positive. State whose view is empty is kept until it sums to `(0, 0)`,
+    * so a retraction that arrives before its insertion is not lost. */
+  private[streaming] val sums = Reducer[(Long, Double), Double, (Long, Double)]((0L, 0.0),
+    { case ((support, total), v, diff) => (support + diff, total + v * diff) },
+    s => if (s._1 > 0L) Seq(s -> 1L) else Nil)
+
   /** Streaming: per touched key, emit the FULL changelog of the maintained
     * aggregate — a retraction `(old_row, -1)` followed by an insertion
     * `(new_row, +1)` — exactly what a downstream SUBSCRIBE consumer needs to
@@ -40,52 +46,9 @@ object IncrementalReduce {
     * view's update stream, not its state). Output tuples are
     * `(key, support, total, diff)`; a key whose support drops to ≤ 0 emits
     * only the retraction. */
-  def accumulableChangelogStream[K](deltas: org.apache.spark.sql.Dataset[(K, Double, Long)])(
+  def accumulableChangelogStream[K](deltas: Dataset[(K, Double, Long)])(
       implicit ke: Encoder[K],
-      ine: Encoder[(K, Double, Long)],
       ste: Encoder[(Long, Double)],
-      oute: Encoder[(K, Long, Double, Long)]): org.apache.spark.sql.Dataset[(K, Long, Double, Long)] = {
-    deltas
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: K, rows: Iterator[(K, Double, Long)], state: GroupState[(Long, Double)]) =>
-          val old = state.getOption
-          var (support, total) = old.getOrElse((0L, 0.0))
-          rows.foreach { case (_, v, diff) =>
-            support += diff
-            total += v * diff
-          }
-          val out = scala.collection.mutable.ArrayBuffer.empty[(K, Long, Double, Long)]
-          if (!old.contains((support, total))) { // no-op batches consolidate to nothing
-            old.foreach { case (s0, t0) => out += ((key, s0, t0, -1L)) }
-            if (support <= 0) state.remove()
-            else {
-              state.update((support, total))
-              out += ((key, support, total, 1L))
-            }
-          }
-          out.iterator
-      }
-  }
-
-  /** Streaming: keyed running (count, sum) state updated by each delta batch;
-    * emits the new aggregate row per touched key (changelog of the view). */
-  def accumulableStream[K](deltas: org.apache.spark.sql.Dataset[(K, Double, Long)])(
-      implicit ke: Encoder[K],
-      ine: Encoder[(K, Double, Long)],
-      ste: Encoder[(Long, Double)],
-      oute: Encoder[(K, Long, Double)]): org.apache.spark.sql.Dataset[(K, Long, Double)] = {
-    deltas
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: K, rows: Iterator[(K, Double, Long)], state: GroupState[(Long, Double)]) =>
-          var (support, total) = state.getOption.getOrElse((0L, 0.0))
-          rows.foreach { case (_, v, diff) =>
-            support += diff
-            total += v * diff
-          }
-          if (support <= 0) { state.remove(); Iterator.empty }
-          else { state.update((support, total)); Iterator.single((key, support, total)) }
-      }
-  }
+      oute: Encoder[(K, Long, Double, Long)]): Dataset[(K, Long, Double, Long)] =
+    KeyedReduce(deltas, sums) { case (k, (support, total), d) => (k, support, total, d) }
 }

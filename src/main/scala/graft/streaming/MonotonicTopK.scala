@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Monotonic (append-only) per-key top-k maintenance — the reference's
   * `TopKPlan::MonotonicTopK` (`src/compute-types/src/plan/top_k.rs:56-94`):
@@ -13,41 +12,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Values ordered DESC (top = largest); ties kept arbitrarily-but-
   * deterministically by value order. Retractions in the input are rejected
-  * loudly — [[graft.plans.MonotonicAnalysis]] must prove the source
-  * append-only before this plan is chosen.
+  * loudly: the caller chooses this plan only for an append-only source.
   */
 object MonotonicTopK {
 
+  /** The key's top-k list, DESC; a row of multiplicity `diff` adds `diff`
+    * copies of its value. */
+  private[streaming] def topList(k: Int) = Reducer[Seq[Double], Double, Double](Seq.empty,
+    (top, v, diff) => {
+      require(diff > 0, "monotonic top-k plan received a retraction")
+      (top ++ Seq.fill(math.min(diff, k.toLong).toInt)(v)).sorted(Ordering[Double].reverse).take(k)
+    },
+    _.map(_ -> 1L))
+
   def topKChangelogStream[K](deltas: Dataset[(K, Double, Long)], k: Int)(
       implicit ke: Encoder[K],
-      ine: Encoder[(K, Double, Long)], // also the output row encoder
+      oute: Encoder[(K, Double, Long)],
       ste: Encoder[Seq[Double]]): Dataset[(K, Double, Long)] = {
     require(k > 0)
-    deltas
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: K, rows: Iterator[(K, Double, Long)], state: GroupState[Seq[Double]]) =>
-          val old = state.getOption.getOrElse(Seq.empty)
-          var top = old
-          rows.foreach { case (_, v, diff) =>
-            require(diff > 0, s"monotonic top-k plan received a retraction for key $key")
-            top = (v +: top).sorted(Ordering[Double].reverse).take(k)
-          }
-          state.update(top)
-          // changelog = multiset difference old → new
-          val inserted = diffMultiset(top, old)
-          val evicted = diffMultiset(old, top)
-          (evicted.map(v => (key, v, -1L)) ++ inserted.map(v => (key, v, 1L))).iterator
-      }
-  }
-
-  /** Elements of `a` minus `b` with multiplicity. */
-  private def diffMultiset(a: Seq[Double], b: Seq[Double]): Seq[Double] = {
-    val counts = scala.collection.mutable.Map.empty[Double, Int]
-    b.foreach(v => counts.update(v, counts.getOrElse(v, 0) + 1))
-    a.filter { v =>
-      val c = counts.getOrElse(v, 0)
-      if (c > 0) { counts.update(v, c - 1); false } else true
-    }
+    KeyedReduce(deltas, topList(k))((_, _, _))
   }
 }

@@ -107,16 +107,4 @@ class DeltaFeedSpec extends SparkSpec {
     IcebergViewSink.applyCommit(spark, cat, "mv", path, Seq("k"), 2L)
     assert(new IcebergTable(spark, path).read().count() == want.count())
   }
-
-  test("reseed (version 0) removes sink keys absent from the new incarnation") {
-    val cat = newCatalog()
-    val path = tempDir("graft-reseed").resolve("t").toString
-    val t = new IcebergTable(spark, path)
-    t.create(Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"), statsCols = Seq("k"))
-    // the re-created view has keys {2, 4} — 1 and 3 must vanish from the sink
-    cat.commitState("mv2", Seq((2L, 21L), (4L, 40L)).toDF("k", "v"))
-    IcebergViewSink.applyCommit(spark, cat, "mv2", path, Seq("k"), 0L)
-    val got = new IcebergTable(spark, path).read().as[(Long, Long)].collect().toSet
-    assert(got == Set((2L, 21L), (4L, 40L)))
-  }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{lit, raise_error}
 import graft.sources.ExactlyOnceSink
 
 class ExactlyOnceSinkSpec extends SparkSpec {
@@ -24,6 +25,20 @@ class ExactlyOnceSinkSpec extends SparkSpec {
     Files.delete(java.nio.file.Paths.get(dir, "_committed_0"))
     assert(ExactlyOnceSink.writeBatch(batch, dir, 0L)) // re-drives, still once
     assert(spark.read.parquet(dir).count() == 1)
+  }
+
+  test("a failed batch write leaves no staging dir behind") {
+    val dir = tempDir("graft-eos4").toString
+    val batch = Seq((1, "a")).toDF("k", "v")
+    assert(ExactlyOnceSink.writeBatch(batch, dir, 0L))
+    // the write's own tasks fail, after the committer has set up its output
+    // (over a local relation the optimizer would raise the error before)
+    intercept[Exception](ExactlyOnceSink.writeBatch(
+      spark.range(1).withColumn("boom", raise_error(lit("injected"))), dir, 1L))
+    assert(ExactlyOnceSink.writeBatch(batch, dir, 2L))
+    val left = new java.io.File(dir).list().filter(_.startsWith(".staging-"))
+    assert(left.isEmpty, left.mkString(", "))
+    assert(ExactlyOnceSink.lastCommitted(dir, spark.sessionState.newHadoopConf()) == 2L)
   }
 
   test("streaming batches land as committed batch dirs, readable together") {

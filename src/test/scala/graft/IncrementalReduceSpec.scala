@@ -21,18 +21,17 @@ class IncrementalReduceSpec extends SparkSpec {
   test("streaming accumulable state updates across delta batches") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(String, Double, Long)]
-    val query = IncrementalReduce.accumulableStream(input.toDS())
+    val query = IncrementalReduce.accumulableChangelogStream(input.toDS())
       .writeStream.format("memory").queryName("inc_out").outputMode("append").start()
     try {
       input.addData(("a", 10.0, 1L), ("a", 20.0, 1L))
       query.processAllAvailable()
       input.addData(("a", 10.0, -1L), ("b", 7.0, 1L))
       query.processAllAvailable()
-      val rows = spark.table("inc_out").as[(String, Long, Double)].collect()
-      // last emission per key reflects current state
-      val latest = rows.zipWithIndex.groupBy(_._1._1).map { case (k, v) => k -> v.maxBy(_._2)._1 }
-      assert(latest("a") == ("a", 1L, 20.0))
-      assert(latest("b") == ("b", 1L, 7.0))
+      val rows = spark.table("inc_out").as[(String, Long, Double, Long)].collect()
+      // the emitted changelog sums to the current state
+      val net = rows.groupMapReduce(r => (r._1, r._2, r._3))(_._4)(_ + _).filter(_._2 != 0L)
+      assert(net == Map(("a", 1L, 20.0) -> 1L, ("b", 1L, 7.0) -> 1L))
     } finally query.stop()
   }
 

@@ -160,4 +160,30 @@ class SltShimSpec extends SparkSpec {
       assert(got == """{"a":1,"b":2}""", got)
     } finally spark.sql("DROP TABLE IF EXISTS shim_jsonb_p")
   }
+
+  test("runFiles drops a materialized view that an index, sink and SUBSCRIBE consume") {
+    // a session of its own, with its own view catalog: runFiles drops
+    // every view and temp view of the session it runs in
+    val s = spark.newSession()
+    s.conf.set("spark.graft.viewDir", tempDir("graft-sltviews").toString)
+    import s.implicits._
+    val create = "CREATE MATERIALIZED VIEW sltfiles_mv AS " +
+      "SELECT k, sum(v) AS total FROM sltfiles_base GROUP BY k"
+    Seq(("a", 1.0)).toDF("k", "v").createOrReplaceTempView("sltfiles_base")
+    s.sql(create)
+    s.sql("CREATE INDEX sltfiles_idx ON sltfiles_mv (k)")
+    val sinkPath = tempDir("graft-sltsink").resolve("t").toString
+    s.sql(s"CREATE SINK sltfiles_sink FROM sltfiles_mv INTO ICEBERG '$sinkPath' KEY (k)")
+    s.sql("SUBSCRIBE sltfiles_mv WITH (SNAPSHOT)")
+    val empty = tempDir("graft-sltfiles").resolve("empty.slt")
+    java.nio.file.Files.write(empty, Array.emptyByteArray)
+    SltRunner.runFiles(s, Seq(empty.toString))
+    assert(!graft.sql.GraftSqlCatalog.forSession(s).isDefined("sltfiles_mv"))
+    // the next file can create the name again, and drop it
+    Seq(("b", 2.0)).toDF("k", "v").createOrReplaceTempView("sltfiles_base")
+    s.sql(create)
+    assert(s.sql("SELECT k, total FROM sltfiles_mv").as[(String, Double)].collect().toSeq ==
+      Seq(("b", 2.0)))
+    s.sql("DROP MATERIALIZED VIEW sltfiles_mv")
+  }
 }
