@@ -22,7 +22,10 @@ import scala.jdk.CollectionConverters._
   * group <batchId> <group>   a group commit and its last applied batchId
   * }}}
   * A version-0 line starts a new incarnation of the view (CREATE, CREATE OR
-  * REPLACE), so its older history is forgotten, as it is after a drop.
+  * REPLACE), so its older history is forgotten, as it is after a drop. The
+  * incarnations of a view are numbered 0, 1, ... from its last drop (or
+  * its first CREATE), so the number of the next one is known before its
+  * data is written.
   *
   * The index (view -> commit ts -> version, group -> last commit ts and
   * batchId) is built from one listing of `_timeline` at open and updated
@@ -37,6 +40,7 @@ private[views] final class CommitTimeline(baseDir: String) {
 
   private val dir: Path = Paths.get(baseDir, "_timeline")
   private val history = mutable.HashMap.empty[String, TreeMap[Long, Long]]
+  private val incarnations = mutable.HashMap.empty[String, Long]
   private val groups = mutable.HashMap.empty[String, (Long, Long)]
   private var last = 0L
 
@@ -66,11 +70,12 @@ private[views] final class CommitTimeline(baseDir: String) {
 
   private def index(ts: Long, e: Entry): Unit = {
     e.views.foreach { case (n, v) =>
+      if (v == 0L) incarnations(n) = incarnations.get(n).fold(0L)(_ + 1)
       history(n) =
         if (v == 0L) TreeMap(ts -> v)
         else history.getOrElse(n, TreeMap.empty[Long, Long]).updated(ts, v)
     }
-    e.dropped.foreach(history.remove)
+    e.dropped.foreach { n => history.remove(n); incarnations.remove(n) }
     e.group.foreach { case (g, batchId) => groups(g) = (ts, batchId) }
     last = ts
   }
@@ -81,6 +86,9 @@ private[views] final class CommitTimeline(baseDir: String) {
   /** The version `name` has now, if it exists. */
   def version(name: String): Option[Long] =
     synchronized(history.get(name).map(_.last._2))
+
+  /** The number of `name`'s current incarnation, if it exists. */
+  def incarnation(name: String): Option[Long] = synchronized(incarnations.get(name))
 
   /** The version `name` had as of time `ts` (its latest commit at or before
     * `ts` in its current incarnation), if it existed then. */

@@ -31,6 +31,17 @@ import graft.streaming.Changelog
   *    consistent frontier" guarantee. A crash before the rename leaves only
   *    orphan data dirs, which the next commit of that version overwrites.
   *    Old versions stay until `vacuum()`.
+  *  - **One directory per incarnation.** A view's first incarnation keeps
+  *    its dirs in `<base>/<name>/` itself; the k-th CREATE OR REPLACE since
+  *    (numbered by the timeline) keeps them in `<base>/<name>/i=<k>/`.
+  *    Version 0 is written to an `attempt-<uuid>` dir and moved there while
+  *    the old incarnation stays current, so the timeline rename is also
+  *    the switch-over: a query that fails, or a crash before the rename,
+  *    leaves the old incarnation committed and readable. After the rename
+  *    the old incarnation's dirs and failed attempts' are deleted (a crash
+  *    before that leaves them to the next [[vacuum]]), so a read that
+  *    resolved an old version before the rename may then fail, as one
+  *    racing [[vacuum]] does.
   *  - **One schema per incarnation** (the reference's `RelationDesc`):
   *    version 0 fixes the column names, order and types (nullability
   *    aside) until the next DROP or CREATE OR REPLACE. A commit of other
@@ -107,10 +118,10 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   // version after every commit of the view (see [[addCommitHook]])
   private val commitHooks = TrieMap.empty[String, TrieMap[String, Long => Unit]]
 
-  // view -> the schema of its incarnation, nullability aside: recorded by
-  // the version-0 write, or read once from one parquet footer by a catalog
-  // opened over an existing directory (see [[schemaOf]])
-  private val schemas = TrieMap.empty[String, StructType]
+  // (view, incarnation) -> the incarnation's schema, nullability aside:
+  // recorded by the version-0 write, or read once from one parquet footer
+  // by a catalog opened over an existing directory (see [[schemaOf]])
+  private val schemas = TrieMap.empty[(String, Long), StructType]
 
   // every read states its schema, so none runs a schema-inference job
   private def readStored(p: Path, schema: StructType): DataFrame =
@@ -123,9 +134,12 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   private val resident = TrieMap.empty[String, Option[TreeMap[Long, ResidentZSet]]]
 
   private def viewDir(name: String): Path = Paths.get(baseDir, name)
-  private def snapDir(name: String, v: Long): Path = viewDir(name).resolve(s"v=$v")
-  private def deltaDir(name: String, v: Long): Path =
-    viewDir(name).resolve(s"delta=$v")
+  private def incarnationDir(name: String, k: Long): Path =
+    if (k == 0L) viewDir(name) else viewDir(name).resolve(s"i=$k")
+  private def currentDir(name: String): Path =
+    incarnationDir(name, timeline.incarnation(name).getOrElse(0L))
+  private def snapDir(name: String, v: Long): Path = currentDir(name).resolve(s"v=$v")
+  private def deltaDir(name: String, v: Long): Path = currentDir(name).resolve(s"delta=$v")
 
   /** Latest committed version, if the view exists. */
   def currentVersion(name: String): Option[Long] = timeline.version(name)
@@ -188,12 +202,14 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * the schema Spark writes into each parquet footer, of the current
     * version's `v=<n>` snapshot or else its `delta=<n>` batch: no Spark
     * job. */
-  private def schemaOf(name: String): StructType = schemas.getOrElseUpdate(name, {
-    val cur = currentVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"materialized view not found: $name"))
-    if (Files.exists(snapDir(name, cur))) footerSchema(snapDir(name, cur))
-    else StructType(footerSchema(deltaDir(name, cur)).filterNot(_.name == Changelog.DiffCol))
-  })
+  private def schemaOf(name: String): StructType = {
+    val notFound = new IllegalArgumentException(s"materialized view not found: $name")
+    schemas.getOrElseUpdate(name -> timeline.incarnation(name).getOrElse(throw notFound), {
+      val cur = currentVersion(name).getOrElse(throw notFound)
+      if (Files.exists(snapDir(name, cur))) footerSchema(snapDir(name, cur))
+      else StructType(footerSchema(deltaDir(name, cur)).filterNot(_.name == Changelog.DiffCol))
+    })
+  }
 
   /** The schema of `name`'s stored delta batches. */
   private def deltaSchema(name: String): StructType =
@@ -238,17 +254,26 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
   private def writeVersion(name: String, df: DataFrame, next: Long,
       known: Option[DataFrame]): Option[ResidentZSet] = {
     if (next == 0L) {
-      // a new incarnation (CREATE, CREATE OR REPLACE, re-create after DROP):
-      // its history — possibly of another schema, possibly orphan dirs of a
-      // crashed commit — is removed rather than extended, and no consumer
-      // position of the old one may carry over
+      // a new incarnation (CREATE, CREATE OR REPLACE, re-create after DROP)
+      // starts a history of its own, possibly of another schema, in its own
+      // directory (the class doc), and no consumer position of the old one
+      // may carry over. Version 0 is a snapshot (deltaAt derives its
+      // changelog from it).
       requireNoHooks(name, "replace")
-      resident.remove(name)
-      FileUtils.deleteDirectory(viewDir(name).toFile)
-      schemas.put(name, graft.Schemas.nullable(df.schema))
+      // each attempt writes a directory of its own, so the straggling tasks
+      // of a failed one never write where a later one does
+      val attempt = viewDir(name).resolve(s"attempt-${java.util.UUID.randomUUID}")
+      df.write.parquet(attempt.toString)
+      val k = timeline.incarnation(name).fold(0L)(_ + 1)
+      val dir = Files.createDirectories(incarnationDir(name, k))
+      // what a failed or crashed attempt, or a dropped incarnation, left
+      children(dir).filter(_ != attempt).foreach(p => FileUtils.deleteQuietly(p.toFile))
+      Files.move(attempt, dir.resolve("v=0"))
+      schemas.put(name -> k, graft.Schemas.nullable(df.schema))
+      resident.remove(name) // until the rename, reads go to the old incarnation's dirs
+      return None
     }
-    if (next == 0L || changelogValued(name)) {
-      // version 0 (deltaAt derives its changelog from the snapshot) and
+    if (changelogValued(name)) {
       // changelog-valued collections (their rows ARE the delta algebra;
       // a second diff column would collide) stay snapshot-structured
       writeSnapshot(name, next, df)
@@ -358,8 +383,24 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
         install(n, (w + (v -> z)).rangeFrom(v - compactEvery + 1)))
     }
     e.views.keys.foreach(syncTempView)
+    e.views.collect { case (n, 0L) => n }.foreach(pruneSuperseded)
     e.views.foreach { case (n, v) => runCommitHooks(n, v) }
   }
+
+  /** Delete the dirs of `name`'s incarnations before its current one and
+    * of failed version-0 attempts. */
+  private def pruneSuperseded(name: String): Unit = timeline.incarnation(name).foreach { k =>
+    children(viewDir(name)).filter { p =>
+      if (k == 0L) p.getFileName.toString.startsWith("attempt-") else p != incarnationDir(name, k)
+    }.foreach(p => FileUtils.deleteQuietly(p.toFile))
+  }
+
+  private def children(dir: Path): List[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try s.iterator.asScala.toList finally s.close()
+    }
 
   /** The stored commit changelog `version-1 → version` — `(row..., diff)`.
     * Version 0 is [[zsetAt]] itself. A changelog-valued collection stores
@@ -436,8 +477,10 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * persists version 0. Re-creating an existing name (CREATE OR REPLACE)
     * starts a NEW incarnation: the reference drops and re-creates the
     * dataflow, so the old history — possibly of a different schema — is
-    * removed rather than extended. It fails before anything is written
-    * while the view has commit hooks. */
+    * removed rather than extended, but only once the new version 0 is
+    * committed: a query that fails leaves the old incarnation committed and
+    * readable. It fails before anything is written while the view has
+    * commit hooks. */
   def createMaterializedView(name: String, query: SparkSession => DataFrame): Long = {
     writeVersion(name, query(spark), 0L, None)
     defs.put(name, query)
@@ -583,21 +626,18 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     * keeping the base snapshot the current version reconstructs from when
     * it is delta-structured. Delta batches survive (they are the history
     * SUBSCRIBE serves). Versions below that base become unreadable, so
-    * their resident copies go first. */
+    * their resident copies go first. The dirs of older incarnations that a
+    * crash after a replace's rename left go too. */
   def vacuum(name: String): Unit = currentVersion(name).foreach { cur =>
-    val dir = viewDir(name)
     val keep = baseOf(name, cur)
     resident.synchronized {
       resident.get(name).flatten.foreach(w => resident.put(name, Some(w.rangeFrom(keep))))
     }
-    if (Files.exists(dir)) {
-      val s = Files.list(dir)
-      val old = try s.iterator.asScala.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("v=") && n.stripPrefix("v=").toLong < keep
-      }.toList finally s.close()
-      old.foreach(p => FileUtils.deleteDirectory(p.toFile))
-    }
+    children(currentDir(name)).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("v=") && n.stripPrefix("v=").toLong < keep
+    }.foreach(p => FileUtils.deleteDirectory(p.toFile))
+    pruneSuperseded(name)
   }
 
   /** Drop `name`: a tombstone entry commits the drop (so a reopened catalog
@@ -608,9 +648,10 @@ final class ViewCatalog(spark: SparkSession, baseDir: String) {
     resident.remove(name)
     defs.remove(name)
     exposed.remove(name)
-    if (currentVersion(name).isDefined)
+    val k = timeline.incarnation(name)
+    if (k.isDefined)
       timeline.commit(CommitTimeline.Entry(dropped = Seq(name)))
     FileUtils.deleteDirectory(viewDir(name).toFile)
-    schemas.remove(name)
+    k.foreach(i => schemas.remove(name -> i))
   }
 }

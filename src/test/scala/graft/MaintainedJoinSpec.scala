@@ -88,6 +88,43 @@ class MaintainedJoinSpec extends SparkSpec {
     assert(cat.table("torn__in0").select("k").collect().map(_.getInt(0)).toSet == Set(1, 2))
   }
 
+  test("a group commit whose second member fails to write changes nothing; its retry applies") {
+    val base = tempDir("graft-mj-fail").toString
+    val cat = new ViewCatalog(spark, base)
+    val mj = new MaintainedJoin(cat, "gf", Seq("k"))
+    mj.initialize(Seq((1, "a1"), (2, "a2")).toDF("k", "av"), Seq((1, "b1")).toDF("k", "bv"))
+    assert(mj.applyBatch(Changelog.fromRows(Seq((3, "a3")).toDF("k", "av")),
+      Changelog.fromRows(Seq((2, "b2")).toDF("k", "bv")), batchId = 0L))
+    val members = Seq("gf__in0", "gf__in1", "gf__out")
+    def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+    def state: Seq[(Option[Long], Set[Seq[Any]])] =
+      members.map(n => (cat.currentVersion(n), rows(cat.table(n))))
+    val seq = mj.currentSeq.get
+    val before = state
+    val asOf = members.map(n => rows(cat.tableAtTime(n, seq)))
+
+    // the first input's new version is written, then the second input's
+    // write raises: the group's timeline entry is never renamed in
+    val aDelta = Changelog.fromRows(Seq((4, "a4")).toDF("k", "av"))
+    val failing = Changelog.fromRows(Seq(4).toDF("k")
+      .select(col("k"), raise_error(lit("boom")).cast("string").as("bv")))
+    intercept[Exception](mj.applyBatch(aDelta, failing, batchId = 1L))
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(base, "gf__in0", "v=2")))
+    assert(state == before)
+    assert(members.map(n => rows(cat.tableAtTime(n, seq))) == asOf)
+    assert(mj.currentSeq.contains(seq) && cat.lastBatchId("gf") == 0L)
+
+    // the retry of the same batch applies and equals a recompute
+    val bDelta = Changelog.fromRows(Seq((4, "b4")).toDF("k", "bv"))
+    assert(mj.applyBatch(aDelta, bDelta, batchId = 1L))
+    assert(members.map(cat.currentVersion) == Seq.fill(3)(Some(2L)))
+    assert(cat.lastBatchId("gf") == 1L)
+    val a = Seq((1, "a1"), (2, "a2"), (3, "a3"), (4, "a4")).toDF("k", "av")
+    val b = Seq((1, "b1"), (2, "b2"), (4, "b4")).toDF("k", "bv")
+    assert(rows(mj.output.select("k", "av", "bv")) == rows(a.join(b, "k").select("k", "av", "bv")))
+    assert(rows(mj.output.select("k", "av", "bv")).size == 3)
+  }
+
   test("AS OF a group seq reads a mutually consistent pre-batch snapshot") {
     val cat = new ViewCatalog(spark, tempDir("graft-mj4").toString)
     val mj = new MaintainedJoin(cat, "asof", Seq("k"))

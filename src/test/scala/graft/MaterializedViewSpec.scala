@@ -182,6 +182,90 @@ class MaterializedViewSpec extends SparkSpec {
     assert(reopened.deltaAt("r", 1L).count() == 0L)
   }
 
+  test("a CREATE OR REPLACE whose query fails leaves the committed view as it was") {
+    val dir = tempDir("graft-mv-replace-fail").toString
+    val cat = new ViewCatalog(spark, dir)
+    val two = Seq((1L, "a"), (2L, "b"))
+    val three = two :+ ((3L, "c"))
+    cat.createMaterializedView("v", _ => two.toDF("k", "s"))
+    cat.commitState("v", three.toDF("k", "s"))
+    def rows(c: ViewCatalog): Set[(Long, String)] = c.table("v").as[(Long, String)].collect().toSet
+    intercept[Exception](cat.createMaterializedView("v", s =>
+      s.range(3).select(col("id").as("k"), raise_error(lit("boom")).cast("string").as("s"))))
+    assert(cat.currentVersion("v").contains(1L))
+    assert(rows(cat) == three.toSet)
+    assert(rows(new ViewCatalog(spark, dir)) == three.toSet)
+    // the old incarnation still takes commits, and a later replace works
+    val four = three :+ ((4L, "d"))
+    assert(cat.commitState("v", four.toDF("k", "s")) == 2L)
+    assert(rows(cat) == four.toSet && rows(new ViewCatalog(spark, dir)) == four.toSet)
+    cat.createMaterializedView("v", _ => Seq((1.5, 1L)).toDF("x", "y"))
+    assert(cat.currentVersion("v").contains(0L))
+    assert(new ViewCatalog(spark, dir).table("v").as[(Double, Long)].collect().toSeq ==
+      Seq((1.5, 1L)))
+  }
+
+  test("each incarnation has its own directory, deleted once the next one commits") {
+    val base = tempDir("graft-mv-incarnations")
+    val cat = new ViewCatalog(spark, base.toString)
+    def children(p: java.nio.file.Path): Set[String] = {
+      val s = Files.list(p)
+      try s.iterator.asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    val v = base.resolve("v")
+    cat.createMaterializedView("v", _ => Seq(1L, 2L).toDF("k"))
+    cat.commitState("v", Seq(1L, 2L, 3L).toDF("k"))
+    assert(children(base) == Set("_timeline", "v"))
+    assert(children(v) == Set("v=0", "delta=1"))
+    // a failed replace writes only its own attempt's directory
+    def data(p: java.nio.file.Path) = children(p).filterNot(_.startsWith("attempt-"))
+    intercept[Exception](cat.createMaterializedView("v", s =>
+      s.range(1).select(raise_error(lit("boom")).cast("string").as("s"))))
+    assert(data(v) == Set("v=0", "delta=1"))
+    cat.createMaterializedView("v", _ => Seq("a").toDF("s"))
+    assert(data(v) == Set("i=1") && children(base) == Set("_timeline", "v"))
+    cat.commitState("v", Seq("a", "b").toDF("s"))
+    assert(new ViewCatalog(spark, base.toString).table("v").as[String].collect().toSet ==
+      Set("a", "b"))
+    // what a crash between a replace's rename and its clean-up would leave
+    // of the old incarnation, and the failed attempt, go at the next vacuum
+    Files.createDirectories(v.resolve("v=0"))
+    cat.vacuum("v")
+    assert(children(v) == Set("i=1"))
+    cat.createMaterializedView("v", _ => Seq(7L).toDF("k"))
+    assert(children(v) == Set("i=2"))
+    // a drop ends the numbering: the re-created view is a first incarnation
+    cat.dropView("v")
+    cat.createMaterializedView("v", _ => Seq(8L).toDF("k"))
+    assert(children(v) == Set("v=0"))
+    assert(new ViewCatalog(spark, base.toString).table("v").as[Long].collect().toSeq == Seq(8L))
+  }
+
+  test("a failed SQL CREATE OR REPLACE MATERIALIZED VIEW keeps the old incarnation") {
+    val dir = tempDir("graft-mv-replace-sql").toString
+    val s = spark.newSession()
+    s.conf.set("spark.graft.viewDir", dir)
+    s.range(3).selectExpr("id AS k", "CAST(id AS STRING) AS s").createOrReplaceTempView("rf_base")
+    s.sql("CREATE MATERIALIZED VIEW rf AS SELECT k, s FROM rf_base")
+    s.sql("REFRESH MATERIALIZED VIEW rf")
+    val cat = graft.sql.GraftSqlCatalog.forSession(s)
+    val old = Set((0L, "0"), (1L, "1"), (2L, "2"))
+    def sqlRows: Set[(Long, String)] = s.sql("SELECT k, s FROM rf").as[(Long, String)].collect().toSet
+    intercept[Exception](s.sql("CREATE OR REPLACE MATERIALIZED VIEW rf AS " +
+      "SELECT k, CAST(raise_error('boom') AS STRING) AS s FROM rf_base"))
+    assert(cat.currentVersion("rf").contains(1L))
+    assert(cat.table("rf").as[(Long, String)].collect().toSet == old)
+    assert(sqlRows == old)
+    assert(new ViewCatalog(spark, dir).table("rf").as[(Long, String)].collect().toSet == old)
+    // REFRESH re-runs the old definition; a valid replace then works
+    s.sql("REFRESH MATERIALIZED VIEW rf")
+    assert(cat.currentVersion("rf").contains(2L) && sqlRows == old)
+    s.sql("CREATE OR REPLACE MATERIALIZED VIEW rf AS SELECT k * 10 AS k10 FROM rf_base")
+    assert(cat.currentVersion("rf").contains(0L))
+    assert(s.sql("SELECT k10 FROM rf").as[Long].collect().toSet == Set(0L, 10L, 20L))
+    s.sql("DROP MATERIALIZED VIEW rf")
+  }
+
   test("vacuum drops superseded versions, keeps current") {
     val cat = newCatalog()
     cat.createMaterializedView("n", s => Tables.load(s, Sf, "nation"))

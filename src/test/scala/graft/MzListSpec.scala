@@ -44,17 +44,17 @@ class MzListSpec extends SparkSpec {
 
   test("shim: LIST constructor, type casts, functions") {
     
-    val s1 = SltRunner.testShim("SELECT (LIST[1,2,3])::text", crdb = false)
+    val s1 = SltRunner.shim("SELECT (LIST[1,2,3])::text", crdb = false)
     assert(s1.contains("array(1,2,3)"), s1)
-    val s2 = SltRunner.testShim("SELECT '{1,2}'::int list", crdb = false)
+    val s2 = SltRunner.shim("SELECT '{1,2}'::int list", crdb = false)
     assert(s2.contains("mz_list_in('{1,2}', 'int', 1)"), s2)
-    val s3 = SltRunner.testShim("SELECT '{{1}}'::INT LIST LIST", crdb = false)
+    val s3 = SltRunner.shim("SELECT '{{1}}'::INT LIST LIST", crdb = false)
     assert(s3.contains("'int', 2)"), s3)
-    val s4 = SltRunner.testShim("SELECT NULL::INT LIST || NULL::INT LIST", crdb = false)
+    val s4 = SltRunner.shim("SELECT NULL::INT LIST || NULL::INT LIST", crdb = false)
     assert(s4.contains("mz_list_cast(NULL, 'int', 1)"), s4)
-    val s5 = SltRunner.testShim("SELECT list_length(LIST[1,2])", crdb = false)
+    val s5 = SltRunner.shim("SELECT list_length(LIST[1,2])", crdb = false)
     assert(s5.contains("cardinality(mz_list_tag(array(1,2)))"), s5)
-    val s6 = SltRunner.testShim("SELECT LIST[1,2,3][1.5]", crdb = false)
+    val s6 = SltRunner.shim("SELECT LIST[1,2,3][1.5]", crdb = false)
     assert(s6.contains("mz_list_subscript(array(1,2,3), 1.5)"), s6)
   }
 

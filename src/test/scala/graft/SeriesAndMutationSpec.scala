@@ -40,19 +40,19 @@ class SeriesAndMutationSpec extends SparkSpec {
   }
 
   test("SLT shim: ARRAY[...] literals become array(...) calls") {
-    assert(graft.slt.SltTestHooks.shimFor("SELECT ARRAY[1, 2, 3]", crdb = false)
+    assert(graft.slt.SltRunner.shim("SELECT ARRAY[1, 2, 3]", crdb = false)
       .contains("array(1, 2, 3)"))
-    val nested = graft.slt.SltTestHooks.shimFor(
+    val nested = graft.slt.SltRunner.shim(
       "SELECT ARRAY[ARRAY[1], ARRAY[2]] , x[1]", crdb = false)
     assert(nested.contains("array(array(1), array(2))")
       && nested.contains("pg_subscript(x, 1)"))
     // quoted content untouched
-    assert(graft.slt.SltTestHooks.shimFor("SELECT 'ARRAY[1]'", crdb = false)
+    assert(graft.slt.SltRunner.shim("SELECT 'ARRAY[1]'", crdb = false)
       .contains("'ARRAY[1]'"))
   }
 
   test("SLT shim: pg subscripts become pg_subscript; non-subscripts stay") {
-    def s(q: String) = graft.slt.SltTestHooks.shimFor(q, crdb = false)
+    def s(q: String) = graft.slt.SltRunner.shim(q, crdb = false)
     assert(s("SELECT ARRAY[1,2,3][2]").contains("pg_subscript(array(1,2,3), 2)"))
     assert(s("SELECT (SELECT ARRAY[1,2])[1]")
       .contains("pg_subscript((SELECT array(1,2)), 1)"))
@@ -74,7 +74,7 @@ class SeriesAndMutationSpec extends SparkSpec {
   }
 
   test("SLT shim: multiple SRFs in one select list zip in lockstep") {
-    def s(q: String) = graft.slt.SltTestHooks.shimFor(q, crdb = false)
+    def s(q: String) = graft.slt.SltRunner.shim(q, crdb = false)
     // the rewrite itself
     assert(s("SELECT generate_series(1, 2), generate_series(3, 4)")
       .contains("arrays_zip(graft_series_array(1, 2), graft_series_array(3, 4))"))
@@ -95,13 +95,13 @@ class SeriesAndMutationSpec extends SparkSpec {
   }
 
   test("SLT shim: comma-separated FROM items with JOINs get pg grouping") {
-    val q = graft.slt.SltTestHooks.shimFor(
+    val q = graft.slt.SltRunner.shim(
       "SELECT a3.f1 FROM t2 AS a1 JOIN t1 AS a2 USING (f1), t2 AS a3 JOIN t1 AS a4 USING (f1)",
       crdb = false)
     assert(q.contains("(t2 AS a1 JOIN t1 AS a2 USING (f1)),"))
     assert(q.contains("(t2 AS a3 JOIN t1 AS a4 USING (f1))"))
     // plain comma FROM untouched
-    assert(graft.slt.SltTestHooks.shimFor("SELECT 1 FROM a, b WHERE a.x = b.x", crdb = false)
+    assert(graft.slt.SltRunner.shim("SELECT 1 FROM a, b WHERE a.x = b.x", crdb = false)
       .contains("FROM a, b WHERE"))
   }
 
@@ -172,33 +172,33 @@ class SeriesAndMutationSpec extends SparkSpec {
     spark.sql("CREATE TABLE mut_t (k BIGINT, v STRING, n BIGINT) USING parquet")
     spark.sql("INSERT INTO mut_t VALUES (1, 'a', 10), (2, 'b', 20), (3, 'c', 30)")
     // UPDATE with WHERE: SET expressions read the OLD row
-    assert(graft.slt.SltTestHooks.mutate(spark, "UPDATE mut_t SET n = n + k WHERE k < 3"))
+    assert(graft.slt.SltRunner.applyMutation(spark, "UPDATE mut_t SET n = n + k WHERE k < 3"))
     assert(spark.sql("SELECT n FROM mut_t ORDER BY k").as[Long].collect().toSeq
       == Seq(11L, 22L, 30L))
     // DELETE with 3VL: NULL predicate keeps the row; n is now (11, 22, 30)
     spark.sql("INSERT INTO mut_t VALUES (4, NULL, NULL)")
-    assert(graft.slt.SltTestHooks.mutate(spark, "DELETE FROM mut_t WHERE n > 20"))
+    assert(graft.slt.SltRunner.applyMutation(spark, "DELETE FROM mut_t WHERE n > 20"))
     assert(spark.sql("SELECT k FROM mut_t ORDER BY k").as[Long].collect().toSeq
       == Seq(1L, 4L))
     // UPDATE ... FROM: SET reads the matching joined row (pg join-update)
     spark.sql("DROP TABLE IF EXISTS mut_o")
     spark.sql("CREATE TABLE mut_o (k BIGINT, add BIGINT) USING parquet")
     spark.sql("INSERT INTO mut_o VALUES (1, 100), (9, 900)")
-    assert(graft.slt.SltTestHooks.mutate(spark,
+    assert(graft.slt.SltRunner.applyMutation(spark,
       "UPDATE mut_t SET n = n + mut_o.add FROM mut_o WHERE mut_t.k = mut_o.k"))
     assert(spark.sql("SELECT k, n FROM mut_t ORDER BY k")
       .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
       .toSeq == Seq((1L, 111L), (4L, -1L))) // only k=1 matched; k=4 untouched
     // DELETE ... USING: rows with a matching USING row leave
-    assert(graft.slt.SltTestHooks.mutate(spark,
+    assert(graft.slt.SltRunner.applyMutation(spark,
       "DELETE FROM mut_t USING mut_o WHERE mut_t.k = mut_o.k"))
     assert(spark.sql("SELECT k FROM mut_t").as[Long].collect().toSeq == Seq(4L))
     // the reference rejects UPDATE ... RETURNING — the emulation must too
     val e = intercept[IllegalArgumentException](
-      graft.slt.SltTestHooks.mutate(spark, "UPDATE mut_t SET n = 1 RETURNING n"))
+      graft.slt.SltRunner.applyMutation(spark, "UPDATE mut_t SET n = 1 RETURNING n"))
     assert(e.getMessage.contains("UNSUPPORTED"))
     // non-mutations are left alone
-    assert(!graft.slt.SltTestHooks.mutate(spark, "SELECT 1"))
+    assert(!graft.slt.SltRunner.applyMutation(spark, "SELECT 1"))
     spark.sql("DROP TABLE mut_t")
     spark.sql("DROP TABLE mut_o")
   }

@@ -9,9 +9,9 @@ import graft.SparkSpec
 class SltShimSpec extends SparkSpec {
 
   test("E-string octal/unicode escapes decoding to a quote stay balanced") {
-    val oct = SltRunner.testShim("""SELECT E'a\047b'""", crdb = false)
+    val oct = SltRunner.shim("""SELECT E'a\047b'""", crdb = false)
     assert(oct.count(_ == '\'') % 2 == 0, s"unbalanced quotes in: $oct")
-    val uni = SltRunner.testShim("SELECT E'a\\u0027b'", crdb = false)
+    val uni = SltRunner.shim("SELECT E'a\\u0027b'", crdb = false)
     assert(uni.count(_ == '\'') % 2 == 0, s"unbalanced quotes in: $uni")
   }
 
@@ -21,12 +21,12 @@ class SltShimSpec extends SparkSpec {
       "CREATE TABLE shim_jsonb_t (k INT, j STRING COMMENT 'graft_jsonb') USING parquet")
     try {
       // the parse-time shim turns the VALUES row into SELECT ... UNION ALL
-      val shimmed = SltRunner.testShim(
+      val shimmed = SltRunner.shim(
         "INSERT INTO shim_jsonb_t VALUES (1, (SELECT '{\"b\":2,\"a\":1}')), (2, '{\"z\": 0}')",
         crdb = false)
       assert(shimmed.toUpperCase.contains("UNION ALL"), shimmed)
       // ...and the exec-time canonicalizer must still wrap the jsonb cell
-      val canon = SltRunner.testCanonInsert(spark, shimmed)
+      val canon = SltRunner.canonJsonbInsert(spark, shimmed)
       assert(canon.contains("jsonb_canon"), canon)
       spark.sql(canon)
       val got = spark.sql("SELECT j FROM shim_jsonb_t ORDER BY k")
@@ -36,31 +36,31 @@ class SltShimSpec extends SparkSpec {
   }
 
   test("reversed window frames rewrite to the empty frame") {
-    val s = SltRunner.testShim(
+    val s = SltRunner.shim(
       "SELECT first_value(x) OVER (ORDER BY x ROWS BETWEEN 0 PRECEDING AND 1 PRECEDING) FROM t",
       crdb = false)
     assert(s.toUpperCase.contains("ROWS BETWEEN CURRENT ROW AND 1 PRECEDING"), s)
     // a well-ordered frame is untouched
-    val ok = SltRunner.testShim(
+    val ok = SltRunner.shim(
       "SELECT first_value(x) OVER (ORDER BY x ROWS BETWEEN 1 PRECEDING AND 0 PRECEDING) FROM t",
       crdb = false)
     assert(ok.toUpperCase.contains("ROWS BETWEEN 1 PRECEDING AND 0 PRECEDING"), ok)
   }
 
   test("implicit pg output name rescues bare ORDER BY references") {
-    val got = SltRunner.testAliasImplicit(
+    val got = SltRunner.aliasImplicitFnNames(
       "WITH t (x, y) AS (VALUES ('a', 1)) SELECT lead(x) OVER (PARTITION BY y ORDER BY x), x FROM t ORDER BY x, lead")
     assert(got.exists(_.contains("AS lead")), got)
     // item at the END of the select list keeps a space before FROM
-    val tail = SltRunner.testAliasImplicit(
+    val tail = SltRunner.aliasImplicitFnNames(
       "WITH t (x, y) AS (VALUES ('a', 1)) SELECT x, last_value(x) OVER (PARTITION BY y ORDER BY x) FROM t ORDER BY last_value")
     assert(tail.exists(_.matches("(?s).*AS last_value\\s+FROM.*")), tail)
     // no unaliased matching item -> no rewrite
-    assert(SltRunner.testAliasImplicit("SELECT x FROM t ORDER BY x").isEmpty)
+    assert(SltRunner.aliasImplicitFnNames("SELECT x FROM t ORDER BY x").isEmpty)
   }
 
   test("window array_agg wraps per-expression, value-sorted") {
-    val s = SltRunner.testShim(
+    val s = SltRunner.shim(
       "SELECT array_agg(v) OVER (ORDER BY o1) FROM t8", crdb = true)
     assert(s.contains("OVER (ORDER BY o1"), s)
     assert(s.contains("array_sort"), s)
@@ -68,24 +68,24 @@ class SltShimSpec extends SparkSpec {
   }
 
   test("OPERATOR(op) syntax: lowest precedence, left-assoc; bad schema errors") {
-    val s = SltRunner.testShim("select 2 OPERATOR(*) 2 + 2;", crdb = false)
+    val s = SltRunner.shim("select 2 OPERATOR(*) 2 + 2;", crdb = false)
     assert(spark.sql(s.stripSuffix(";")).collect().head.get(0).toString.toDouble == 8.0, s)
-    val s2 = SltRunner.testShim("select 2 OPERATOR(*) 2 OPERATOR(+) 2;", crdb = false)
+    val s2 = SltRunner.shim("select 2 OPERATOR(*) 2 OPERATOR(+) 2;", crdb = false)
     assert(spark.sql(s2.stripSuffix(";")).collect().head.get(0).toString.toDouble == 6.0, s2)
-    val s3 = SltRunner.testShim("select 2 OPERATOR(mz_catalog.*) 2;", crdb = false)
+    val s3 = SltRunner.shim("select 2 OPERATOR(mz_catalog.*) 2;", crdb = false)
     assert(s3.contains("raise_error"), s3)
   }
 
   test("map literals, operators, constructors") {
     def q(sql: String): String =
-      spark.sql(SltRunner.testShim(sql, crdb = false).stripSuffix(";"))
+      spark.sql(SltRunner.shim(sql, crdb = false).stripSuffix(";"))
         .collect().head.get(0).toString
     assert(q("SELECT ('{  c  =>3, a=>     2, a => 1 }'::map[text=>int])::text") == "{a=>1,c=>3}")
     assert(q("SELECT '{a=>1, b=>2}'::map[text=>int] ? 'b'") == "true")
     assert(q("SELECT '{a=>1, b=>2}'::map[text=>int] ?& array('a','b')") == "true")
     assert(q("SELECT '{a=>1, b=>2}'::map[text=>int] ?| array('c')") == "false")
     assert(q("SELECT (MAP['b' => 2, 'a' => 1])::text") == "{a=>1,b=>2}")
-    val bad = SltRunner.testShim("SELECT '{1=>true}'::map[int=>bool]", crdb = false)
+    val bad = SltRunner.shim("SELECT '{1=>true}'::map[int=>bool]", crdb = false)
     assert(bad.contains("raise_error"), bad)
   }
 
@@ -93,7 +93,7 @@ class SltShimSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS shim_ts_t")
     spark.sql("CREATE TABLE shim_ts_t (ts timestamp) USING parquet")
     try {
-      val ins = SltRunner.testCanonInsert(spark,
+      val ins = SltRunner.canonJsonbInsert(spark,
         "INSERT INTO shim_ts_t VALUES ('Mon Feb 10 17:32:01.5 1997 PST'), ('19970210 173201 -0800')")
       assert(ins.contains("pg_ts_in"), ins)
       spark.sql(ins)
@@ -105,10 +105,10 @@ class SltShimSpec extends SparkSpec {
   }
 
   test("timestamptz literal casts: +00 display, timestamp value in comparisons") {
-    val s = SltRunner.testShim("SELECT '2007-02-01 15:04:05+06'::timestamptz;", crdb = false)
+    val s = SltRunner.shim("SELECT '2007-02-01 15:04:05+06'::timestamptz;", crdb = false)
     assert(spark.sql(s.stripSuffix(";")).collect().head.getString(0)
       == "2007-02-01 09:04:05+00", s)
-    val c = SltRunner.testShim(
+    val c = SltRunner.shim(
       "SELECT '2001-01-01 05:00:00'::timestamp = '2001-01-01 01:00:00-4'::timestamptz", crdb = false)
     assert(spark.sql(c).collect().head.getBoolean(0))
   }
@@ -123,7 +123,7 @@ class SltShimSpec extends SparkSpec {
       spark.sql("INSERT INTO shim_mzts_t VALUES (5)")
       // RELATED operand: an mz_now()-carrying comparison coerces the
       // date-shaped string as mz_timestamp (accepted, evaluates)
-      val ok = spark.sql(SltRunner.testShim(
+      val ok = spark.sql(SltRunner.shim(
         "SELECT mz_now() < '3000-01-01' FROM shim_mzts_t", crdb = false).stripSuffix(";"))
       assert(ok.collect().head.getBoolean(0))
       // UNRELATED operand: mz_now() elsewhere in the query must not flip
@@ -131,7 +131,7 @@ class SltShimSpec extends SparkSpec {
       // the reference still raises pg's invalid-input rejection for
       // bigint-vs-date-string (lineage tracking, ListTextCastRule)
       val bad = intercept[Exception] {
-        spark.sql(SltRunner.testShim(
+        spark.sql(SltRunner.shim(
           "SELECT mz_now() < '3000-01-01', b < '2023-01-01' FROM shim_mzts_t",
           crdb = false).stripSuffix(";")).collect()
       }
@@ -152,7 +152,7 @@ class SltShimSpec extends SparkSpec {
     spark.sql(
       "CREATE TABLE shim_jsonb_p (k INT, j STRING COMMENT 'graft_jsonb') USING parquet")
     try {
-      val canon = SltRunner.testCanonInsert(spark,
+      val canon = SltRunner.canonJsonbInsert(spark,
         "INSERT INTO shim_jsonb_p VALUES (1, '{\"b\":2, \"a\":1}')")
       assert(canon.contains("jsonb_canon"), canon)
       spark.sql(canon)

@@ -8,7 +8,7 @@ import scala.util.matching.Regex
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sql.PgCatalogRelations
+import graft.sql.{PgCatalogRelations, PgCatalogViews}
 
 /** Mini sqllogictest runner (reference `src/sqllogictest/src/runner.rs`,
   * corpus `test/sqllogictest/` .slt files): parses SLT records and executes them
@@ -1313,7 +1313,7 @@ object SltRunner {
 
   /** Session custom types as pg_type rows: named lists carry typelem
     * (corpus pg_catalog_attribute.slt:184-199), records are composites. */
-  private def customTypeRows: Seq[PgCatalogRelations.CustomTypeRow] =
+  private def customTypeRows: Seq[PgCatalogViews.CustomTypeRow] =
     customTypes.toSeq.map { case (n, t) =>
       val elem = t match {
         case SltSession.ListType(e) =>
@@ -1323,7 +1323,7 @@ object SltRunner {
         case _ => 0
       }
       val tt = t match { case _: SltSession.RecordType => "c"; case _ => "b" }
-      PgCatalogRelations.CustomTypeRow(n, elem, tt)
+      PgCatalogViews.CustomTypeRow(n, elem, tt)
     }
 
   private val UintColDef =
@@ -3299,7 +3299,7 @@ object SltRunner {
     sb.toString
   }
 
-  private def shim(sql0rawIn0: String, crdb: Boolean): String = {
+  private[graft] def shim(sql0rawIn0: String, crdb: Boolean): String = {
     // reference cast-matrix fidelity (typeconv.rs VALID_CASTS): a chained /
     // literal cast whose pair the reference rejects at plan time becomes a
     // raise_error so `query error` records fail here too, instead of
@@ -4628,7 +4628,7 @@ object SltRunner {
     * text. Wrap VALUES cells targeting tagged-jsonb columns (COMMENT
     * marker from the CREATE TABLE shim) in jsonb_canon so later reads
     * render pg-canonical. */
-  private def canonJsonbInsert(spark: SparkSession, sql: String): String = {
+  private[slt] def canonJsonbInsert(spark: SparkSession, sql: String): String = {
     val InsertRe =
       """(?is)^\s*INSERT\s+INTO\s+["`]?(\w+)["`]?\s*(\([^)]*\))?\s*VALUES\s*(.*?);?\s*$""".r
     // the shim's scalar-subquery rewrite turns VALUES rows into
@@ -5243,7 +5243,6 @@ object SltRunner {
       sql.substring(0, m.start) + rewrittenSelect + sql.substring(bodyEnd))
   }
 
-  private[slt] def testTopIdx(s: String, word: String): Int = topLevelIndexOf(s, word)
   private def topLevelIndexOf(s: String, word: String): Int = {
     var depth = 0
     var inQ = false
@@ -5405,7 +5404,7 @@ object SltRunner {
     * is not one. Throws IllegalArgumentException("UNSUPPORTED ...") for
     * shapes the emulation does not cover — the caller's dialect-skip path
     * handles those exactly like before. */
-  private def applyMutation(spark: SparkSession, sql: String): Boolean =
+  private[graft] def applyMutation(spark: SparkSession, sql: String): Boolean =
     applyMutationResult(spark, sql).isDefined
 
   /** Carve `[FROM/USING ...] [WHERE ...] [RETURNING ...]` off a mutation
@@ -7644,7 +7643,7 @@ object SltRunner {
       // introspection queries name objects INSIDE literals
       // (WHERE name = 'coltypes') — for those the literal text counts
       val bare =
-        if (PgCatalogRelations.referenced(sql)) sql else stripLits(sql)
+        if (PgCatalogViews.referenced(sql)) sql else stripLits(sql)
       def refs(w: String) = s"(?i)\\b$w\\b".r.findFirstIn(bare).isDefined
       poisonedTables.exists(refs) ||
         (depth < 5 && viewDefs.exists { case (v, d) =>
@@ -8262,8 +8261,8 @@ object SltRunner {
               case s if """(?is)^\s*(?:SELECT|VALUES)\b[\s\S]*""".r.pattern.matcher(s).matches =>
                 if (txnActive) txnQueryRan = true
                 refreshMvsFor(sh)
-                if (PgCatalogRelations.referenced(sh))
-                  PgCatalogRelations.register(spark, customTypeRows, indexOn.toSeq,
+                if (PgCatalogViews.referenced(sh))
+                  PgCatalogViews.register(spark, customTypeRows, indexOn.toSeq,
                     sltMvNames.keySet.toSet)
                 renderRows(spark.sql(sh.stripSuffix(";")).collect())
               case s => // single-statement DDL (parser-guaranteed)
@@ -8340,7 +8339,7 @@ object SltRunner {
         // introspection relations list — ours would answer stale, so the
         // introspection views are poisoned for the rest of the file
         if ("""(?i)^\s*(?:CREATE|DROP)\s+SCHEMA\b""".r.findFirstIn(usql).isDefined)
-          poisonedTables ++= PgCatalogRelations.relationNames
+          poisonedTables ++= PgCatalogViews.relationNames
         // the object a skipped CREATE names exists in the reference but not
         // here — statements/queries touching it must skip, not error
         """(?is)^\s*CREATE\s+(?:CLUSTER|SOURCE|SINK|CONNECTION|SECRET|ROLE)\s+(?:IF\s+NOT\s+EXISTS\s+)?["`]?(\w+)""".r
@@ -8427,7 +8426,7 @@ object SltRunner {
         // user-schema DDL marker (SchemaEmulation.classify). The reference's
         // schema catalog changed (or was asked to) — the introspection
         // relations don't model user schemas, so they poison either way.
-        poisonedTables ++= PgCatalogRelations.relationNames
+        poisonedTables ++= PgCatalogViews.relationNames
         SchemaEmulation.parseMarker(sql) match {
           case Some((true, _, drops)) =>
             drops.foreach { d =>
@@ -8616,7 +8615,7 @@ object SltRunner {
             // catalog — introspection views AND identity functions must
             // skip from here on
             if (name == "database" || name == "search_path") {
-              poisonedTables ++= PgCatalogRelations.relationNames
+              poisonedTables ++= PgCatalogViews.relationNames
               poisonedTables += "current_database"
               poisonedTables += "current_catalog"
               poisonedTables += "current_schema"
@@ -8649,7 +8648,7 @@ object SltRunner {
               // db-partitioned here) and the identity constants
               if (name == "database" &&
                   !Set("test", "materialize", "defaultdb").contains(v.toLowerCase)) {
-                poisonedTables ++= PgCatalogRelations.relationNames
+                poisonedTables ++= PgCatalogViews.relationNames
                 poisonedTables += "current_database"
                 poisonedTables += "current_catalog"
               }
@@ -8662,7 +8661,7 @@ object SltRunner {
             skipped += 1; tally("SET value not honored by the runner", sql)
             varTainted += name
             if (name == "database" || name == "search_path") {
-              poisonedTables ++= PgCatalogRelations.relationNames
+              poisonedTables ++= PgCatalogViews.relationNames
               poisonedTables += "current_database"
               poisonedTables += "current_catalog"
               poisonedTables += "current_schema"
@@ -9145,7 +9144,7 @@ object SltRunner {
           // planning, disambiguate_columns.slt:12-19)
           if ("""(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?(?:TEMP(?:ORARY)?\s+)?(?:MATERIALIZED\s+)?VIEW\b""".r
                 .findFirstIn(sql).isDefined &&
-              PgCatalogRelations.referenced(sql) && {
+              PgCatalogViews.referenced(sql) && {
                 val bare = stripLits(sql)
                 """(?is)(?:\bSELECT\s+(?:DISTINCT\s+)?|,\s*|\.\s*)\*""".r
                   .findFirstIn(bare).isDefined ||
@@ -9166,8 +9165,8 @@ object SltRunner {
           // operation then resolves instead of its own relation.
           if ("""(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?(?:TEMP(?:ORARY)?\s+)?(?:MATERIALIZED\s+)?VIEW\b""".r
                 .findFirstIn(sql).isDefined &&
-              PgCatalogRelations.referenced(sql))
-            PgCatalogRelations.register(spark, customTypeRows, indexOn.toSeq,
+              PgCatalogViews.referenced(sql))
+            PgCatalogViews.register(spark, customTypeRows, indexOn.toSeq,
               sltMvNames.keySet.toSet)
           // pg parses the ENTIRE compound before executing ANY piece — a
           // parse error in a later piece runs nothing
@@ -9441,8 +9440,8 @@ object SltRunner {
         try {
           // introspection relations reflect the catalog AT QUERY TIME —
           // rebuild (metadata-only, microseconds) when referenced
-          if (PgCatalogRelations.referenced(q.sql))
-            PgCatalogRelations.register(spark, customTypeRows, indexOn.toSeq,
+          if (PgCatalogViews.referenced(q.sql))
+            PgCatalogViews.register(spark, customTypeRows, indexOn.toSeq,
               sltMvNames.keySet.toSet)
           refreshMvsFor(q.sql)
           if (txnActive) { txnQueryRan = true; mutationTarget(q.sql).foreach(txnSnapshot) }
@@ -9796,18 +9795,6 @@ object SltRunner {
     } }
     Report(name, passed, failed, skipped, failures.toList)
   }
-
-  private[slt] def testShim(sql: String, crdb: Boolean): String = shim(sql, crdb)
-  def testAliasImplicit(sql: String): Option[String] = aliasImplicitFnNames(sql)
-  private[slt] def testCanonInsert(spark: SparkSession, sql: String): String =
-    canonJsonbInsert(spark, sql)
-  private[slt] def testRegisterRangeCol(c: String, k: String): Unit = {
-    rangeColumns.put(c, k); ()
-  }
-  private[slt] def testApplyMutation2(spark: SparkSession, sql: String): Option[Option[DataFrame]] =
-    applyMutationResult(spark, sql)
-  private[slt] def testApplyMutation(spark: SparkSession, sql: String): Boolean =
-    applyMutation(spark, sql)
 
   /** Run several files in one session; tables/views are dropped between
     * files (fresh logical namespace per file). */
